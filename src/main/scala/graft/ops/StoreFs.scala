@@ -26,9 +26,10 @@ import org.apache.spark.sql.SparkSession
   * are manifest-committed too ([[TextOps.commitDay0]]), so the manifest
   * names the live generation for the store's whole life, not only after
   * its first fold. What still assumes rename-as-commit on S3A:
-  * the COMPACTION write-asides ([[TextOps.compactStore]] /
-  * [[Similarity.ivfCompactCells]] move staged files into the live
-  * directory one rename at a time) and the swap LOCK's
+  * the COMPACTION write-asides ([[TextOps.compactStore]] stages all of a
+  * table's rewritten buckets in one write, then commits them one rename
+  * per bucket; [[Similarity.ivfCompactCells]] moves each cell's staged
+  * files in one rename at a time) and the swap LOCK's
   * `create(overwrite=false)`, which is check-then-create there (no lock —
   * single-writer must come from the scheduler, the documented
   * [[TextOps.compactStore]] contract). Closing those last two needs a

@@ -336,21 +336,37 @@ object TextOps {
     * Spark's reader only reports write-time sortBy order for SINGLE-file
     * buckets (`FileSourceScanExec.outputOrdering` under SPARK-28595's
     * legacy conf), so by day 3 the probe silently regains a per-bucket
-    * SortExec. When a bucket's file count exceeds `maxFilesPerBucket`,
-    * rewrite THAT bucket — and only that bucket — back to one sorted file:
-    * read its files, one-task sort (coalesce(1) + sortWithinPartitions, no
-    * shuffle), write, and move the result in under a name whose trailing
-    * `_<bucketId>` Spark's `BucketingUtils` parses exactly like a
-    * bucketed-writer file. Under-threshold buckets are untouched — at
-    * 100 TB compaction cost is proportional to the oversized buckets, not
-    * the store (the Iceberg/Delta OPTIMIZE shape, done at the file layer
-    * because the container has no lakehouse format). Bucket rewrites are
-    * independent single-task jobs, submitted concurrently (.par) — on a
-    * cluster they schedule like any other task batch.
+    * SortExec. Every bucket whose file count exceeds `maxFilesPerBucket` is
+    * rewritten back to one sorted file; under-threshold buckets are
+    * untouched, so cost is proportional to the oversized buckets, not the
+    * store (the Iceberg/Delta OPTIMIZE shape, done at the file layer
+    * because the container has no lakehouse format).
+    *
+    * All oversized buckets are rewritten by ONE Spark write: read their
+    * listed files, `repartition(numBuckets, bucketColumns)`, optionally
+    * retire duplicates, sort within partitions by the table's sortBy
+    * columns, write to a dot-prefixed staging directory under the store.
+    * Shuffle partition i IS bucket i — the shuffle and Spark's bucketed
+    * writer share `HashPartitioning.partitionIdExpression`, and AQE never
+    * coalesces a repartition with an explicit count (the same property
+    * [[appendFps]] relies on). Each oversized bucket's single staged
+    * `part-<i>-<uuid>-c000…` file then moves in as
+    * `part-<i>-<uuid>_<bucket>.c000…`, whose trailing `_<bucket>` Spark's
+    * `BucketingUtils` parses exactly like a bucketed-writer file, and that
+    * bucket's listed files are deleted. Staged files of buckets that were
+    * not rewritten must be empty (partition 0 always gets a file) and are
+    * dropped with the staging directory — refused or failed compactions
+    * included, so no `.graft_compact_*` residue outlives the call.
+    *
+    * COMMIT WINDOW: one rename plus the listed files' deletes per bucket.
+    * A crash inside it leaves that bucket holding both the merged file and
+    * (some of) its inputs — the same rows twice, never a lost row; the
+    * next compaction merges them again (with `dedupKeys`, retiring the
+    * copies).
     *
     * CONCURRENCY CONTRACT (r12, pinned in Round12Spec): an [[appendNovel]]
     * landing between the file LISTING and the moves is never lost — the
-    * rewrite merges and deletes only the files captured in the listing, so
+    * rewrite reads and deletes only the files captured in the listing, so
     * the append's fresh per-bucket files survive untouched; the window's
     * only artifact is that those buckets may be multi-file again (probe
     * regains its per-bucket Sort) until the next compaction. What the file
@@ -364,73 +380,102 @@ object TextOps {
   def compactStore(s: SparkSession, tbl: String, maxFilesPerBucket: Int = 1,
                    afterListing: () => Unit = () => (),
                    dedupKeys: Seq[String] = Nil): Int = {
-    import scala.collection.parallel.CollectionConverters._
     val meta = storeMeta(s)(org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-    // The rewrite re-sorts each merged bucket by the table's OWN write-time
-    // sortBy columns (r13: the hardcoded "fp" threw AnalysisException on
-    // every store family except the fingerprint one — the sig store's
-    // (band, sig)/(doc_id) tables and the embed store's tables were
-    // claimed compactable but weren't).
-    val sortCols = meta.bucketSpec.map(_.sortColumnNames).getOrElse(Nil)
+    val spec = meta.bucketSpec.getOrElse(
+      sys.error(s"compactStore($tbl): not a bucketed table"))
+    require(spec.bucketColumnNames.forall(dedupKeys.contains) || dedupKeys.isEmpty,
+      s"compactStore($tbl): dedupKeys (${dedupKeys.mkString(",")}) must contain " +
+        s"the bucket columns (${spec.bucketColumnNames.mkString(",")})")
     val loc = new org.apache.hadoop.fs.Path(meta.location)
     val fs = StoreFs.fs(s, loc)
     val bucketId = """.*_(\d+)(?:\..*)?$""".r
     val byBucket = StoreFs.listFiles(fs, loc)
       .filter(_.getPath.getName.startsWith("part-"))
-      .groupBy(_.getPath.getName match { case bucketId(b) => b })
+      .groupBy(_.getPath.getName match {
+        case bucketId(b) => b
+        case n => sys.error(s"compactStore($tbl): data file $n in $loc has no " +
+          "_<bucket> suffix — not written by a bucketed writer")
+      })
     val oversized = byBucket.filter(_._2.size > maxFilesPerBucket)
     afterListing()
-    oversized.par.foreach { case (bid, files) =>
-      // Write-aside lands in a DOT-prefixed staging dir under the store
-      // itself — same filesystem as the destination, so the commit move is
-      // a real rename (the java-tmp staging this replaces broke the moment
-      // the store wasn't on the local FS). Spark's file listing filters
-      // `.`/`_`-prefixed names at every level, so readers never see it.
-      val tmp = new org.apache.hadoop.fs.Path(loc,
-        s".graft_compact_${bid}_${System.nanoTime()}")
-      val raw = s.read.parquet(files.map(_.getPath.toString): _*)
+    if (oversized.isEmpty) return 0
+    // Staged on the store's own filesystem, so the commit is a real rename;
+    // Spark's file listing skips `.`-prefixed names, so readers never see it.
+    val tmp = new org.apache.hadoop.fs.Path(loc, s".graft_compact_${System.nanoTime()}")
+    try {
+      // The catalog schema spares the schema-inference job a bare read runs.
+      val raw = s.read.schema(meta.schema)
+        .parquet(oversized.values.flatten.map(_.getPath.toString).toSeq: _*)
+        .repartition(spec.numBuckets, spec.bucketColumnNames.map(col): _*)
       // Heal-residue retirement (VERDICT r14 next #4): a re-driven append —
       // the band-screen heal's tolerated outcome — leaves duplicate rows in
-      // the key-unique inert tables (`_toks`, `_evecs`) forever. Duplicates
-      // are bucket-co-located by construction (the key IS the bucket
-      // column), so per-bucket compaction is exactly where they can retire:
-      // pass the table's unique key and each rewritten bucket keeps one row
-      // per key. Leave Nil for multi-row-per-key tables (`_bands`).
+      // the key-unique inert tables (`_toks`, `_evecs`) forever. Pass the
+      // table's unique key and each rewritten bucket keeps one row per key;
+      // leave Nil for multi-row-per-key tables (`_bands`). The key contains
+      // the bucket columns, so after the repartition every copy of a key
+      // shares a partition and neither step below shuffles again.
       // Retirement is full-row distinct + an invariant check, NOT
       // dropDuplicates(keys) (ADVICE r16 low): the heal contract only ever
       // re-drives a batch BIT-IDENTICALLY, so rows sharing a key must be
       // exact copies — if they ever differ (an upstream bug, not a heal),
       // silently keeping an arbitrary survivor would destroy data on a
-      // nondeterministic coin flip; fail the compaction loudly instead.
-      val deduped = if (dedupKeys.isEmpty) raw else {
-        val rows = raw.dropDuplicates()
-        val Seq(nRows, nKeys) = rows
-          .agg(count(lit(1)), count_distinct(struct(dedupKeys.map(col): _*)))
-          .head().toSeq.map(_.asInstanceOf[Long])
-        if (nRows != nKeys) sys.error(
-          s"compactStore($tbl) bucket $bid: ${nRows - nKeys} row(s) share a " +
-          s"dedup key (${dedupKeys.mkString(",")}) with CONFLICTING payloads " +
-          "— heal residue is bit-identical by contract, so this is an " +
-          "upstream corruption; refusing to discard an arbitrary survivor")
-        rows
+      // nondeterministic coin flip; fail the write loudly instead. The
+      // check is a FILTER over a per-key window count, so it runs inside
+      // the write (a projected check column would be pruned away).
+      val merged = if (dedupKeys.isEmpty) raw else {
+        val keys = dedupKeys.map(col)
+        raw.dropDuplicates()
+          .withColumn("__graft_key_rows",
+            count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy(keys: _*)))
+          .filter(col("__graft_key_rows") === 1 || raise_error(concat(
+            lit(s"compactStore($tbl): rows share a dedup key " +
+              s"(${dedupKeys.mkString(",")}) = "),
+            to_json(struct(keys: _*)),
+            lit(" with CONFLICTING payloads — heal residue is bit-identical " +
+              "by contract, so this is an upstream corruption; refusing to " +
+              "discard an arbitrary survivor"))))
+          .drop("__graft_key_rows")
       }
-      val merged0 = deduped.coalesce(1)
-      val merged = if (sortCols.isEmpty) merged0
-        else merged0.sortWithinPartitions(sortCols.head, sortCols.tail: _*)
-      merged.write.parquet(tmp.toString)
-      val written = StoreFs.listFiles(fs, tmp)
-        .map(_.getPath).find(_.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"compaction of bucket $bid wrote no file"))
-      // part-00000-<uuid>-c000.snappy.parquet -> part-00000-<uuid>_<bid>.c000...
-      val dst = new org.apache.hadoop.fs.Path(loc,
-        written.getName.replaceFirst("-c000", s"_$bid.c000"))
-      if (!fs.rename(written, dst))
-        sys.error(s"compaction of bucket $bid: rename $written -> $dst failed")
-      files.foreach(st => fs.delete(st.getPath, false))
+      val sorted = if (spec.sortColumnNames.isEmpty) merged
+        else merged.sortWithinPartitions(spec.sortColumnNames.map(col): _*)
+      sorted.write.option("maxRecordsPerFile", 0L).parquet(tmp.toString)
+      val staged = StoreFs.listFiles(fs, tmp).map(_.getPath)
+        .filter(_.getName.startsWith("part-"))
+        .groupBy(_.getName.stripPrefix("part-").takeWhile(_.isDigit).toInt)
+      // A row lands outside the rewritten buckets only if its source file
+      // held a row of another bucket; dropping that staged file would lose
+      // it, so refuse before anything moves.
+      staged.foreach { case (i, ps) =>
+        if (!oversized.keySet.exists(_.toInt == i) && ps.exists(parquetRows(s, _) > 0))
+          sys.error(s"compactStore($tbl): rewritten files hold rows of bucket $i, " +
+            "which is not being rewritten — the store's files do not match their " +
+            "bucket suffixes; refusing to drop those rows")
+      }
+      val moves = oversized.toSeq.map { case (bid, files) =>
+        staged.getOrElse(bid.toInt, Nil) match {
+          // part-00003-<uuid>-c000.snappy.parquet -> part-00003-<uuid>_00003.c000...
+          case Seq(p) => (p, new org.apache.hadoop.fs.Path(loc,
+            p.getName.replaceFirst("-c000", s"_$bid.c000")), files)
+          case ps => sys.error(s"compactStore($tbl) bucket $bid: staged ${ps.size} files, expected 1")
+        }
+      }
+      moves.foreach { case (src, dst, files) =>
+        if (!fs.rename(src, dst))
+          sys.error(s"compactStore($tbl): rename $src -> $dst failed")
+        files.foreach(st => fs.delete(st.getPath, false))
+      }
+      oversized.size
+    } finally {
       StoreFs.deleteQuietly(fs, tmp)
+      s.catalog.refreshTable(tbl)
     }
-    if (oversized.nonEmpty) s.catalog.refreshTable(tbl)
-    oversized.size
+  }
+
+  /** Row count of one parquet file, from its footer. */
+  private def parquetRows(s: SparkSession, p: org.apache.hadoop.fs.Path): Long = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, s.sparkContext.hadoopConfiguration))
+    try r.getRecordCount finally r.close()
   }
 
   /** Test seam for the bucketed-rewrite crash windows — production code

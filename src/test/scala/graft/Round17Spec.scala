@@ -325,8 +325,16 @@ class Round17Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       }
       def messages(t: Throwable): Seq[String] =
         if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
-      assert(messages(e).exists(_.contains("CONFLICTING")),
-        s"the failure must name the conflict: ${messages(e)}")
+      assert(messages(e).exists(m => m.contains("CONFLICTING") &&
+          m.contains(s"${base}_toks") && m.contains("doc_id")),
+        s"the failure must name the conflict, the table and the key: ${messages(e)}")
+      // The refusal fails the staged write itself; its staging goes with it.
+      import scala.jdk.CollectionConverters._
+      val staging = java.nio.file.Files.walk(dir)
+      try assert(!staging.iterator().asScala.exists(
+          _.getFileName.toString.startsWith(".graft_compact_")),
+        "a refused compaction must not leave its staging directory behind")
+      finally staging.close()
       // Nothing was silently discarded: both payload variants still present.
       val n = spark.table(s"${base}_toks").filter(col("doc_id") === 1L).count()
       assert(n == 2L, "the conflicting rows must survive the refused compaction")
