@@ -109,8 +109,8 @@ object Bench {
     })
 
   def main(args: Array[String]): Unit = {
-    // Heap sizing for sweeps: see the GRAFT_HEAP rule in [[ProbeQ]]'s
-    // scaladoc — full-session sf100 sweeps need 96 g (32 g OOMs the
+    // Heap sizing for sweeps: see the GRAFT_HEAP rule in tools/runjava.sh
+    // — full-session sf100 sweeps need 96 g (32 g OOMs the
     // 187-query session), isolated scan-heavy probes want 32 g (a 96 g
     // pinned heap starves the page cache), and numbers are only comparable
     // within one heap size.
@@ -221,23 +221,8 @@ object Bench {
     // takes ~2.5 h at sf100 (measured r13) and cannot survive a round close
     // (the harness SIGTERMs stray JVMs), so targeted sub-sweeps — e.g. the
     // GC-fix watch entries plus the heavy dedup/join tier — need a way to
-    // run ONLY those queries in a 20-30 min window. Unknown names in the
-    // allowlist are reported, not silently dropped: a typo'd watch entry
-    // must not read as "measured fine" by omission.
-    val allowlist = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    allowlist.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty)
-        System.err.println(
-          s"[bench] WARN: SPARK_GRAFT_QUERIES names not in SparkEntry.queries: ${unknown.toSeq.sorted.mkString(",")}")
-      System.err.println(
-        s"[bench] query subset: ${(names -- unknown).size} of ${SparkEntry.queries.size} queries")
-    }
-    val selected = allowlist match {
-      case Some(names) => SparkEntry.queries.filter { case (n, _) => names(n) }
-      case None => SparkEntry.queries
-    }
+    // run ONLY those queries in a 20-30 min window.
+    val selected = SparkEntry.selectFromEnv("bench")
     val firstPass = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       (name, fn, timedRun(name, fn))
     }

@@ -34,6 +34,30 @@ object SparkEntry {
       ops.Extended.queries ++
       ops.Tpch.queries
 
+  /** The registered queries an allowlist selects, and the allowlisted
+    * names that are not registered. `allowlist` is a comma-separated list
+    * of query names; unset or blank selects every query. */
+  def select(allowlist: Option[String])
+      : (Map[String, (SparkSession, String) => DataFrame], Set[String]) = {
+    val names = allowlist.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty).toSet
+    if (names.isEmpty) (queries, Set.empty)
+    else (queries.filter { case (n, _) => names(n) }, names -- queries.keySet)
+  }
+
+  /** [[select]] over the `SPARK_GRAFT_QUERIES` env var, the query-subset
+    * knob shared by Verify and Bench. Unknown names are reported on
+    * stderr under `[tag]`, not silently dropped: a misspelled name must
+    * not read as "ran fine" by omission. */
+  def selectFromEnv(tag: String): Map[String, (SparkSession, String) => DataFrame] = {
+    val (selected, unknown) = select(sys.env.get("SPARK_GRAFT_QUERIES"))
+    if (unknown.nonEmpty)
+      System.err.println(s"[$tag] WARN: SPARK_GRAFT_QUERIES names not in " +
+        s"SparkEntry.queries: ${unknown.toSeq.sorted.mkString(",")}")
+    if (sys.env.contains("SPARK_GRAFT_QUERIES"))
+      System.err.println(s"[$tag] query subset: ${selected.size} of ${queries.size} queries")
+    selected
+  }
+
   /** For each key in queries, equivalent SQL runnable by DuckDB on the same
     * parquet tables. Omitted for non-SQL-expressible / non-dialect-stable ops
     * (minhash/simhash/langid/approx/ANN) → driver records rows-only check. */

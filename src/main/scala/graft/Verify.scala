@@ -9,7 +9,7 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      // Same decade-scaled width as Bench/ProbeQ so the three harnesses'
+      // Same decade-scaled width as Bench so the two harnesses'
       // execution configs can't drift (the driver runs Verify at sf0.01,
       // where this resolves to `cpus` — cosmetic today, invariant tomorrow).
       .config("spark.sql.shuffle.partitions", Bench.shufflePartitions(sfDir, cpus))
@@ -19,13 +19,9 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // Dev-only subset filter (comma-separated names); the driver never sets
-    // it, so its Verify runs always dump the full surface.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.filter { case (n, _) => only(n) }
+    // Dev-only subset filter; the driver never sets SPARK_GRAFT_QUERIES,
+    // so its Verify runs always dump the full surface.
+    val selected = SparkEntry.selectFromEnv("verify")
     // Engine/oracle parameter-coupling guard (ADVICE r09): the DuckDB
     // mirrors for the embed-neardup family hardcode autoBits' 8-bit floor
     // (and a 5-iteration min-label chain that assumes <=5-hop clusters,
@@ -40,7 +36,7 @@ object Verify {
       require(ops.Similarity.autoBits(n) == 8,
         s"embed-family oracles assume autoBits==8 but this fixture has $n vectors " +
           s"(autoBits=${ops.Similarity.autoBits(n)}); their SQL mirrors are stale at this " +
-          "scale — exclude them via SPARK_GRAFT_ONLY or regenerate the oracles")
+          "scale — exclude them via SPARK_GRAFT_QUERIES or regenerate the oracles")
     }
     selected.foreach { case (name, fn) =>
       try {

@@ -1,10 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.graftcompat.ColumnBridge
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
@@ -112,10 +110,6 @@ object Functions {
     ColumnBridge.column(
       CosineSimilarity(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  def dotProduct(a: Column, b: Column): Column =
-    ColumnBridge.column(
-      DotProduct(ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
   def squaredDistance(a: Column, b: Column): Column =
     ColumnBridge.column(
       SquaredDistance(ColumnBridge.expression(a), ColumnBridge.expression(b)))
@@ -136,16 +130,4 @@ object Functions {
   def register(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-}
-
-/** `SparkSessionExtensions` hook: set
-  * `spark.sql.extensions=graft.functions.GraftExtensions` and `cosine_sim`
-  * is available in SQL on every session of the cluster. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-  }
 }

@@ -24,7 +24,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * Same doubles, ~250 statements instead of ~10k, and the PQ stage compiles
   * as one fused span again.
   *
-  * Null handling differs from [[CosineSimilarity]]/[[DotProduct]]
+  * Null handling differs from [[CosineSimilarity]]
   * DELIBERATELY: a null ELEMENT nulls the whole distance (skipping a term
   * would silently rank a partially-read vector), which is also exactly what
   * the polynomial form computed — `null − cw` nulls the term and the sum.

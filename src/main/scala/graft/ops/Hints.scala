@@ -31,9 +31,14 @@ import org.apache.spark.sql.functions.broadcast
   *     the hot-key list): plan-time stats CANNOT see their real size (the
   *     non-CBO estimator multiplies join children), so a stats gate would
   *     mis-fire at every scale; their bounds and named 100-TB reshapes
-  *     are documented at the site.
+  *     are documented at the site. ADJUDICATED r20 (PERF_NOTES r20
+  *     aggregate-hint section, hinted vs AQE's unhinted runtime plan at
+  *     sf0.1 and sf100): tpch2's argmin and tpch20's supplier set dropped
+  *     their hints (unhinted measured faster at both decades); the salted
+  *     join's hot-key list keeps a plain `broadcast`
+  *     ([[Tpch.saltedHotJoin]]).
   *
-  * CBO ADJUDICATED r21 ([[graft.CboProbe]], OPTIMIZATION_r21.md §3):
+  * CBO ADJUDICATED r21 (OPTIMIZATION_r21.md §3):
   * `ANALYZE ... FOR COLUMNS` on catalog tables + `spark.sql.cbo.enabled`
   * DOES fix the joined-dim estimate (supplier⋈nation 18.6 MB product →
   * 2.8 KB) and recovers the hinted all-broadcast plan unhinted, at both
@@ -76,26 +81,4 @@ object Hints {
     if (sizedBy.queryExecution.optimizedPlan.stats.sizeInBytes <= BigInt(DimBroadcastMaxBytes))
       broadcast(df)
     else df
-
-  /** Probe seam for AGGREGATE-DERIVED forced broadcasts (VERDICT r19 next
-    * #1): sides bounded by a dimension's (or the skew tail's) cardinality
-    * by construction, which plan-time stats cannot see (the non-CBO
-    * estimator multiplies join children), so neither [[dimBroadcast]] gate
-    * applies. [[graft.AggHintProbe]] flips this seam to compare the forced
-    * hint against AQE's unhinted runtime plan at sf0.1 and sf100.
-    * ADJUDICATED r20 (PERF_NOTES probe table): tpch2's per-part argmin and
-    * tpch20's qualifying-supplier set DROPPED their hints — unhinted
-    * measured faster at both decades (the "saved" shuffle was dim-sized,
-    * the forced driver materialization was the real cost) and is immune to
-    * driver OOM at any scale. The salted join's hot-key list KEEPS its
-    * hint — unhinted, AQE's conversion threshold misses at sf100 and the
-    * tag joins shuffle the whole fact on the skewed key itself (89.8 vs
-    * 79.4 s); its bound and the threshold-sizing contract are documented
-    * at the site ([[Tpch.saltedHotJoin]]). */
-  @volatile private[graft] var AggBroadcastHints: Boolean = true
-
-  /** `broadcast(df)` under the default regime; `df` unhinted when the
-    * probe seam is off (then the planner/AQE decide from runtime sizes). */
-  def aggBroadcast(df: DataFrame): DataFrame =
-    if (AggBroadcastHints) broadcast(df) else df
 }

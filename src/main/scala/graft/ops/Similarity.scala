@@ -922,7 +922,7 @@ object Similarity {
     * applied everywhere else in this repo). Cells that end an iteration
     * empty simply drop out (standard k-means degeneracy; reseeding is a
     * policy choice left out of the demo). */
-  def kmeansStep(emb: DataFrame, cent: DataFrame): DataFrame =
+  def kmeansStep(emb: DataFrame, cent: DataFrame): DataFrame = {
     // Literal-centroid argmax ([[centroidArgmax]], r22): each Lloyd
     // iteration costs one scan + per-row map + the #cells×dim-sized partial
     // aggregate below; nothing payload-sized moves. Before r22 this was a
@@ -933,40 +933,35 @@ object Similarity {
     centroidArgmax(cent) match {
       case None => cent.select(col("cent_id"), col("cemb"))
       case Some(best) =>
-        kmeansMeanTail(emb.select(best.as("cell"), col("embedding")))
+        // Per-cell per-dimension mean, partial-aggregated map-side to
+        // #cells×dim.
+        val mean = emb.select(best.as("cell"), col("embedding"))
+          .select(col("cell"), posexplode(toDouble(col("embedding"))).as(Seq("pos", "x")))
+          .groupBy("cell", "pos").agg(avg(col("x")).as("m"))
+          .groupBy("cell")
+          // array_sort on struct(pos, m) orders by pos, so the re-packed array
+          // is positionally faithful.
+          .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
+            e => e.getField("m")).as("mean"))
+        // Spherical k-means (Dhillon & Modha, "Concept Decompositions for Large
+        // Sparse Text Data Using Clustering"): under a COSINE assignment metric
+        // the maximizing centroid of a cell is the RENORMALIZED mean, not the
+        // raw mean. Cosine is scale-invariant, so renormalizing never changes
+        // which centroid wins an argmax — but it keeps centroid magnitudes from
+        // drifting across iterations and makes the trained set directly
+        // comparable/storable as unit vectors. A cell whose members cancel to
+        // the zero vector has no direction at all: it is dropped here (standard
+        // k-means degeneracy — the nanvl above is the belt to this suspender,
+        // protecting any caller that feeds untrained/degenerate centroids).
+        mean
+          .withColumn("n", sqrt(aggregate(col("mean"), lit(0.0), (a, x) => a + x * x)))
+          .filter(col("n") > 0.0)
+          // cast back to float — the expression layer and the stored embeddings
+          // are array<float>, and centroid precision beyond float is noise for
+          // an argmax.
+          .select(col("cell").as("cent_id"),
+            transform(col("mean"), x => (x / col("n")).cast("float")).as("cemb"))
     }
-
-  /** The mean/renormalize tail of [[kmeansStep]], factored so the
-    * [[graft.KmeansProbe]] legacy regime shares it verbatim: per-cell
-    * per-dimension mean (partial-aggregated map-side to #cells×dim), then
-    * the spherical renormalization. */
-  private[graft] def kmeansMeanTail(assign: DataFrame): DataFrame = {
-    val mean = assign
-      .select(col("cell"), posexplode(toDouble(col("embedding"))).as(Seq("pos", "x")))
-      .groupBy("cell", "pos").agg(avg(col("x")).as("m"))
-      .groupBy("cell")
-      // array_sort on struct(pos, m) orders by pos, so the re-packed array
-      // is positionally faithful.
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        e => e.getField("m")).as("mean"))
-    // Spherical k-means (Dhillon & Modha, "Concept Decompositions for Large
-    // Sparse Text Data Using Clustering"): under a COSINE assignment metric
-    // the maximizing centroid of a cell is the RENORMALIZED mean, not the
-    // raw mean. Cosine is scale-invariant, so renormalizing never changes
-    // which centroid wins an argmax — but it keeps centroid magnitudes from
-    // drifting across iterations and makes the trained set directly
-    // comparable/storable as unit vectors. A cell whose members cancel to
-    // the zero vector has no direction at all: it is dropped here (standard
-    // k-means degeneracy — the nanvl above is the belt to this suspender,
-    // protecting any caller that feeds untrained/degenerate centroids).
-    mean
-      .withColumn("n", sqrt(aggregate(col("mean"), lit(0.0), (a, x) => a + x * x)))
-      .filter(col("n") > 0.0)
-      // cast back to float — the expression layer and the stored embeddings
-      // are array<float>, and centroid precision beyond float is noise for
-      // an argmax.
-      .select(col("cell").as("cent_id"),
-        transform(col("mean"), x => (x / col("n")).cast("float")).as("cemb"))
   }
 
   /** Full Lloyd training loop: `iters` rounds of [[kmeansStep]], lineage

@@ -210,7 +210,7 @@ object TextOps {
   }
 
   /** Store builds run AT MOST ONCE per (session, data dir) per JVM
-    * (ADVICE r08: two concurrent invocations — Bench/TimeProbe in one JVM,
+    * (ADVICE r08: two concurrent invocations — two timing harnesses in one JVM,
     * or plan-only inspection racing an executing probe — previously raced
     * on the shared DROP TABLE + overwrite). computeIfAbsent serializes the
     * build; steady-state invocations construct the probe plan against the
@@ -1609,7 +1609,10 @@ object TextOps {
     * 8-gram shared by millions of pages pinned every occurrence into one
     * window task — the [[bigramQuality]] Zipf-key rationale.)
     * Docs with fewer than 8 tokens have no 8-grams and drop out (mirrored
-    * by the oracle's empty range()). */
+    * by the oracle's empty range()). A duplicated-gram prefilter on the
+    * join-back was measured in r18 and not adopted: the freq aggregate is
+    * the floor (PERF_NOTES r18, "the singleton-gram prefilter
+    * adjudicated"). */
   val dupNgrams: Q = (s, d) => {
     val n = 8
     val toks = tokens(col("text"))
@@ -1626,48 +1629,6 @@ object TextOps {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_grams"),
         sum(when(col("docfreq") >= 2, 1L).otherwise(0L)).as("dup_grams"))
-      .withColumn("dup_frac",
-        round(col("dup_grams").cast("double") / col("n_grams"), 4))
-      .orderBy("doc_id")
-  }
-
-  /** [[dupNgrams]] with a DUPLICATED-GRAM PREFILTER on the join-back
-    * (VERDICT r17 next #4 candidate): most 8-grams are singletons
-    * (docfreq = 1), yet the docfreq join-back shuffles every
-    * (doc_id, gh) pair on gh regardless. This variant splits the two
-    * per-doc statistics:
-    *   - `n_grams` comes straight from a map-side-combined
-    *     `groupBy(doc_id)` over the pairs — the shuffle carries ~1 row
-    *     per (task, doc), not per gram;
-    *   - `dup_grams` counts only pairs whose gh is in the DUPLICATED
-    *     minority (`docfreq >= 2`), reached through a broadcast semi
-    *     join — a map-side filter, no pair shuffle on gh at all when
-    *     the duplicated-gram set fits a broadcast (the q_heavy_hitters
-    *     broadcast-candidate pattern).
-    * The freq aggregate itself (distinct gh → map-side-combined count)
-    * is unchanged — it is the irreducible floor. Same results by
-    * construction (DupNgramsProbe checksum-compares); registered only if
-    * the sf100 probe shows the join-back actually dominates — recorded
-    * either way per the verdict's done-criterion. */
-  private[graft] val dupNgramsPrefilter: Q = (s, d) => {
-    val n = 8
-    val toks = tokens(col("text"))
-    val pairs = Tables(s, d, "documents")
-      .filter(size(toks) >= n)
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(0), size(toks) - lit(n)),
-          i => concat_ws(" ", slice(toks, i + lit(1), lit(n))))).as("g"))
-      .select(col("doc_id"), Dedup.portableHash(col("g")).as("gh"))
-      .distinct()
-      .localCheckpoint()
-    val dupSet = pairs.groupBy("gh").agg(count(lit(1)).as("docfreq"))
-      .filter(col("docfreq") >= 2).select("gh")
-    val perDoc = pairs.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
-    val dupPerDoc = pairs.join(broadcast(dupSet), Seq("gh"))
-      .groupBy("doc_id").agg(count(lit(1)).as("dup_grams"))
-    perDoc.join(dupPerDoc, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_grams"),
-        coalesce(col("dup_grams"), lit(0L)).as("dup_grams"))
       .withColumn("dup_frac",
         round(col("dup_grams").cast("double") / col("n_grams"), 4))
       .orderBy("doc_id")

@@ -89,45 +89,12 @@ object Tpch {
       .select("c_custkey", "c_name", "revenue", "c_acctbal", "n_name")
   }
 
-  /** Salt-replicated skew join: the fact side salts its join key; the dim
-    * side replicates each row across all S salts (explode of a literal
-    * array — no shuffle, S× the small side only). One hot orderkey then
-    * spreads over S reducers instead of melting one. Result is identical to
-    * the plain join — the oracle IS the plain join. AQE's runtime skew
-    * splitting covers moderate skew; explicit salting is the insurance for
-    * keys hot enough to overwhelm a single task even after splitting.
-    * Scale note (r08 sweep, PERF_NOTES): this naive form replicates the
-    * WHOLE dim ×S, so its cost grows S× faster than the dim (1.6→8.2s at
-    * 10×, the join flipping broadcast→shuffle). The production form runs a
-    * hot-key detection pass first (the [[Custom.mgHeavyHitters]] shape) and
-    * salts ONLY the detected keys, plain-joining the cold remainder —
-    * constant extra volume instead of ×S.
-    *
-    * TEST-ONLY since round 9 (VERDICT r08 "What's wrong" #1): the ×S
-    * whole-dim replication is a known scale-killer, so the registered
-    * surface carries only [[saltedHotJoin]]; this form survives as the
-    * pedagogical contrast, its identity with the plain join pinned in
-    * Round8Spec. */
-  val saltedJoin: Q = (s, d) => {
-    val S = 8
-    val li = Tables(s, d, "lineitem")
-      .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
-      .withColumn("salt", pmod(hash(col("l_linenumber"), col("l_partkey")), lit(S)))
-    val ord = Tables(s, d, "orders")
-      .select("o_orderkey", "o_orderpriority")
-      .withColumn("salt", explode(array((0 until S).map(lit): _*)))
-    li.join(ord, col("l_orderkey") === col("o_orderkey") && li("salt") === ord("salt"))
-      .groupBy("o_orderpriority")
-      .agg(round(sum(col("l_quantity")), 2).as("sum_qty"), count(lit(1)).as("cnt"))
-      .orderBy("o_orderpriority")
-  }
-
   /** The salted join's hot-key detection threshold, in ROWS PER KEY — the
     * per-task row budget a single key's join group must breach before it
     * is worth salting (the [[Extended.bucketsFor]] ≤~4M-rows-per-task
     * provisioning budget, applied to one KEY instead of one bucket).
     *
-    * RE-CALIBRATED r21 ([[graft.SkewJoinProbe]], OPTIMIZATION_r21.md §2):
+    * RE-CALIBRATED r21 (OPTIMIZATION_r21.md §2):
     * the original `>= 6` marked the fixture's TOP FAN-OUT BAND of an
     * unskewed distribution — 21.9% of ALL order keys (32M keys at sf100),
     * covering 37% of the fact. That is not a skew tail; it made the
@@ -147,19 +114,6 @@ object Tpch {
     * plain join). */
   @volatile private[graft] var HotKeyRowThreshold: Long = 4000000L
 
-  /** Hot-key-only salted skew join — the PRODUCTION form of [[saltedJoin]],
-    * added after the r08 scaling sweep measured the naive form's ×S
-    * whole-dim replication growing 5× at 10× data (PERF_NOTES r08): a
-    * map-side-combined detection pass finds the keys heavy enough to
-    * overwhelm one reducer ([[HotKeyRowThreshold]] rows — the rows-per-
-    * task budget; at 100 TB the [[Custom.mgHeavyHitters]] sketch replaces
-    * the exact pass), the hot-key set — bounded by corpus-rows/threshold,
-    * i.e. ≤ a few hundred genuinely-skewed keys in any realistic corpus —
-    * BROADCASTS to both sides, and only hot keys salt/replicate — the
-    * cold remainder flows through the plain equi-join path with salt 0.
-    * Extra shuffle volume is S× the HOT subset only, constant in the dim
-    * size. Result identical to the plain join at any threshold (the
-    * oracle IS the plain join). */
   /** The salted join's hot-key DETECTION (r21 — OPTIMIZATION_r21.md §2),
     * extracted so tests can pin the detector directly. Two stages:
     *
@@ -192,27 +146,40 @@ object Tpch {
         col("l_partkey"), col("l_quantity")), lit(SampleMod)) === 0L)
       .groupBy("l_orderkey").agg(count(lit(1)).as("sc"))
       .filter(col("sc") >= candCut).select(col("l_orderkey").as("ck"))
-    li.join(Hints.aggBroadcast(cands), col("l_orderkey") === col("ck"))
+    li.join(broadcast(cands), col("l_orderkey") === col("ck"))
       .groupBy("l_orderkey").agg(count(lit(1)).as("c"))
       .filter(col("c") >= HotKeyRowThreshold).select(col("l_orderkey").as("hk"))
   }
 
+  /** Hot-key-only salted skew join. It replaced a naive form that salted
+    * every key and replicated the WHOLE dim ×S, whose cost grew 5× at 10×
+    * data in the r08 scaling sweep (PERF_NOTES r08). AQE's runtime skew
+    * splitting covers moderate skew; here a map-side-combined detection
+    * pass ([[saltedHotKeys]]) finds the keys heavy enough to
+    * overwhelm one reducer ([[HotKeyRowThreshold]] rows — the rows-per-
+    * task budget; at 100 TB the [[Custom.mgHeavyHitters]] sketch replaces
+    * the exact pass), the hot-key set — bounded by corpus-rows/threshold,
+    * i.e. ≤ a few hundred genuinely-skewed keys in any realistic corpus —
+    * BROADCASTS to both sides, and only hot keys salt/replicate — the
+    * cold remainder flows through the plain equi-join path with salt 0.
+    * Extra shuffle volume is S× the HOT subset only, constant in the dim
+    * size. Result identical to the plain join at any threshold (the
+    * oracle IS the plain join). */
   val saltedHotJoin: Q = (s, d) => {
     val S = 8
     val li = Tables(s, d, "lineitem")
       .select("l_orderkey", "l_linenumber", "l_partkey", "l_quantity")
     val ord = Tables(s, d, "orders").select("o_orderkey", "o_orderpriority")
-    // The hot list's forced broadcast stays (r20 AggHintProbe: unhinted,
-    // AQE's runtime conversion can miss and the tag joins then shuffle
-    // the ENTIRE fact on the skewed key itself); bounded by
-    // corpus-rows/[[HotKeyRowThreshold]] by construction.
-    // [[Hints.aggBroadcast]] keeps the probe seam.
+    // The hot list's forced broadcast stays (PERF_NOTES r20 aggregate-hint
+    // section: unhinted, AQE's runtime conversion can miss and the tag
+    // joins then shuffle the ENTIRE fact on the skewed key itself);
+    // bounded by corpus-rows/[[HotKeyRowThreshold]] by construction.
     val hot = saltedHotKeys(li)
-    val fact = li.join(Hints.aggBroadcast(hot), col("l_orderkey") === col("hk"), "left")
+    val fact = li.join(broadcast(hot), col("l_orderkey") === col("hk"), "left")
       .withColumn("salt", when(col("hk").isNotNull,
         pmod(hash(col("l_linenumber"), col("l_partkey")), lit(S))).otherwise(lit(0)))
       .drop("hk")
-    val dim = ord.join(Hints.aggBroadcast(hot), col("o_orderkey") === col("hk"), "left")
+    val dim = ord.join(broadcast(hot), col("o_orderkey") === col("hk"), "left")
       .withColumn("salt", explode(when(col("hk").isNotNull,
         sequence(lit(0), lit(S - 1))).otherwise(array(lit(0)))))
       .drop("hk")
@@ -527,7 +494,7 @@ object Tpch {
     * scales.
     *
     * The argmin set joins back UNHINTED (VERDICT r19 next #1, adjudicated
-    * by [[graft.AggHintProbe]] r20): `edges` is already hash-partitioned
+    * r20, PERF_NOTES r20 aggregate-hint section): `edges` is already hash-partitioned
     * on (l_partkey, l_suppkey) by its distinct(), which are exactly the
     * join keys, so the probe side of the argmin join is EXCHANGE-FREE
     * under sort-merge, while the old forced broadcast materialized the
@@ -657,7 +624,7 @@ object Tpch {
     * probe side of a left-semi whose build is an aggregated subquery —
     * TPC-H's nested-IN pattern with the correlation flattened into one
     * fact shuffle on the composite key. The build is UNHINTED (VERDICT r19
-    * next #1, adjudicated by [[graft.AggHintProbe]] r20): the old forced
+    * next #1, adjudicated r20, PERF_NOTES aggregate-hint section): the old forced
     * broadcast pushed the distinct-supplier set — bounded by the supplier
     * dim, i.e. SF-proportional — through the driver, and measured SLOWER
     * than letting the planner run the semi as a sort-merge with AQE free

@@ -24,6 +24,16 @@ class ContractSpec extends AnyFunSuite {
     assert(orphans.isEmpty, s"oracle SQL without a query: $orphans")
   }
 
+  test("query allowlist: unset selects all, a subset selects it, unknown names are reported") {
+    val (all, noneUnknown) = SparkEntry.select(None)
+    assert(all.size == 187 && all.keySet == SparkEntry.queries.keySet && noneUnknown.isEmpty)
+    assert(SparkEntry.select(Some(" , "))._1.keySet == all.keySet, "a blank allowlist selects all")
+    val (subset, unknown) = SparkEntry.select(Some("q_tpch1, q_flagship"))
+    assert(subset.keySet == Set("q_tpch1", "q_flagship") && unknown.isEmpty)
+    val (kept, typo) = SparkEntry.select(Some("q_tpch1,q_tpch99,q_flagshp"))
+    assert(kept.keySet == Set("q_tpch1") && typo == Set("q_tpch99", "q_flagshp"))
+  }
+
   test("entry() yields rows on the smoke fixture") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

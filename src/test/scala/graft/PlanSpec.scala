@@ -205,9 +205,9 @@ class PlanSpec extends AnyFunSuite {
     val p = plan("q_tpch2")
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 3,
       "part, supplier and nation should all broadcast")
-    // The per-part argmin set is deliberately NOT hinted (AggHintProbe r20:
-    // the edges side is already partitioned on exactly the join keys by its
-    // distinct(), so the static sort-merge is exchange-free on the probe
+    // The per-part argmin set is deliberately NOT hinted (PERF_NOTES r20
+    // aggregate-hint section: the edges side is already partitioned on
+    // exactly the join keys by its distinct(), so the static sort-merge is exchange-free on the probe
     // side and measured FASTER than the forced driver broadcast at sf0.1
     // and sf100 — and AQE may still convert it at runtime). ONE SMJ is the
     // argmin edge (formatted explain names each operator twice: tree +
@@ -268,14 +268,39 @@ class PlanSpec extends AnyFunSuite {
     val p = plan("q_tpch20")
     assert(p.contains("LeftSemi"), "the IN-subquery must plan as a left-semi join")
     assert(p.contains("BroadcastHashJoin"), "the name-filtered part set should broadcast into the fact")
-    // The qualifying-supplier set is deliberately NOT hinted (AggHintProbe
-    // r20: the semi's probe side is the dim-sized supplier table, so the
+    // The qualifying-supplier set is deliberately NOT hinted (PERF_NOTES
+    // r20 aggregate-hint section: the semi's probe side is the dim-sized supplier table, so the
     // forced driver broadcast of an SF-proportional build measured SLOWER
     // than the sort-merge semi at sf0.1 and sf100; AQE converts at runtime
     // when the build is actually small). ONE SMJ is that semi (formatted
     // explain names each operator twice: tree + detail row).
     assert("SortMergeJoin".r.findAllIn(p).size <= 2,
       s"only the aggregated-build semi may sort-merge: $p")
+  }
+
+  test("salted hotkey join: the hot-key list broadcasts into both the fact and the dim join") {
+    // The hot list's forced broadcast is a measured choice (PERF_NOTES r20
+    // aggregate-hint section: unhinted, AQE's conversion missed at sf100
+    // and the tag joins shuffled the whole fact on the skewed key). Auto
+    // broadcast is switched off while planning, so only the explicit hints
+    // can produce a broadcast side here.
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val p = try physical("q_salted_hotkey")
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+    // (build-side output names, probe-side key names) per broadcast join.
+    val joins = p.collect { case j: BroadcastHashJoinExec =>
+      val (build, probeKeys) =
+        if (j.buildSide == BuildRight) (j.right, j.leftKeys) else (j.left, j.rightKeys)
+      (build.output.map(_.name).toSet, probeKeys.flatMap(_.references.map(_.name)).toSet)
+    }
+    val hkProbeKeys = joins.collect { case (out, keys) if out("hk") => keys }
+    assert(hkProbeKeys.exists(_("l_orderkey")) && hkProbeKeys.exists(_("o_orderkey")),
+      s"hk must be the broadcast side of the fact and the dim join; broadcast joins: $joins")
+    assert(joins.exists { case (out, keys) => out("ck") && keys("l_orderkey") },
+      s"the sampled candidate list must broadcast into the exact count; broadcast joins: $joins")
   }
 
   test("tpch21: decorrelated to ONE pass over lineitem — exactly three table scans, no self-join") {

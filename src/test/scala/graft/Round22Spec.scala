@@ -22,8 +22,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *     argmax tie order (equal cosine → larger cent_id wins) must match the
   *     old max_by(cent_id, struct(cs, cent_id)) exactly, and the assignment
   *     plan must contain no Exchange at all.
-  *  4. [[graft.functions.CosineSimilarity]] / [[graft.functions.DotProduct]]
-  *     skip null ARRAY ELEMENTS (ADVICE r21) instead of reading undefined
+  *  4. [[graft.functions.CosineSimilarity]]
+  *     skips null ARRAY ELEMENTS (ADVICE r21) instead of reading undefined
   *     data; containsNull=false inputs keep the branch-free loop.
   *  5. [[graft.functions.SquaredDistance]] (the executable statement of the
   *     PQ d2 semantics; scores the ADC table) is bit-identical to the
@@ -131,7 +131,7 @@ class Round22Spec extends AnyFunSuite {
     assert(out.columns.toSeq == Seq("vec_id", "embedding", "cell") && out.isEmpty)
   }
 
-  test("cosine_sim / dot_product: null array elements are skipped, not read as garbage") {
+  test("cosine_sim: null array elements are skipped, not read as garbage") {
     val schema = StructType(Seq(
       StructField("a", ArrayType(FloatType, containsNull = true)),
       StructField("b", ArrayType(FloatType, containsNull = true))))
@@ -139,17 +139,17 @@ class Round22Spec extends AnyFunSuite {
       Row(Seq[java.lang.Float](3.0f, null), Seq[java.lang.Float](4.0f, 5.0f)))
     val in = spark.createDataFrame(rows, schema)
     val out = in.select(
-      graft.functions.Functions.cosineSim(col("a"), col("b")).as("cs"),
-      graft.functions.Functions.dotProduct(col("a"), col("b")).as("dp")).collect().head
+      graft.functions.Functions.cosineSim(col("a"), col("b")).as("cs")).collect().head
     // Index 1 is skipped on BOTH sides: dot = 3*4 = 12; norms = 3 and 4.
-    assert(out.getDouble(1) == 12.0, s"dot_product must skip the null index, got ${out.getDouble(1)}")
     assert(math.abs(out.getDouble(0) - 1.0) < 1e-12,
       s"cosine_sim must skip the null index entirely (dot/na/nb all exclude it), got ${out.getDouble(0)}")
     // containsNull=false inputs take the branch-free loop and still agree.
-    val tight = in.select(
-      graft.functions.Functions.dotProduct(
-        array(lit(3.0f)), array(lit(4.0f))).as("dp")).collect().head.getDouble(0)
-    assert(tight == 12.0)
+    val tightIn = in.select(array(lit(3.0f)).as("a"), array(lit(4.0f)).as("b"))
+    assert(tightIn.schema.fields.forall(
+      _.dataType == ArrayType(FloatType, containsNull = false)))
+    val tight = tightIn.select(
+      graft.functions.Functions.cosineSim(col("a"), col("b"))).collect().head.getDouble(0)
+    assert(tight == 1.0)
   }
 
   test("squared_distance: bit-identical to the aggregate(zip_with(...)) fold the PQ oracle mirrors") {
