@@ -210,8 +210,8 @@ object TextOps {
   }
 
   /** Store builds run AT MOST ONCE per (session, data dir) per JVM
-    * (ADVICE r08: two concurrent invocations — two timing harnesses in one JVM,
-    * or plan-only inspection racing an executing probe — previously raced
+    * (ADVICE r08: two concurrent invocations — two timing harnesses in one
+    * JVM, or plan-only inspection racing an executing probe — previously raced
     * on the shared DROP TABLE + overwrite). computeIfAbsent serializes the
     * build; steady-state invocations construct the probe plan against the
     * already-registered catalog table without touching it. Keyed on

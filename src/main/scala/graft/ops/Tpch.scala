@@ -494,11 +494,12 @@ object Tpch {
     * scales.
     *
     * The argmin set joins back UNHINTED (VERDICT r19 next #1, adjudicated
-    * r20, PERF_NOTES r20 aggregate-hint section): `edges` is already hash-partitioned
-    * on (l_partkey, l_suppkey) by its distinct(), which are exactly the
-    * join keys, so the probe side of the argmin join is EXCHANGE-FREE
-    * under sort-merge, while the old forced broadcast materialized the
-    * per-part argmin — an SF-proportional side — through the driver.
+    * r20, PERF_NOTES r20 aggregate-hint section): `edges` is already
+    * hash-partitioned on (l_partkey, l_suppkey) by its distinct(), which
+    * are exactly the join keys, so the probe side of the argmin join is
+    * EXCHANGE-FREE under sort-merge, while the old forced broadcast
+    * materialized the per-part argmin — an SF-proportional side —
+    * through the driver.
     * Measured: unhinted is FASTER at both probed decades (sf0.1 1.05 →
     * 0.69 s, sf100 77.1 → 68.2 s) and cannot OOM the driver at any scale;
     * AQE remains free to broadcast from runtime sizes where that wins. */
