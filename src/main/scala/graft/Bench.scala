@@ -114,7 +114,7 @@ object Bench {
     // 187-query session), isolated scan-heavy probes want 32 g (a 96 g
     // pinned heap starves the page cache), and numbers are only comparable
     // within one heap size.
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", s"${SparkEntry.FixtureRoot}/sf0.1")
     val QueryCapSec = queryCapSec(sfDir)
     val gcBetweenQueries = sfOf(sfDir) > 0.5
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")

@@ -44,12 +44,12 @@ import org.apache.spark.sql.functions._
   *    both on read.
   *
   * Usage: `runMain graft.ScaleUp [srcDir] [dstDir] [replicas] [tag]`
-  * (defaults: /root/testdata/sf0.1 → benchdata/sf1 × 10, tag "x";
+  * (defaults: [[SparkEntry.FixtureRoot]]/sf0.1 → benchdata/sf1 × 10, tag "x";
   * use a DIFFERENT tag per chained generation, e.g. "y" for sf1 → sf10).
   */
 object ScaleUp {
   def main(args: Array[String]): Unit = {
-    val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
+    val src = args.lift(0).getOrElse(s"${SparkEntry.FixtureRoot}/sf0.1")
     val dst = args.lift(1).getOrElse("benchdata/sf1")
     val reps = args.lift(2).map(_.toInt).getOrElse(10)
     val tag = args.lift(3).getOrElse("x")

@@ -2,11 +2,11 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
   * The query inventory re-expresses the reference's capability surface
-  * (scan / filter / hash join / limit+offset,
-  * `/root/reference/src/executor/mod.rs:250-466`) plus the SURVEY.md §2.2 ▲
+  * (scan / filter / hash join / limit+offset, reference
+  * `src/executor/mod.rs:250-466`) plus the SURVEY.md §2.2 ▲
   * extensions (joins variants, aggregations, windows, set ops, scalar/JSON
   * functions) and the north-star LLM-pipeline operators (dedup, similarity,
   * text analysis, multimodal), each as a deterministic DataFrame query with
@@ -14,11 +14,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object SparkEntry {
 
+  /** Where the driver-generated fixtures live, one `sf<scale>` dir per
+    * scale factor (TESTDATA.md). */
+  val FixtureRoot = "/root/testdata"
+
   /** Flagship: scan → filter(build side) → inner hash equi-join →
-    * offset/limit, the reference's one hand-wired plan
-    * (`/root/reference/src/main.rs:29-48`), on sf0.001. */
+    * offset/limit, the reference's one hand-wired plan (reference
+    * `src/main.rs:29-48`), on sf0.001. */
   def entry(spark: SparkSession): DataFrame =
-    ops.Relational.flagship(spark, "/root/testdata/sf0.001")
+    ops.Relational.flagship(spark, s"$FixtureRoot/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =

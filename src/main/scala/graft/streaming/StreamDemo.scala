@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
-import graft.Tables
+import graft.{SparkEntry, Tables}
 
 /** Runnable demo: replays the driver's events fixture through MemoryStream
   * and drives all three streaming pipelines (windowed agg, sessionization,
@@ -17,7 +17,7 @@ object StreamDemo {
                      event_type: String, value: Double, props: String)
 
   def main(args: Array[String]): Unit = {
-    val d = args.headOption.getOrElse("/root/testdata/sf0.001")
+    val d = args.headOption.getOrElse(s"${SparkEntry.FixtureRoot}/sf0.001")
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
