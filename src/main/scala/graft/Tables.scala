@@ -22,12 +22,13 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
   * plans (one job per table it loads). Each table's schema is inferred once
   * and every later call reads with `spark.read.schema(s)`, which runs no
   * job. The memo is keyed on the qualified path, the path's modification
-  * time (a rewritten table is inferred again) and the parquet confs that
-  * change what inference returns ([[SchemaConfs]]; `events` sets
-  * `nanosAsLong` itself). Only the schema is shared: every call still
-  * builds a fresh relation with fresh attribute ids, so a query that loads
-  * one table twice (q_tpch21 reads `lineitem` three times) self-joins
-  * cleanly.
+  * time (a rewritten table is inferred again; a directory's time moves
+  * whenever a file in it is added or removed, as every Spark write of it
+  * does) and the parquet confs that change what inference returns
+  * ([[SchemaConfs]]; `events` sets `nanosAsLong` itself). Only the schema
+  * is shared: every call still builds a fresh relation with fresh
+  * attribute ids, so a query that loads one table twice (q_tpch21 reads
+  * `lineitem` three times) self-joins cleanly.
   */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
