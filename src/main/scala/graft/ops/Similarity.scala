@@ -256,22 +256,22 @@ object Similarity {
     * store says" (the steady-state read path — no corpus count, no guessed
     * default); explicit values must EQUAL the stored metadata, failing fast
     * on mismatch instead of silently screening against wrong buckets. A
-    * store without the properties (built by hand, pre-r13) falls back to
-    * the caller's values or the historical 4/8 defaults. */
+    * store without the properties (not built by [[buildEmbedBandStore]])
+    * fails, naming the missing ones. */
   private[graft] def embedStoreParams(s: SparkSession, base: String,
                                       bands: Int = -1, bits: Int = -1): (Int, Int) = {
     val props = TextOps.storeMeta(s)(
       org.apache.spark.sql.catalyst.TableIdentifier(s"${base}_ebands")).properties
-    (props.get("graft.bands").map(_.toInt), props.get("graft.bits").map(_.toInt)) match {
-      case (Some(sb), Some(st)) =>
-        require(bands < 0 || bands == sb,
-          s"embed band store '$base' was built with bands=$sb; caller passed bands=$bands")
-        require(bits < 0 || bits == st,
-          s"embed band store '$base' was built with bits=$st; caller passed bits=$bits")
-        (sb, st)
-      case _ =>
-        (if (bands < 0) 4 else bands, if (bits < 0) 8 else bits)
-    }
+    val missing = Seq("graft.bands", "graft.bits").filterNot(props.contains)
+    require(missing.isEmpty, s"embed band store '$base' has no ${missing.mkString(", ")} " +
+      s"table propert${if (missing.size == 1) "y" else "ies"} on ${base}_ebands — " +
+      "it was not built by buildEmbedBandStore, so its band geometry is unknown")
+    val (sb, st) = (props("graft.bands").toInt, props("graft.bits").toInt)
+    require(bands < 0 || bands == sb,
+      s"embed band store '$base' was built with bands=$sb; caller passed bands=$bands")
+    require(bits < 0 || bits == st,
+      s"embed band store '$base' was built with bits=$st; caller passed bits=$bits")
+    (sb, st)
   }
 
   /** Append a batch of (vec_id, embedding) rows the caller has already
@@ -419,7 +419,7 @@ object Similarity {
       .repartition(buckets, col("vec_id"))
       .write.bucketBy(buckets, "vec_id").sortBy("vec_id")
       // Generation-suffixed + manifest-committed from birth (r20) — see
-      // [[TextOps.day0Location]] for the leak the bare path had.
+      // [[TextOps.day0Location]].
       .option("path", TextOps.day0Location(loc, "elabels"))
       .mode("overwrite").saveAsTable(s"${base}_elabels")
     TextOps.commitDay0(s, s"${base}_elabels", "elabels")
@@ -527,17 +527,13 @@ object Similarity {
     publishLabels(s, base, delta)
   }
 
-  /** Test-seam alias: the label publish's crash hooks live in the shared
-    * [[TextOps.SwapHooks]] (one stage-then-swap implementation serves every
-    * label table's fold — embed AND sig cluster tiers). */
-  private[graft] val LabelSwapHooks = TextOps.SwapHooks
-
   /** Delta-proportional label publish (VERDICT r17 next #2) — the shared
     * append-then-fold protocol, see [[TextOps.publishLabelDelta]]. */
   private[graft] def publishLabels(s: SparkSession, base: String, delta: DataFrame): Unit =
     TextOps.publishLabelDelta(s, s"${base}_elabels", "vec_id", EmbedStoreBuckets, delta)
 
-  /** Complete a label swap a crash interrupted between drop and rename —
+  /** Re-point the label table at its manifest-committed generation after a
+    * crash between a fold's manifest PUT and its `SET LOCATION` —
     * [[TextOps.recoverSwap]]; [[maintainEmbedClusterStore]] runs it first
     * thing, and the registered read path runs it before every label read. */
   private[graft] def recoverLabelSwap(s: SparkSession, base: String): Unit =
@@ -566,8 +562,8 @@ object Similarity {
       maintainEmbedClusterStore(s, base,
         withP.filter(col("p") === 1).select("vec_id", "embedding"))
     }
-    // The read path recovers a half-committed label swap itself (VERDICT
-    // r14 next #3) — the [[ops.Dedup.dedupClustersStore]] rationale — and
+    // The read path reconciles the catalog with the manifest itself
+    // (VERDICT r14 next #3) — the [[ops.Dedup.dedupClustersStore]] rationale — and
     // reads the delta-overlay view ([[TextOps.readLabels]]).
     recoverLabelSwap(s, base)
     TextOps.readLabels(s, s"${base}_elabels", "vec_id").orderBy("vec_id")

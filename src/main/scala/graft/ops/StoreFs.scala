@@ -5,37 +5,29 @@ import org.apache.spark.sql.SparkSession
 
 /** Hadoop-`FileSystem` seam for the store lifecycle (VERDICT r18 next #2).
   *
-  * The generation swap, crash recovery, compaction and delta-clear
-  * primitives ([[TextOps.publishBucketed]] / [[TextOps.recoverSwap]] /
+  * The generation commit, recovery, compaction and delta-clear primitives
+  * ([[TextOps.publishBucketed]] / [[TextOps.recoverSwap]] /
   * [[TextOps.compactStore]] / [[TextOps.publishLabelDelta]] /
-  * [[Similarity.ivfCompactCells]]) previously drove `java.io.File` + NIO
-  * directly, which hard-wired them to the local filesystem. Every
-  * list/rename/delete/mtime in those primitives now routes through
+  * [[Similarity.ivfCompactCells]]) route every list/rename/delete through
   * `org.apache.hadoop.fs.FileSystem`, resolved per-path from the session's
-  * Hadoop configuration — semantics are identical on `file://` (the
-  * container's stores and every crash-window spec), and the same code runs
-  * unchanged against `hdfs://`, where `rename` is atomic and
-  * `create(overwrite=false)` is an atomic create-no-overwrite.
+  * Hadoop configuration — the same code runs on `file://` (the container's
+  * stores and every crash spec), on `hdfs://`, and on the test-only
+  * fault-injecting scheme the crash-point sweep uses.
   *
-  * OBJECT-STORE CAVEAT (narrowed r20 — VERDICT r19 next #2): the
-  * GENERATION SWAP no longer depends on rename atomicity — its commit
-  * point is the single-object manifest PUT ([[writeAtomic]] /
-  * [[TextOps.publishBucketed]]'s `<stem>.manifest`), which S3 DOES make
-  * atomically visible, and readers reconcile from the manifest
-  * ([[TextOps.recoverSwap]]); since the second r20 session DAY-0 builds
-  * are manifest-committed too ([[TextOps.commitDay0]]), so the manifest
-  * names the live generation for the store's whole life, not only after
-  * its first fold. What still assumes rename-as-commit on S3A:
-  * the COMPACTION write-asides ([[TextOps.compactStore]] stages all of a
-  * table's rewritten buckets in one write, then commits them one rename
-  * per bucket; [[Similarity.ivfCompactCells]] moves each cell's staged
-  * files in one rename at a time) and the swap LOCK's
-  * `create(overwrite=false)`, which is check-then-create there (no lock —
-  * single-writer must come from the scheduler, the documented
-  * [[TextOps.compactStore]] contract). Closing those last two needs a
-  * lakehouse table format's transactional commit, the module-wide named
-  * upgrade. HDFS-class filesystems (HDFS, local, viewfs, most HCFS)
-  * support the full protocol natively.
+  * OBJECT-STORE CAVEAT: label tables no longer depend on rename or lock
+  * freshness at all — a rewrite commits by the single-object manifest PUT
+  * ([[writeAtomic]]), which S3 makes atomically visible, and the catalog
+  * follows it by `ALTER TABLE … SET LOCATION` ([[TextOps.publishBucketed]],
+  * [[TextOps.commitDay0]]). What still assumes rename-as-commit on S3A is
+  * COMPACTION ([[TextOps.compactStore]] stages all of a table's rewritten
+  * buckets in one write, then commits them one rename per bucket;
+  * [[Similarity.ivfCompactCells]] moves each cell's staged files one
+  * rename at a time), plus the swap LOCK's `create(overwrite=false)`,
+  * which is check-then-create there (no lock — single-writer must come
+  * from the scheduler, the documented [[TextOps.compactStore]] contract).
+  * Closing those needs a lakehouse table format's transactional commit.
+  * HDFS-class filesystems (HDFS, local, viewfs, most HCFS) support the
+  * full protocol natively.
   */
 private[graft] object StoreFs {
 
@@ -63,13 +55,6 @@ private[graft] object StoreFs {
   def deleteQuietly(fs: FileSystem, p: Path): Boolean =
     try fs.delete(p, true) catch { case _: java.io.IOException => false }
 
-  /** Modification time of `p`, or 0 when it does not exist — mirroring
-    * `java.io.File.lastModified()`, whose 0-on-missing the lock staleness
-    * adjudication deliberately reads as "stale" (no lock, no live writer). */
-  def mtime(fs: FileSystem, p: Path): Long =
-    try fs.getFileStatus(p).getModificationTime
-    catch { case _: java.io.FileNotFoundException => 0L }
-
   /** Atomic create-no-overwrite of an empty lock marker: true iff this call
     * created it, false iff it already existed. On `file://` this delegates
     * to NIO `Files.createFile`, which is truly atomic on POSIX (Hadoop's
@@ -85,17 +70,6 @@ private[graft] object StoreFs {
       catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
     }
 
-  /** Re-touch `p`'s mtime to now (the lock-freshness re-arm before the
-    * drop→rename critical section). */
-  def touch(fs: FileSystem, p: Path): Unit =
-    if (isLocal(p, fs))
-      // RawLocalFileSystem.setTimes round-trips through seconds on some
-      // platforms; NIO keeps millisecond precision, which swapLockFreshMs
-      // comparisons (shrunk to tens of ms by the crash specs) rely on.
-      java.nio.file.Files.setLastModifiedTime(localPath(p),
-        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
-    else fs.setTimes(p, System.currentTimeMillis(), -1)
-
   /** Atomically replace `p` with `content` (UTF-8) — the manifest-commit
     * primitive (VERDICT r19 next #2). Readers of `p` see either the old
     * content or the new, never a partial write:
@@ -106,8 +80,8 @@ private[graft] object StoreFs {
     *     completion (strong read-after-write since 2020), which is exactly
     *     why the manifest exists; on HDFS create-overwrite truncates
     *     first — a reader in that sliver sees a SHORT read and must treat
-    *     it as "manifest absent" (fall back to the catalog, which on HDFS
-    *     is protected by atomic rename anyway). */
+    *     it as "manifest absent" — [[TextOps.recoverSwap]] then leaves the
+    *     catalog's location as it is. */
   def writeAtomic(fs: FileSystem, p: Path, content: String): Unit = {
     val bytes = content.getBytes(java.nio.charset.StandardCharsets.UTF_8)
     if (isLocal(p, fs)) {

@@ -478,53 +478,25 @@ object TextOps {
     try r.getRecordCount finally r.close()
   }
 
-  /** Test seam for the bucketed-rewrite crash windows — production code
-    * never sets these; [[publishBucketed]] invokes them at the two seams a
-    * crash could land in. Shared by every full-rewrite store table (embed
-    * cluster labels, sig cluster labels). */
-  private[graft] object SwapHooks {
-    @volatile var afterStageWrite: () => Unit = () => ()
-    @volatile var afterManifestPut: () => Unit = () => ()
-    @volatile var afterDrop: () => Unit = () => ()
-    @volatile var afterRename: () => Unit = () => ()
-    private[graft] def reset(): Unit = {
-      afterStageWrite = () => (); afterManifestPut = () => (); afterDrop = () => ()
-      afterRename = () => ()
-    }
-  }
-
   /** The generation MANIFEST (VERDICT r19 next #2): `<stem>.manifest` in
     * the store's parent directory holds the live generation's directory
     * name, and its single-object atomic replace ([[StoreFs.writeAtomic]])
-    * is the swap's COMMIT POINT. [[publishBucketed]] PUTs it as the last
-    * write of the new generation — after the staged data has fully
-    * committed, before the catalog drop→rename (which is thereby demoted
-    * from commit protocol to metadata republication + GC). Readers
-    * ([[recoverSwap]], run first thing by every registered read path and
-    * maintenance entry) treat a manifest that names a complete staged
-    * generation as authoritative and finish the catalog swap from it —
-    * so on object stores, where directory rename is non-atomic, the swap
-    * inherits the manifest PUT's atomicity instead (see [[StoreFs]]'s
-    * narrowed caveat). Generation tables born through [[commitDay0]] carry
-    * a manifest from their very first write; a store created by older code
-    * has none until its first publish (or a legacy-window recovery) heals
-    * it forward — readers then fall back to the catalog. Never matches
-    * [[GenSuffixRe]], so the orphan sweep cannot reclaim it. */
+    * is every label-table rewrite's COMMIT POINT — [[commitDay0]] PUTs it
+    * for a day-0 build, [[publishBucketed]] for every fold. The catalog
+    * location follows it (`ALTER TABLE … SET LOCATION`), and
+    * [[recoverSwap]] re-points a catalog that lags it, so on object stores,
+    * where directory rename is non-atomic, the commit inherits the PUT's
+    * atomicity (see [[StoreFs]]'s caveat). Never matches [[GenSuffixRe]],
+    * so the orphan sweep cannot reclaim it. */
   private[graft] def manifestPath(parent: org.apache.hadoop.fs.Path,
                                   stem: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(parent, s"$stem.manifest")
 
   /** Location for a DAY-0 build of a generation table (r20): generation-
     * suffixed from birth, like every location [[publishBucketed]] will ever
-    * stage for it. The pre-r20 layout wrote day-0 at the bare `<stem>`
-    * path, which left two crash windows that leaked it PERMANENTLY: a fold
-    * crashing between its catalog rename and its superseded-directory
-    * delete (or between drop and rename) strands the day-0 directory with
-    * no catalog reference, no `_stage` table for [[recoverSwap]] to act on,
-    * and a name the orphan sweep's [[GenSuffixRe]] can never match. A
-    * suffixed day-0 is just another generation: every later crash leftover
-    * falls to the standing sweep. Callers write here, register the table,
-    * then seal it with [[commitDay0]]. */
+    * write for it, so every crash leftover of any generation — day-0
+    * included — falls to the standing orphan sweep. Callers write here,
+    * register the table, then seal it with [[commitDay0]]. */
   private[graft] def day0Location(parent: String, stem: String): String =
     new org.apache.hadoop.fs.Path(parent,
       genDirName(stem, System.nanoTime())).toString
@@ -532,49 +504,22 @@ object TextOps {
   /** Seal a freshly-written day-0 generation (r20): record [[StemProp]],
     * PUT the manifest naming it live (so an object-store reader resolves
     * the store through the manifest from its very first write, not only
-    * after the first fold), and retire every sibling the new build
-    * supersedes — prior `<stem>_g*` generations (a REBUILD of an existing
-    * store, e.g. a centroid retrain or a from-scratch re-cluster, would
-    * otherwise strand its predecessor until the first fold's sweep) plus a
-    * legacy bare-`<stem>` directory from the pre-r20 layout (the one name
-    * the sweep can never see — retiring it here is the migration step).
-    * Same single-writer contract as the rest of the lifecycle: the caller
-    * owns the store exclusively during a day-0 build, exactly as
-    * [[buildStoreOnce]]-style builders already assume when they DROP the
-    * previous tables. */
+    * after the first fold), and retire every prior `<stem>_g*` generation
+    * the new build supersedes (a REBUILD of an existing store, e.g. a
+    * centroid retrain or a from-scratch re-cluster, would otherwise strand
+    * its predecessor until the first fold's sweep). Same single-writer lock
+    * as [[publishBucketed]] (ADVICE r20 low): a day-0 rebuild racing a live
+    * fold would otherwise silently delete the fold's new generation in the
+    * sweep below and overwrite its manifest commit. */
   private[graft] def commitDay0(s: SparkSession, tbl: String, stem: String): Unit = {
-    val meta = storeMeta(s)(
-      org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-    val live = new org.apache.hadoop.fs.Path(meta.location)
+    val live = new org.apache.hadoop.fs.Path(
+      storeMeta(s)(org.apache.spark.sql.catalyst.TableIdentifier(tbl)).location)
     val parent = live.getParent
     val fs = StoreFs.fs(s, live)
-    // Same single-writer guard as [[publishBucketed]] (ADVICE r20 low): a
-    // day-0 rebuild racing a live fold would otherwise silently delete the
-    // fold's staged generation in the superseded-sweep below and overwrite
-    // its manifest commit. The lock turns the contract violation into a
-    // loud failure instead of silent store corruption.
-    val lock = new org.apache.hadoop.fs.Path(parent, s"${stem}_swap.lock")
-    if (!StoreFs.createLockNoOverwrite(fs, lock))
-      throw new IllegalStateException(
-        s"commitDay0($tbl): $lock exists — the store lifecycle is " +
-        "single-writer per table, and another maintenance run appears to be " +
-        "mid-publish. If no writer process is alive, this is a hard-crash " +
-        "leftover: verify and delete the lock file, then rerun.")
-    try {
+    withSwapLock(fs, parent, stem, s"commitDay0($tbl)") {
       s.sql(s"ALTER TABLE $tbl SET TBLPROPERTIES ('$StemProp'='$stem')")
       StoreFs.writeAtomic(fs, manifestPath(parent, stem), live.getName)
-      val gen = java.util.regex.Pattern.compile(
-        java.util.regex.Pattern.quote(stem) + GenSuffixRe)
-      val liveQ = fs.makeQualified(live)
-      val superseded = (StoreFs.listDirs(fs, parent)
-          .filter(st => gen.matcher(st.getPath.getName).matches())
-          .map(_.getPath) :+ new org.apache.hadoop.fs.Path(parent, stem))
-        .filter(p => fs.makeQualified(p) != liveQ && fs.exists(p))
-      val failed = superseded.filterNot(StoreFs.deleteQuietly(fs, _))
-      if (failed.nonEmpty)
-        System.err.println(s"[graft] commitDay0($tbl): failed to delete superseded " +
-          s"${failed.map(_.getName).mkString(",")} — the next publish's sweep retries " +
-          "the suffixed ones; a legacy bare-stem directory needs operator cleanup")
+      sweepGenerations(fs, parent, stem, live, s"commitDay0($tbl)")
       // A rebuild-in-place also strands the previous store's DELTA FILES:
       // the builders `DROP TABLE <tbl>_delta` (both do, right before the
       // day-0 write), but dropping an EXTERNAL table leaves its directory —
@@ -588,11 +533,6 @@ object TextOps {
       // window between the drop and this commit — ADVICE r20 low.)
       if (!s.catalog.tableExists(s"${tbl}_delta"))
         StoreFs.deleteQuietly(fs, new org.apache.hadoop.fs.Path(parent, s"${stem}_delta"))
-    } finally {
-      if (!StoreFs.deleteQuietly(fs, lock) && fs.exists(lock))
-        System.err.println(s"[graft] commitDay0($tbl): failed to delete " +
-          s"swap lock ${lock.getName} — the next publish will refuse to start " +
-          "until it is removed (this was an unlock I/O failure, not a crash)")
     }
   }
 
@@ -609,161 +549,106 @@ object TextOps {
     StoreFs.deleteQuietly(StoreFs.fs(s, p), p)
   }
 
-  /** Crash-safe full rewrite of a bucketed store table (VERDICT r13 next
-    * #2, generalized r14): drop-then-overwrite-same-path had a window where
-    * a crash destroyed the only copy. The rewrite lands in a fresh
-    * GENERATION location under a `<tbl>_stage` name first; only once that
-    * write has fully committed does the catalog swap run (drop old, rename
-    * stage — an external-table rename keeps its location). Every crash
-    * window leaves a complete readable copy on disk:
-    *   - before/while staging: live table untouched; a partial stage is
-    *     garbage the next run reclaims (catalog drop AND directory delete —
-    *     ADVICE r14: the DROP alone left external files forever);
-    *   - after staging, before the drop: both copies complete — rerun wins;
-    *   - between drop and rename: the catalog briefly names neither table,
-    *     but the staged copy is complete — [[recoverSwap]] finishes the
-    *     rename, and every maintenance entry point AND every registered
-    *     read path runs it first thing (VERDICT r14 next #3).
-    * Generation directories derive from a STABLE stem (ADVICE r14 medium):
-    * the live location is itself a prior generation (`<stem>_g<n>`), so
-    * staging under `<liveDirName>_g<n>` would compound the name by ~21
-    * chars per publish and deterministically overflow a 255-byte filename
-    * limit after ~10 maintenance runs; stripping the trailing `_g<n>` keeps
-    * the path length constant forever. Superseded generations are deleted
-    * after the swap commits, and any orphan a crash left in the
-    * rename→delete window is swept on the next entry.
-    *
-    * SINGLE-WRITER, fail-fast (VERDICT r14 next #5): a `<stem>_swap.lock`
-    * marker is created atomically at entry and removed when the publish
-    * completes or errors out. A second concurrent publish of the same table
-    * throws immediately instead of dropping the first writer's stage
-    * mid-flight. Only a hard JVM death leaves the lock behind — and a
-    * STALE lock (mtime older than [[swapLockFreshMs]]; the writer re-touches
-    * it right before the drop→rename critical section) no longer wedges the
-    * store forever: [[recoverSwap]] adjudicates it as a crash leftover and
-    * completes the swap, so only the lock FILE needs manual deletion before
-    * the next publish. All file-layer operations route through the Hadoop
-    * `FileSystem` API ([[StoreFs]] — VERDICT r18 next #2): on `file://` the
-    * lock keeps NIO's truly-atomic create and the swap keeps POSIX rename
-    * (semantics identical to pre-r19); on HDFS `create(overwrite=false)`
-    * and `rename` are the same atomic primitives, so the protocol ports
-    * unchanged. On S3 there is NO atomic create-no-overwrite or rename —
-    * there, single-writer must come from the scheduler (one maintenance
-    * process per store, as [[compactStore]] already requires) or from a
-    * lakehouse format's transactional commit, the named upgrade for every
-    * file-layer seam in this module (see [[StoreFs]]'s object-store
-    * caveat). Bucket width honors the live table's own catalog spec (the
-    * [[appendNovel]] convention). */
-  private[graft] def publishBucketed(s: SparkSession, tbl: String, bucketCol: String,
-                                     defaultBuckets: Int, df: DataFrame): Unit = {
-    // A prior writer may have crashed between its manifest PUT and its
-    // catalog swap — reconcile FIRST, so `meta` below reads the truly-live
-    // generation and the stale-stage reclamation only ever sees
-    // uncommitted garbage (a manifest-committed stage is the live data,
-    // not garbage).
-    recoverSwap(s, tbl)
-    val meta = storeMeta(s)(org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-    val w = meta.bucketSpec.map(_.numBuckets).getOrElse(defaultBuckets)
-    val oldLoc = new org.apache.hadoop.fs.Path(meta.location)
-    val stem = meta.properties.getOrElse(StemProp, storeStem(oldLoc.getName))
-    val parent = oldLoc.getParent
-    val fs = StoreFs.fs(s, oldLoc)
+  /** Run `body` holding `<stem>_swap.lock` in `parent` — the fail-fast
+    * single-writer guard (VERDICT r14 next #5) of [[commitDay0]] and
+    * [[publishBucketed]]. The marker is created atomically at entry
+    * ([[StoreFs.createLockNoOverwrite]]) and removed when `body` completes
+    * or throws, so a second concurrent writer of the same table fails at
+    * once instead of sweeping the first writer's new generation. Only a
+    * hard JVM death — or an unlock I/O failure, reported on stderr —
+    * leaves the lock behind, and then the next writer refuses with this
+    * message until an operator deletes it. Readers never look at it. */
+  private def withSwapLock[T](fs: org.apache.hadoop.fs.FileSystem,
+                              parent: org.apache.hadoop.fs.Path, stem: String,
+                              who: String)(body: => T): T = {
     val lock = new org.apache.hadoop.fs.Path(parent, s"${stem}_swap.lock")
     if (!StoreFs.createLockNoOverwrite(fs, lock))
       throw new IllegalStateException(
-        s"publishBucketed($tbl): $lock exists — the stage-then-swap is " +
-        "single-writer per table, and another maintenance run appears to be " +
-        "mid-publish. If no writer process is alive, this is a hard-crash " +
-        "leftover: verify and delete the lock file, then rerun.")
-    try {
-      // Reclaim a prior crash's garbage while holding the lock: a leftover
-      // stage table's directory, plus any superseded `<stem>_g*` generation
-      // a crash between rename and delete orphaned.
-      val staleStage =
-        if (s.catalog.tableExists(s"${tbl}_stage"))
-          Some(new org.apache.hadoop.fs.Path(storeMeta(s)(
-            org.apache.spark.sql.catalyst.TableIdentifier(s"${tbl}_stage")).location))
-        else None
+        s"$who: $lock exists — the store lifecycle is single-writer per " +
+        "table, and another maintenance run appears to be mid-publish. If no " +
+        "writer process is alive, this is a hard-crash leftover: verify and " +
+        "delete the lock file, then rerun.")
+    try body
+    finally {
+      if (!StoreFs.deleteQuietly(fs, lock) && fs.exists(lock))
+        System.err.println(s"[graft] $who: failed to delete swap lock " +
+          s"${lock.getName} — the next publish will refuse to start until it " +
+          "is removed (this was an unlock I/O failure, not a crash)")
+    }
+  }
+
+  /** Delete every `<stem>_g*` generation directory in `parent` except
+    * `keep`: crash leftovers (a partial or uncommitted generation) and
+    * superseded generations alike. Outcomes are reported (ADVICE r16 low):
+    * a delete that silently fails every publish is unreclaimed disk growing
+    * without bound. A failed delete is NOT fatal — the directory is
+    * garbage, and the next publish retries it. */
+  private def sweepGenerations(fs: org.apache.hadoop.fs.FileSystem,
+                               parent: org.apache.hadoop.fs.Path, stem: String,
+                               keep: org.apache.hadoop.fs.Path, who: String): Unit = {
+    val gen = java.util.regex.Pattern.compile(
+      java.util.regex.Pattern.quote(stem) + GenSuffixRe)
+    val keepQ = fs.makeQualified(keep)
+    val stale = StoreFs.listDirs(fs, parent).map(_.getPath)
+      .filter(p => gen.matcher(p.getName).matches() && fs.makeQualified(p) != keepQ)
+    val failed = stale.filterNot(StoreFs.deleteQuietly(fs, _))
+    if (failed.nonEmpty)
+      System.err.println(s"[graft] $who: failed to delete superseded generation(s) " +
+        s"${failed.map(_.getName).mkString(",")} — the next publish's sweep retries them")
+  }
+
+  /** Crash-safe full rewrite of a bucketed label table (VERDICT r13 next
+    * #2; the commit follows the Delta Lake log, Armbrust et al., VLDB
+    * 2020): the live catalog name never disappears and never names a
+    * partial copy. One path, under the single-writer lock
+    * ([[withSwapLock]]):
+    *   1. sweep orphans — a leftover `<tbl>_stage` registration and every
+    *      `<stem>_g*` directory but the live one;
+    *   2. write the rewrite to a fresh `<stem>_g<nanos>` generation with
+    *      `saveAsTable("<tbl>_stage")` (the only bucketed writer Spark
+    *      has), then drop that registration at once — the table is
+    *      external, so its files stay;
+    *   3. PUT `<stem>.manifest` naming the new generation: THE COMMIT;
+    *   4. `ALTER TABLE <tbl> SET LOCATION '<gen>'` — keeps the table's
+    *      bucket spec and properties ([[StemProp]]), re-points its reads;
+    *   5. delete the superseded generation (the same sweep).
+    * A crash before 3 leaves the live table untouched and an uncommitted
+    * directory the next publish sweeps; a crash between 3 and 4 leaves the
+    * catalog one generation behind the manifest, which [[recoverSwap]] —
+    * run by every maintenance entry and registered read path — re-points;
+    * a crash after 4 leaves a superseded directory for the next sweep.
+    * Generation directories derive from a STABLE stem (ADVICE r14 medium),
+    * so the path length stays constant however many publishes run. All
+    * file-layer operations route through the Hadoop `FileSystem` API
+    * ([[StoreFs]]); on S3 the lock's create-no-overwrite is not atomic, so
+    * single-writer there must come from the scheduler (one maintenance
+    * process per store, as [[compactStore]] already requires). Bucket
+    * width honors the live table's own catalog spec (the [[appendNovel]]
+    * convention). */
+  private[graft] def publishBucketed(s: SparkSession, tbl: String, bucketCol: String,
+                                     defaultBuckets: Int, df: DataFrame): Unit = {
+    // A prior writer may have crashed between its manifest PUT and its SET
+    // LOCATION — reconcile FIRST, so the sweep keeps the committed
+    // generation, not the one the catalog still names.
+    recoverSwap(s, tbl)
+    val meta = storeMeta(s)(org.apache.spark.sql.catalyst.TableIdentifier(tbl))
+    val w = meta.bucketSpec.map(_.numBuckets).getOrElse(defaultBuckets)
+    val live = new org.apache.hadoop.fs.Path(meta.location)
+    val stem = stemOf(tbl, meta)
+    val parent = live.getParent
+    val fs = StoreFs.fs(s, live)
+    val who = s"publishBucketed($tbl)"
+    withSwapLock(fs, parent, stem, who) {
       s.sql(s"DROP TABLE IF EXISTS ${tbl}_stage")
-      staleStage.foreach(StoreFs.deleteQuietly(fs, _))
-      val gen = java.util.regex.Pattern.compile(
-        java.util.regex.Pattern.quote(stem) + GenSuffixRe)
-      // Orphan-sweep outcomes are counted and reported (ADVICE r16 low): a
-      // deleteQuietly that silently fails every publish is unreclaimed disk
-      // growing without bound — say so, so an operator sees it before df -h
-      // does. A failed sweep is NOT fatal: the orphan is garbage, the next
-      // publish retries it.
-      val oldQ = fs.makeQualified(oldLoc)
-      val orphans = StoreFs.listDirs(fs, parent)
-        .filter(st => gen.matcher(st.getPath.getName).matches() &&
-          fs.makeQualified(st.getPath) != oldQ)
-      val failed = orphans.filterNot(st => StoreFs.deleteQuietly(fs, st.getPath))
-      if (orphans.nonEmpty)
-        System.err.println(s"[graft] publishBucketed($tbl): reclaimed " +
-          s"${orphans.length - failed.length} orphan generation(s)" +
-          (if (failed.isEmpty) ""
-           else s"; FAILED to delete ${failed.map(_.getPath.getName).mkString(",")} — will retry next publish"))
-      val stageLoc = new org.apache.hadoop.fs.Path(parent,
-        genDirName(stem, System.nanoTime())).toString
+      sweepGenerations(fs, parent, stem, live, who)
+      val gen = new org.apache.hadoop.fs.Path(parent, genDirName(stem, System.nanoTime()))
       df.repartition(w, col(bucketCol))
         .write.bucketBy(w, bucketCol).sortBy(bucketCol)
-        .option("path", stageLoc).mode("overwrite").saveAsTable(s"${tbl}_stage")
-      // Record the stem on the generation that is about to go live (ADVICE
-      // r16 low): every later publish and every recovery reads it back
-      // instead of re-parsing the directory name, so the stem can never
-      // drift even if the name heuristic and reality disagree.
-      s.sql(s"ALTER TABLE ${tbl}_stage SET TBLPROPERTIES ('$StemProp'='$stem')")
-      SwapHooks.afterStageWrite()
-      // Re-touch the lock so its freshness window counts from the start of
-      // the drop→rename critical section (milliseconds long), not from the
-      // start of a stage write that legitimately takes minutes at scale —
-      // otherwise a slow write could age the lock past [[swapLockFreshMs]]
-      // and a concurrent reader's recovery would adjudicate a LIVE publish
-      // as a crash.
-      StoreFs.touch(fs, lock)
-      // THE COMMIT POINT (VERDICT r19 next #2): one atomic single-object
-      // replace of `<stem>.manifest` with the staged generation's name —
-      // the last write of the new generation's data+commit sequence. From
-      // here the swap is durable on any store with atomic object PUTs
-      // (incl. S3); the catalog ops below republish it and collect
-      // garbage, and any crash between here and their completion is healed
-      // by [[recoverSwap]] from the manifest.
-      StoreFs.writeAtomic(fs, manifestPath(parent, stem),
-        new org.apache.hadoop.fs.Path(stageLoc).getName)
-      SwapHooks.afterManifestPut()
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      SwapHooks.afterDrop()
-      try s.sql(s"ALTER TABLE ${tbl}_stage RENAME TO $tbl")
-      catch {
-        // The rename race (ADVICE r16 medium): a concurrent reader that
-        // adjudicated our lock stale (clock skew, a pathologically long GC
-        // pause between touch and drop) can complete the swap between our
-        // drop and our rename. Whoever loses sees NoSuchTable/
-        // TableAlreadyExists — but the swap COMMITTED: the live table
-        // exists and is the generation we staged. That is this publish
-        // succeeding, not failing.
-        case e: Throwable if s.catalog.tableExists(tbl) =>
-          System.err.println(s"[graft] publishBucketed($tbl): rename lost a " +
-            s"recovery race but the swap committed (${e.getClass.getSimpleName})")
-      }
-      SwapHooks.afterRename()
-      // A crash here (rename committed, superseded generation not yet
-      // deleted) strands oldLoc with no catalog reference and no stage
-      // table — only the NEXT publish's orphan sweep reclaims it, which is
-      // why day-0 builds are generation-suffixed too ([[day0Location]]): a
-      // bare-stem day-0 in this window leaked forever.
-      if (!StoreFs.deleteQuietly(fs, oldLoc) && fs.exists(oldLoc))
-        System.err.println(s"[graft] publishBucketed($tbl): failed to delete " +
-          s"superseded generation ${oldLoc.getName} — the next publish's orphan sweep retries it")
-    } finally {
-      // A failed unlock must not be silent (ADVICE r19 low): the NEXT
-      // publish would fail with the "hard-crash leftover" message,
-      // misdiagnosing a live-process I/O failure as a crash — mirror the
-      // superseded-generation message so the operator sees the real cause.
-      if (!StoreFs.deleteQuietly(fs, lock) && fs.exists(lock))
-        System.err.println(s"[graft] publishBucketed($tbl): failed to delete " +
-          s"swap lock ${lock.getName} — the next publish will refuse to start " +
-          "until it is removed (this was an unlock I/O failure, not a crash)")
+        .option("path", gen.toString).mode("overwrite").saveAsTable(s"${tbl}_stage")
+      s.sql(s"DROP TABLE ${tbl}_stage")
+      StoreFs.writeAtomic(fs, manifestPath(parent, stem), gen.getName)
+      s.sql(s"ALTER TABLE $tbl SET LOCATION '$gen'")
+      sweepGenerations(fs, parent, stem, gen, who)
     }
   }
 
@@ -782,35 +667,29 @@ object TextOps {
   private[graft] val MaintCompactFilesPerBucket = 3
 
   /** Table property recording a store's generation-name stem — written by
-    * [[publishBucketed]] on every generation it stages, read back by later
-    * publishes and by [[recoverSwap]] so the stem NEVER depends on parsing
-    * a directory name after the first publish. */
+    * [[commitDay0]] on the day-0 generation and kept by every later
+    * `SET LOCATION`, read back by [[publishBucketed]], [[publishLabelDelta]]
+    * and [[recoverSwap]] so the stem NEVER depends on parsing a directory
+    * name. */
   private[graft] val StemProp = "graft.stem"
 
-  /** Our generation directories are `<stem>_g<System.nanoTime()>`. The
-    * name-parsing FALLBACK (first publish of a store created before the
-    * [[StemProp]] property existed, or by code outside this module) must
-    * strip exactly our suffixes and nothing else: `_g\d+` also matched a
-    * user-chosen base name like `labels_g2` (ADVICE r16 low), mangling its
-    * stem to `labels` — and two distinct stores whose names collide
-    * post-strip would sweep each other's LIVE generations as orphans.
-    * nanoTime values on any box up more than ~20 minutes are ≥ 13 digits,
-    * and a human-chosen name ending in 13+ digits after `_g` is not a
-    * plausible collision, so require ≥ 13.
-    *
-    * MIGRATION NOTE (ADVICE r17 low): generations written by pre-r17 code
-    * used UNPADDED nanoTime, which has < 13 digits on a box up less than
-    * ~2.8 hours. A store published by that code on such a box, carried
-    * forward without a [[StemProp]] property, would parse its stem as the
-    * full `<stem>_g<short>` dir name on its first post-upgrade publish and
-    * never reclaim its old short-suffix orphans. This container's stores
-    * are session-scoped temp directories (rebuilt every JVM, never carried
-    * across code versions), so no such store can exist here; a deployment
-    * upgrading long-lived stores should set [[StemProp]] on them once
-    * (ALTER TABLE ... SET TBLPROPERTIES) as the migration step. */
+  /** The [[StemProp]] of label table `tbl`. A table without it was not
+    * sealed by [[commitDay0]], so its generation directories, manifest and
+    * lock have no name: fail loudly rather than guess one. */
+  private def stemOf(tbl: String,
+                     meta: org.apache.spark.sql.catalyst.catalog.CatalogTable): String =
+    meta.properties.getOrElse(StemProp, throw new IllegalStateException(
+      s"$tbl has no '$StemProp' table property — it was not built through " +
+      "commitDay0, so its generation stem is unknown"))
+
+  /** Our generation directories are `<stem>_g<System.nanoTime()>`, and the
+    * orphan sweep must match exactly those and nothing else: `_g\d+` also
+    * matched a user-chosen base name like `labels_g2` (ADVICE r16 low) —
+    * and a sibling store's directory swept as an orphan is lost data.
+    * [[genDirName]] zero-pads to 19 digits, and a human-chosen name ending
+    * in 13+ digits after `_g` is not a plausible collision, so require
+    * ≥ 13. */
   private[graft] val GenSuffixRe = "_g\\d{13,}"
-  private[graft] def storeStem(dirName: String): String =
-    dirName.replaceFirst(GenSuffixRe + "$", "")
 
   /** Generation directory name for `stem`: `<stem>_g<19-digit suffix>`.
     * Zero-padded to 19 digits so a generation name ALWAYS matches
@@ -823,150 +702,38 @@ object TextOps {
     * prevent (ADVICE r17 low) — so fold it into [0, Long.MaxValue) first.
     * floorMod keeps the within-boot monotonic ORDER of suffixes except
     * across the single wrap point, and nothing reads order from the name:
-    * liveness comes from the catalog, reclamation from set-difference. */
+    * liveness comes from the manifest, reclamation from set-difference. */
   private[graft] def genDirName(stem: String, nano: Long): String =
     f"${stem}_g${java.lang.Math.floorMod(nano, Long.MaxValue)}%019d"
 
-  /** Writer-liveness horizon for [[recoverSwap]]'s lock check: a
-    * `<stem>_swap.lock` whose mtime is younger than this is a LIVE publish
-    * ([[publishBucketed]] re-touches the lock right before its
-    * drop→rename critical section, which is milliseconds long), older is a
-    * hard-crash leftover. 10 minutes is ~5 orders of magnitude above the
-    * critical section and comfortably above any plausible GC pause.
-    * @volatile var, not val: the crash-window specs shrink it to exercise
-    * the stale branch without a wall-clock wait. */
-  @volatile private[graft] var swapLockFreshMs: Long = 10L * 60 * 1000
-
-  /** How long [[recoverSwap]] waits for a live publish's rename to land
-    * before giving up (test seam — see [[swapLockFreshMs]]). */
-  @volatile private[graft] var swapRecoverWaitMs: Long = 10L * 1000
-
-  /** Complete a [[publishBucketed]] swap a crash interrupted between drop
-    * and rename: the live name is gone but the staged generation is
-    * complete — rename it in. A no-op whenever `tbl` exists (any other
-    * crash point).
-    *
-    * LOCK-AWARE (ADVICE r16 medium): the same observable state — live name
-    * absent, staged generation present — also occurs INSIDE a healthy
-    * publish's drop→rename window, and a reader's recovery stealing that
-    * rename made the writer (or a second racing reader) throw spuriously.
-    * Disambiguate via the swap lock: a FRESH lock (see [[swapLockFreshMs]])
-    * means a live writer owns the swap — do not rename; wait briefly for
-    * the writer's own rename to land instead. A stale or absent lock means
-    * a crash — complete the swap, tolerate losing the rename to a
-    * concurrent recovery (whoever loses re-checks `tableExists`, and a live
-    * table is success regardless of which session's ALTER committed it),
-    * and delete the stale lock so the next publish needs no manual cleanup.
-    *
-    * READ-LATENCY NOTE (VERDICT r17): the fresh-lock path can block the
-    * calling READ for up to [[swapRecoverWaitMs]] (10 s) while a live
-    * writer finishes its swap — the correct alternative to stealing the
-    * rename, but a tail-latency spike a latency-sensitive reader tuning
-    * these constants should know about. The window only opens when a read
-    * lands exactly inside a publish's milliseconds-long drop→rename
-    * critical section; steady-state reads never enter it. */
-  private[graft] def recoverSwap(s: SparkSession, tbl: String): Unit =
-    if (s.catalog.tableExists(s"${tbl}_stage")) {
-      val stageMeta = storeMeta(s)(
-        org.apache.spark.sql.catalyst.TableIdentifier(s"${tbl}_stage"))
-      val stageDir = new org.apache.hadoop.fs.Path(stageMeta.location)
-      val stem = stageMeta.properties.getOrElse(StemProp, storeStem(stageDir.getName))
-      val lock = new org.apache.hadoop.fs.Path(stageDir.getParent, s"${stem}_swap.lock")
-      val fs = StoreFs.fs(s, lock)
-      // MANIFEST-COMMITTED stage (VERDICT r19 next #2): the writer's
-      // atomic `<stem>.manifest` PUT named this staged generation as live
-      // before it crashed — whether or not the catalog drop happened yet.
-      // A short/garbled read (the documented HDFS create-overwrite sliver)
-      // simply fails the name match and reads as "not committed".
-      val committed = StoreFs.readSmall(fs, manifestPath(stageDir.getParent, stem))
-        .map(_.trim).contains(stageDir.getName) && fs.exists(stageDir)
-      val liveExists = s.catalog.tableExists(tbl)
-      // Reconcile when the catalog lags the commit point: either the live
-      // name is gone (the classic drop→rename window — recover regardless
-      // of manifest, preserving pre-manifest semantics: the complete stage
-      // is the only candidate copy), or the live name still points at the
-      // generation the manifest has superseded. A live table plus an
-      // UNcommitted stage is a mid-publish (or abandoned) stage — never
-      // steal it.
-      if (!liveExists || committed) {
-        // mtime is 0 when the lock vanished between exists and stat
-        // — that reads as stale, i.e. recover, which is right: no lock, no
-        // live writer.
-        if (System.currentTimeMillis() - StoreFs.mtime(fs, lock) < swapLockFreshMs) {
-          // A LIVE writer owns the swap. If the live table still serves
-          // (manifest→drop window) there is nothing to wait for — the old
-          // generation is complete and consistent; only the neither-table
-          // window blocks the read.
-          if (!liveExists) {
-            val deadline = System.nanoTime() + swapRecoverWaitMs * 1000000L
-            while (!s.catalog.tableExists(tbl) && System.nanoTime() < deadline)
-              Thread.sleep(50)
-            if (!s.catalog.tableExists(tbl))
-              System.err.println(s"[graft] recoverSwap($tbl): fresh ${lock.getName} " +
-                s"held and $tbl still absent after ${swapRecoverWaitMs}ms — a live " +
-                "publish appears mid-swap; NOT stealing its rename. If the writer " +
-                "is actually dead, delete the lock and rerun.")
-          }
-        } else {
-          // The crashed writer's undone catalog drop (manifest→drop
-          // window): the manifest committed the staged generation, so the
-          // stale live name must yield to it. Capture its location first —
-          // the superseded generation's directory is deleted below rather
-          // than left to the orphan sweep: day-0 directories are suffixed
-          // since r20 ([[day0Location]]), but a legacy bare-stem day-0
-          // carried no `_g` suffix and the sweep's regex can never see it.
-          val superseded = if (liveExists) Some(new org.apache.hadoop.fs.Path(
-            storeMeta(s)(org.apache.spark.sql.catalyst.TableIdentifier(tbl)).location))
-          else None
-          if (liveExists) s.sql(s"DROP TABLE IF EXISTS $tbl")
-          try s.sql(s"ALTER TABLE ${tbl}_stage RENAME TO $tbl")
-          catch {
-            // Lost the rename to a concurrent recovery (or a writer we
-            // misjudged stale) — live table = the swap committed.
-            case e: Throwable if s.catalog.tableExists(tbl) =>
-              System.err.println(s"[graft] recoverSwap($tbl): rename lost a race " +
-                s"but the swap committed (${e.getClass.getSimpleName})")
-          }
-          // Heal the manifest forward for a legacy (pre-manifest) store
-          // recovered through the classic window, so every later read can
-          // resolve the live generation without the catalog.
-          if (!committed && s.catalog.tableExists(tbl))
-            StoreFs.writeAtomic(fs, manifestPath(stageDir.getParent, stem),
-              new org.apache.hadoop.fs.Path(storeMeta(s)(
-                org.apache.spark.sql.catalyst.TableIdentifier(tbl)).location).getName)
-          // Retire the superseded generation once the rename committed —
-          // the crashed publish never reached its own delete ([[
-          // publishBucketed]]'s post-swap step); a failure here is garbage
-          // the next publish's sweep retries, except a legacy suffix-less
-          // day-0 directory, which only this path can reclaim.
-          superseded.filter(p => s.catalog.tableExists(tbl) &&
-              fs.makeQualified(p) != fs.makeQualified(stageDir))
-            .foreach { p =>
-              if (!StoreFs.deleteQuietly(fs, p) && fs.exists(p))
-                System.err.println(s"[graft] recoverSwap($tbl): failed to delete " +
-                  s"superseded generation ${p.getName}")
-            }
-          // The stale lock itself is the crashed writer's last leftover
-          // (ADVICE r17 low): leaving it wedged every subsequent
-          // publishBucketed at Files.createFile until an operator deleted it
-          // by hand — the data recovered automatically but the store stayed
-          // unwritable. Having already ACTED on the "writer is dead"
-          // adjudication by renaming its stage, deleting the lock adds no new
-          // risk — but re-check staleness at the deletion instant: between
-          // our adjudication and now, a NEW publish could have started (after
-          // a concurrent recovery deleted the old lock first), and its FRESH
-          // lock must not be swept.
-          val m = StoreFs.mtime(fs, lock)
-          if (m > 0 && System.currentTimeMillis() - m >= swapLockFreshMs)
-            StoreFs.deleteQuietly(fs, lock)
-        }
-      }
-    }
+  /** Re-point label table `tbl` at the generation its manifest committed,
+    * when a [[publishBucketed]] crashed between its manifest PUT and its
+    * `SET LOCATION`: if `<stem>.manifest` names an EXISTING generation
+    * other than the catalog's location, `SET LOCATION` there. Job-free and
+    * listing-free (one small-file read), so every registered read path and
+    * maintenance entry runs it first thing. A missing, short or unreadable
+    * manifest ([[StoreFs.readSmall]]) leaves the catalog as it is. A reader
+    * racing a live publish inside the same window issues the same
+    * idempotent `SET LOCATION` the writer is about to — so readers never
+    * consult the writer's lock. The superseded generation is left to the
+    * next publish's sweep, which runs under the lock. */
+  private[graft] def recoverSwap(s: SparkSession, tbl: String): Unit = {
+    val meta = storeMeta(s)(org.apache.spark.sql.catalyst.TableIdentifier(tbl))
+    val live = new org.apache.hadoop.fs.Path(meta.location)
+    val fs = StoreFs.fs(s, live)
+    val stem = stemOf(tbl, meta)
+    StoreFs.readSmall(fs, manifestPath(live.getParent, stem)).map(_.trim)
+      .filter(n => n != live.getName &&
+        n.matches(java.util.regex.Pattern.quote(stem) + GenSuffixRe))
+      .map(new org.apache.hadoop.fs.Path(live.getParent, _))
+      .filter(fs.exists)
+      .foreach(gen => s.sql(s"ALTER TABLE $tbl SET LOCATION '$gen'"))
+  }
 
   // --------------------------------------------------------------------
   // Delta-proportional label publish (VERDICT r17 next #2). A cluster-label
   // table is cluster MEMBERSHIP — at sf100 the sig tier's ~5M rows — and
-  // the stage-then-swap rewrote ALL of it on every maintenance run, so a 1%
+  // the full rewrite ran on every maintenance run, so a 1%
   // batch paid ~1.2× the bare clustering query just to publish (82.3 vs
   // 67.9 s, PERF_NOTES r17 SigMaint). The fix is the lakehouse MERGE shape
   // done at the file layer, the same pattern as the append+compact store
@@ -985,9 +752,8 @@ object TextOps {
     * delta's size (the read-side broadcast) and its per-bucket file count
     * — a delta append is one file per bucket per run, the [[compactStore]]
     * accretion shape, and the fold IS its compaction. @volatile test seam:
-    * the crash-window specs (Round14/15/17Spec) set 1 to drive the
-    * stage-then-swap machinery through every maintenance run — the pre-r18
-    * behavior they were written against. */
+    * the publish specs (Round14/15/17Spec, the crash-point sweep) set 1 to
+    * drive [[publishBucketed]] through every maintenance run. */
   @volatile private[graft] var LabelFoldRuns: Int = 8
 
   /** Delta-size ceiling shared by the overlay's broadcast hint and the
@@ -1070,13 +836,15 @@ object TextOps {
     * Single-writer per store is the module-wide maintenance contract (one
     * scheduler-owned process per store — the [[compactStore]] /
     * [[publishBucketed]] requirement); the fold path additionally holds the
-    * swap lock inside [[publishBucketed]] itself. */
+    * swap lock inside [[publishBucketed]] itself. Every crash point of all
+    * three paths (day-0, delta append, fold) is swept by
+    * CrashPointSweepSpec. */
   private[graft] def publishLabelDelta(s: SparkSession, tbl: String, keyCol: String,
                                        defaultBuckets: Int, delta: DataFrame): Unit = {
     val meta = storeMeta(s)(org.apache.spark.sql.catalyst.TableIdentifier(tbl))
     val w = meta.bucketSpec.map(_.numBuckets).getOrElse(defaultBuckets)
     val baseLoc = new org.apache.hadoop.fs.Path(meta.location)
-    val stem = meta.properties.getOrElse(StemProp, storeStem(baseLoc.getName))
+    val stem = stemOf(tbl, meta)
     // `<stem>_delta` never matches [[GenSuffixRe]], so the generation
     // orphan sweep can never reclaim a live delta.
     val deltaLoc = new org.apache.hadoop.fs.Path(baseLoc.getParent, s"${stem}_delta")
@@ -1104,14 +872,18 @@ object TextOps {
     if (runs >= LabelFoldRuns || LabelFoldRuns <= 1 ||
         deltaBytes > BigInt(LabelDeltaMaxBytes)) {
       // Fold: the overlay becomes the next base generation via the
-      // crash-safe stage-then-swap, then the delta files retire. The stage
-      // write READS base + delta and writes a third location, so there is
-      // no self-read hazard; the superseded base generation is deleted only
-      // after the swap commits (publishBucketed's contract).
+      // manifest-committed [[publishBucketed]], then the delta files
+      // retire. The new generation's write READS base + delta and writes a
+      // third location, so there is no self-read hazard; the superseded
+      // base generation is deleted only after the commit.
       publishBucketed(s, tbl, keyCol, defaultBuckets, readLabels(s, tbl, keyCol))
       val fs = StoreFs.fs(s, deltaLoc)
-      StoreFs.listFiles(fs, deltaLoc).foreach(st => fs.delete(st.getPath, false))
-      s.catalog.refreshTable(dt)
+      // Refresh even when a delete fails: the session's cached listing
+      // would otherwise name the deleted files, and every later read of
+      // the overlay fails with FILE_NOT_EXIST (the crash-point sweep's
+      // find).
+      try StoreFs.listFiles(fs, deltaLoc).foreach(st => fs.delete(st.getPath, false))
+      finally s.catalog.refreshTable(dt)
     }
   }
 

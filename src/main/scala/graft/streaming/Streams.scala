@@ -324,26 +324,19 @@ object Streams {
     * build-time index metadata, read from its OWN table properties
     * ([[graft.ops.Similarity.embedStoreParams]] — ADVICE r12: a caller-
     * supplied default that disagreed with the build silently produced
-    * mismatched buckets). The optional `bands`/`bits` parameters exist for
-    * LEGACY stores only (hand-built or pre-r13, carrying no
-    * graft.bands/graft.bits properties — ADVICE r13: without the knob such
-    * a store silently fell back to 4/8, reintroducing the exact silent
-    * band-bucket mismatch this family of changes kills); against a store
-    * WITH properties they are validated for equality and a mismatch fails
-    * fast. Replay is idempotent for the same reason as the other store
+    * mismatched buckets); a store without those properties fails the
+    * batch. Replay is idempotent for the same reason as the other store
     * streams: a replayed batch's vectors are no longer novel.
     * `checkpoint` pins the offset WAL location across restarts. */
   def embedStoreDedup(vecs: DataFrame, base: String, threshold: Double = 0.40,
-                      checkpoint: Option[String] = None,
-                      bands: Int = -1, bits: Int = -1)
+                      checkpoint: Option[String] = None)
                      (onScreened: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val callerBands = bands; val callerBits = bits
     val w = vecs.writeStream
       .outputMode(OutputMode.Append())
       .foreachBatch { (raw: DataFrame, batchId: Long) =>
         val s = raw.sparkSession
         import graft.ops.Similarity
-        val (bands, bits) = Similarity.embedStoreParams(s, base, callerBands, callerBits)
+        val (bands, bits) = Similarity.embedStoreParams(s, base)
         val batch = raw.select(col("vec_id"), col("embedding")).localCheckpoint()
         val screened = Similarity
           .screenEmbedStore(s, base, batch, threshold, bands, bits).localCheckpoint()

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * no window, no union), and the merge edge cases. */
 class AsOfNativeSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = s"${SparkEntry.FixtureRoot}/sf0.001"
 
   test("native as-of join equals the composed union+window as-of join") {
     val composed = ops.AsOf.purchaseAsofSignup(spark, sf).collect().toSeq

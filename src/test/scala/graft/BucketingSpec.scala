@@ -24,7 +24,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class BucketingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = s"${SparkEntry.FixtureRoot}/sf0.001"
 
   test("bucketed fact-fact join: zero exchanges, zero sorts in the join plan") {
     Tables(spark, sf, "orders")

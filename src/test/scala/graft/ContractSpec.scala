@@ -42,7 +42,7 @@ class ContractSpec extends AnyFunSuite {
     // .limit(1).collect() forces real execution — runtime-only failures
     // (ANSI overflow, codegen errors) don't show up at analysis time.
     SparkEntry.queries.foreach { case (name, fn) =>
-      val df = fn(spark, "/root/testdata/sf0.001")
+      val df = fn(spark, s"${SparkEntry.FixtureRoot}/sf0.001")
       assert(df.schema.nonEmpty, s"$name produced an empty schema")
       try df.limit(1).collect()
       catch { case e: Throwable => fail(s"$name failed at runtime: ${e.getMessage}") }

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * DuckDB oracle's job; these pin the MEANING of each statistic. */
 class CorpusOpsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = s"${SparkEntry.FixtureRoot}/sf0.001"
 
   private val plantedDirs = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
 

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * away. Static (pre-AQE) plan text only — no execution-order flake. */
 class PlanSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val d = "/root/testdata/sf0.001"
+  private val d = s"${SparkEntry.FixtureRoot}/sf0.001"
 
   private def plan(q: String): String =
     SparkEntry.queries(q)(spark, d).queryExecution.explainString(FormattedMode)

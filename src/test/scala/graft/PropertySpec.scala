@@ -78,7 +78,7 @@ class PropertySpec extends AnyFunSuite {
   }
 
   test("hash split partitions the corpus: every doc in exactly one split; sample ⊆ corpus") {
-    val d = "/root/testdata/sf0.001"
+    val d = s"${SparkEntry.FixtureRoot}/sf0.001"
     val total = graft.Tables(spark, d, "documents").count()
     val splitCnt = graft.ops.TextOps.trainSplit(spark, d)
       .collect().map(_.getAs[Long]("cnt")).sum

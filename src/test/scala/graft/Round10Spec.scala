@@ -13,7 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * Exchange-free AND Sort-free on the store side. */
 class Round10Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = s"${SparkEntry.FixtureRoot}/sf0.001"
 
   /** The Round8Spec probe-plan recipe: forced sort-merge anti-join, AQE
     * off, reader trusting write-time bucket order where layout allows. */

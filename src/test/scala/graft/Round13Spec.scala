@@ -142,6 +142,15 @@ class Round13Spec extends AnyFunSuite {
         ops.Similarity.screenEmbedStore(spark, base, day1, 0.9, bands = 4, bits = 8).collect()
       }
       assert(e.getMessage.contains("bits"))
+      // A store without the properties (hand-built, or older code) has no
+      // known geometry: it must fail, naming the store and what is missing,
+      // instead of screening against a guessed 4/8.
+      spark.sql(s"ALTER TABLE ${base}_ebands UNSET TBLPROPERTIES ('graft.bands', 'graft.bits')")
+      val legacy = intercept[IllegalArgumentException] {
+        ops.Similarity.screenEmbedStore(spark, base, day1, threshold = 0.9).collect()
+      }
+      assert(legacy.getMessage.contains(base) && legacy.getMessage.contains("graft.bands") &&
+        legacy.getMessage.contains("graft.bits"), legacy.getMessage)
     } finally {
       Seq("_ebands", "_evecs").foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $base$sfx"))
       org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)

@@ -14,16 +14,14 @@ import org.scalatest.funsuite.AnyFunSuite
   *     append must be HEALED on replay — the half-committed vector gets its
   *     band rows re-driven instead of becoming permanently invisible to
   *     candidate generation.
-  *  2. Crash-safe `_elabels` publish (VERDICT r13 next #2): stage-then-swap
-  *     replaces drop-then-overwrite; every crash window leaves a complete
-  *     readable label copy, and the drop→rename window is recoverable via
-  *     [[ops.Similarity.recoverLabelSwap]].
+  *  2. Crash-safe `_elabels` publish (VERDICT r13 next #2): the rewrite
+  *     lands in a fresh generation before the live table moves — pinned at
+  *     every crash point by CrashPointSweepSpec.
   *  3. storeNearDedup replay recovery (VERDICT r13 next #3): the last
   *     streaming-store tier gains a checkpoint parameter and the same
   *     commit-marker-deletion restart pin as the other three.
-  *  4. embedStoreDedup legacy-store knobs (ADVICE r13 low): optional
-  *     bands/bits reach embedStoreParams, so a property-less store can be
-  *     screened with its true build constants instead of a silent 4/8.
+  *  4. A property-less embed store fails instead of screening with a
+  *     silent 4/8 (ADVICE r13 low) — pinned in Round13Spec.
   *  5. IVF probe replay invariance (VERDICT r13 next #5): the REGISTERED
   *     probe's top-k is identical before and after a crash-replayed
   *     ivfIngest batch — no test-side distinct.
@@ -32,10 +30,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *     (VERDICT r13 next #6).
   */
 class Round14Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
-  // These suites exercise the label PUBLISH machinery (stage-then-swap crash
-  // windows, locks, generations) through the maintenance entry points. Since
-  // r18 the per-run publish is a delta APPEND that only folds through the
-  // stage-then-swap every [[ops.TextOps.LabelFoldRuns]] runs — cadence 1
+  // These suites exercise the label PUBLISH machinery (generations, the
+  // lock, the manifest commit) through the maintenance entry points. Since
+  // r18 the per-run publish is a delta APPEND that only folds through
+  // [[ops.TextOps.publishBucketed]] every [[ops.TextOps.LabelFoldRuns]] runs — cadence 1
   // reproduces the fold-every-run behavior these scenarios were written
   // against. Round18Spec covers the delta path at the production cadence.
   private val savedFoldRuns = ops.TextOps.LabelFoldRuns
@@ -141,61 +139,6 @@ class Round14Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   // ------------------------------------------------------------------
-  // 2. Crash-safe label publish.
-  // ------------------------------------------------------------------
-
-  test("label publish crash before the swap: the live label table survives intact and a rerun converges") {
-    val base = s"graft_r14_swap_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r14_swap_")
-    try {
-      ops.Similarity.buildEmbedClusterStore(spark, base, dir.toString, day0, threshold = 0.9)
-      val day0Labels = labelsOf(s"${base}_elabels")
-      ops.Similarity.LabelSwapHooks.afterStageWrite =
-        () => throw new RuntimeException("injected crash after stage write")
-      try intercept[RuntimeException] {
-        ops.Similarity.maintainEmbedClusterStore(spark, base, day1, threshold = 0.9)
-      } finally ops.Similarity.LabelSwapHooks.reset()
-      // The staged generation is complete on disk, but the LIVE table was
-      // never touched — the unrecoverable r13 window (drop before the new
-      // copy existed) is gone.
-      assert(labelsOf(s"${base}_elabels") == day0Labels,
-        "a crash before the swap must leave the old labels readable")
-      ops.Similarity.maintainEmbedClusterStore(spark, base, day1, threshold = 0.9)
-      assert(labelsOf(s"${base}_elabels") == day1Want, "the rerun must converge")
-    } finally {
-      dropEmbedTables(base)
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    }
-  }
-
-  test("label publish crash between drop and rename: the staged copy is complete and recoverLabelSwap finishes the swap") {
-    val base = s"graft_r14_mid_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r14_mid_")
-    try {
-      ops.Similarity.buildEmbedClusterStore(spark, base, dir.toString, day0, threshold = 0.9)
-      ops.Similarity.LabelSwapHooks.afterDrop =
-        () => throw new RuntimeException("injected crash between drop and rename")
-      try intercept[RuntimeException] {
-        ops.Similarity.maintainEmbedClusterStore(spark, base, day1, threshold = 0.9)
-      } finally ops.Similarity.LabelSwapHooks.reset()
-      assert(!spark.catalog.tableExists(s"${base}_elabels"))
-      assert(spark.catalog.tableExists(s"${base}_elabels_stage"),
-        "the staged generation must survive the crash")
-      ops.Similarity.recoverLabelSwap(spark, base)
-      assert(labelsOf(s"${base}_elabels") == day1Want,
-        "recovery must surface the fully-merged staged labels")
-      // And it is what maintenance itself runs first: a replayed batch on
-      // top of the recovered table stays at the fixed point.
-      ops.Similarity.maintainEmbedClusterStore(spark, base, day1, threshold = 0.9)
-      assert(labelsOf(s"${base}_elabels") == day1Want)
-      assert(!spark.catalog.tableExists(s"${base}_elabels_stage"))
-    } finally {
-      dropEmbedTables(base)
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    }
-  }
-
-  // ------------------------------------------------------------------
   // 3. storeNearDedup replay recovery — the streaming 2×2 completes.
   // ------------------------------------------------------------------
 
@@ -246,44 +189,6 @@ class Round14Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     assert(storeRows() == before, "replay must not duplicate sig-store rows")
 
     Seq("_bands", "_toks").foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $base$sfx"))
-    org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
-  }
-
-  // ------------------------------------------------------------------
-  // 4. embedStoreDedup legacy-store knobs.
-  // ------------------------------------------------------------------
-
-  test("embedStoreDedup on a property-less legacy store honors explicit bands/bits instead of a silent 4/8") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-
-    val base = s"graft_r14_legacy_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r14_legacy_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_r14_lckpt_").toString
-    // Build at a non-default width, then strip the metadata — exactly what
-    // a hand-built or pre-r13 store looks like.
-    ops.Similarity.buildEmbedBandStore(spark, base, dir.toString, day0, bands = 4, bits = 6)
-    spark.sql(s"ALTER TABLE ${base}_ebands UNSET TBLPROPERTIES ('graft.bands', 'graft.bits')")
-
-    val verdicts = mutable.ArrayBuffer.empty[Map[Long, Boolean]]
-    val stream = MemoryStream[StreamVec]
-    val q1 = streaming.Streams.embedStoreDedup(
-      stream.toDF(), base, 0.9, Some(ckpt), bands = 4, bits = 6) { (scr, _) =>
-      verdicts.synchronized {
-        verdicts += scr.collect().map(r => r.getLong(0) -> r.getBoolean(3)).toMap
-      }
-    }
-    try {
-      stream.addData(StreamVec(21, vec(P1, (T, 0f), 0.002f)))
-      q1.processAllAvailable()
-    } finally q1.stop()
-    // 21 near-dups stored cluster A — detectable only when the screen uses
-    // the build-time 6-bit buckets the caller supplied.
-    assert(verdicts.synchronized(verdicts.head) == Map(21L -> false),
-      "explicit build constants must reach the screen on a legacy store")
-
-    Seq("_ebands", "_evecs").foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $base$sfx"))
     org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(ckpt))
   }
@@ -461,30 +366,8 @@ class Round14Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     }
   }
 
-  test("sig label publish rides the shared crash-safe swap: a crash between drop and rename is recoverable") {
-    val base = s"graft_r14_scls_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r14_scls_")
-    try {
-      ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
-      ops.TextOps.SwapHooks.afterDrop =
-        () => throw new RuntimeException("injected crash between drop and rename")
-      try intercept[RuntimeException] {
-        ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
-      } finally ops.TextOps.SwapHooks.reset()
-      assert(!spark.catalog.tableExists(s"${base}_labels"))
-      assert(spark.catalog.tableExists(s"${base}_labels_stage"))
-      // Maintenance itself recovers the half-committed swap on entry.
-      ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
-      assert(labelsOf(s"${base}_labels") == sigDay1Want)
-      assert(!spark.catalog.tableExists(s"${base}_labels_stage"))
-    } finally {
-      dropSigTables(base)
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    }
-  }
-
   test("registered q_dedup_clusters_store equals from-scratch q_dedup_clusters on real data") {
-    val d = "/root/testdata/sf0.001"
+    val d = s"${SparkEntry.FixtureRoot}/sf0.001"
     val maintained = ops.Dedup.dedupClustersStore(spark, d)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val scratch = ops.Dedup.dedupClusters(spark, d)
@@ -496,7 +379,7 @@ class Round14Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("q_map_agg emits a deterministic MapType: sorted keys, to_json rendering matches the oracle's JSON construction") {
     import org.apache.spark.sql.types.MapType
-    val df = ops.Extended.mapAgg(spark, "/root/testdata/sf0.001")
+    val df = ops.Extended.mapAgg(spark, s"${SparkEntry.FixtureRoot}/sf0.001")
     assert(df.schema("type_counts").dataType.isInstanceOf[MapType],
       "the registered query must RETURN a map (Bench's checksum map branch rides on it)")
     val rendered = df.select(col("user_id"), to_json(col("type_counts")).as("j"))
@@ -509,7 +392,7 @@ class Round14Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     }
     // Run-to-run determinism of the rendering (collect_list order is
     // nondeterministic; the array_sort must fully pin it).
-    val again = ops.Extended.mapAgg(spark, "/root/testdata/sf0.001")
+    val again = ops.Extended.mapAgg(spark, s"${SparkEntry.FixtureRoot}/sf0.001")
       .select(col("user_id"), to_json(col("type_counts")).as("j"))
       .collect().map(r => r.getLong(0) -> r.getString(1))
     assert(rendered.toMap == again.toMap)

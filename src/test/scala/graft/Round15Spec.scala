@@ -6,28 +6,28 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-15: the VERDICT r14 worklist + ADVICE r14 flags.
   *
-  *  1. Registered read paths auto-recover a half-committed label swap
-  *     (VERDICT r14 next #3): a crash between drop and rename no longer
-  *     takes q_dedup_clusters_store / q_embed_clusters_store down until the
-  *     next maintenance run — the REGISTERED query recovers and reads the
-  *     completed staged labels.
+  *  1. Registered read paths reconcile a half-committed label rewrite
+  *     (VERDICT r14 next #3): after a crash between a fold's manifest PUT
+  *     and its SET LOCATION, q_dedup_clusters_store /
+  *     q_embed_clusters_store re-point the catalog at the committed
+  *     generation themselves, without waiting for a maintenance run.
   *  2. Compaction retires heal residue (VERDICT r14 next #4): the duplicate
   *     `_toks`/`_evecs` rows a re-driven append leaves behind are dropped
   *     during the per-bucket rewrite via [[ops.TextOps.compactStore]]'s
   *     `dedupKeys`; screens and labels are bit-identical after.
-  *  3. The stage-then-swap is fail-fast single-writer (VERDICT r14 next
-  *     #5): a second publish attempted mid-swap throws a descriptive error
-  *     instead of dropping the first writer's stage.
+  *  3. The rewrite is fail-fast single-writer (VERDICT r14 next #5): a
+  *     second publish attempted mid-swap throws a descriptive error
+  *     instead of sweeping the first writer's new generation.
   *  4. Generation directory names derive from a stable stem (ADVICE r14
   *     medium — `labels_g1_g2_g3...` compounding overflowed a 255-byte
   *     filename after ~10 runs), and superseded/orphaned generations are
   *     reclaimed (ADVICE r14 low) instead of leaking forever.
   */
 class Round15Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
-  // These suites exercise the label PUBLISH machinery (stage-then-swap crash
-  // windows, locks, generations) through the maintenance entry points. Since
-  // r18 the per-run publish is a delta APPEND that only folds through the
-  // stage-then-swap every [[ops.TextOps.LabelFoldRuns]] runs — cadence 1
+  // These suites exercise the label PUBLISH machinery (generations, the
+  // lock, the manifest commit) through the maintenance entry points. Since
+  // r18 the per-run publish is a delta APPEND that only folds through
+  // [[ops.TextOps.publishBucketed]] every [[ops.TextOps.LabelFoldRuns]] runs — cadence 1
   // reproduces the fold-every-run behavior these scenarios were written
   // against. Round18Spec covers the delta path at the production cadence.
   private val savedFoldRuns = ops.TextOps.LabelFoldRuns
@@ -36,7 +36,7 @@ class Round15Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   private lazy val spark = TestSpark.spark
   private val ctr = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = s"${SparkEntry.FixtureRoot}/sf0.001"
 
   private def labelsOf(tbl: String): Map[Long, Long] =
     spark.table(tbl).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -90,50 +90,67 @@ class Round15Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       spark.sql(s"DROP TABLE IF EXISTS $base$sfx"))
 
   // ------------------------------------------------------------------
-  // 1. Registered read paths recover the drop→rename crash themselves.
+  // 1. Registered read paths reconcile a catalog that lags the manifest.
   // ------------------------------------------------------------------
 
-  test("registered q_dedup_clusters_store survives a drop→rename label-swap crash without a maintenance run") {
+  private def liveLocation(tbl: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(tbl)).location)
+
+  /** Run `fold` (a maintenance run that folds), then leave the catalog
+    * where a crash between the fold's manifest PUT and its SET LOCATION
+    * leaves it: on the superseded generation, still complete on disk.
+    * Returns the generation the manifest committed. */
+  private def crashBeforeSetLocation(tbl: String)(fold: => Unit): String = {
+    val old = liveLocation(tbl)
+    val copy = java.nio.file.Files.createTempDirectory("graft_r15_gen_")
+    val oldDir = new java.io.File(old.toUri)
+    try {
+      org.apache.commons.io.FileUtils.copyDirectory(oldDir, copy.toFile)
+      fold
+      val committed = liveLocation(tbl).getName
+      assert(committed != old.getName, "fixture: the fold must commit a new generation")
+      org.apache.commons.io.FileUtils.copyDirectory(copy.toFile, oldDir)
+      spark.sql(s"ALTER TABLE $tbl SET LOCATION '$old'")
+      committed
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(copy.toFile)
+  }
+
+  test("registered q_dedup_clusters_store serves the manifest-committed generation after a crash before SET LOCATION") {
     val want = ops.Dedup.dedupClustersStore(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(want.nonEmpty)
     val base = ops.TextOps.canonStoreName(sf) + "_scl"
-    // Replay the registered odd-half batch (a label fixed point) and crash
-    // the publish between drop and rename.
+    // Replay the registered odd-half batch (a label fixed point); the fold
+    // commits, and the catalog is left one generation behind.
     val oddHalf = Tables(spark, sf, "documents")
       .filter(pmod(col("doc_id"), lit(2L)) === 1).select("doc_id", "text")
-    ops.TextOps.SwapHooks.afterDrop =
-      () => throw new RuntimeException("injected crash between drop and rename")
-    try intercept[RuntimeException] {
+    val committed = crashBeforeSetLocation(s"${base}_labels") {
       ops.Dedup.maintainSigClusterStore(spark, base, oddHalf)
-    } finally ops.TextOps.SwapHooks.reset()
-    assert(!spark.catalog.tableExists(s"${base}_labels"),
-      "fixture: the crash must land in the neither-table window")
-    // The REGISTERED query — not maintenance — must serve the merged labels.
+    }
+    // The REGISTERED query — not maintenance — must re-point the catalog.
     val got = ops.Dedup.dedupClustersStore(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(got == want, "the registered read path must auto-recover the swap")
-    assert(!spark.catalog.tableExists(s"${base}_labels_stage"))
+    assert(liveLocation(s"${base}_labels").getName == committed,
+      "the registered read path must re-point the catalog at the manifest's generation")
+    assert(got == want)
   }
 
-  test("registered q_embed_clusters_store survives a drop→rename label-swap crash without a maintenance run") {
+  test("registered q_embed_clusters_store serves the manifest-committed generation after a crash before SET LOCATION") {
     val want = ops.Similarity.embedClustersStore(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(want.nonEmpty)
     val base = ops.TextOps.canonStoreName(sf) + "_ecl"
     val oddHalf = Tables(spark, sf, "embeddings")
       .filter(pmod(col("vec_id"), lit(2L)) === 1).select("vec_id", "embedding")
-    ops.Similarity.LabelSwapHooks.afterDrop =
-      () => throw new RuntimeException("injected crash between drop and rename")
-    try intercept[RuntimeException] {
+    val committed = crashBeforeSetLocation(s"${base}_elabels") {
       ops.Similarity.maintainEmbedClusterStore(spark, base, oddHalf)
-    } finally ops.Similarity.LabelSwapHooks.reset()
-    assert(!spark.catalog.tableExists(s"${base}_elabels"),
-      "fixture: the crash must land in the neither-table window")
+    }
     val got = ops.Similarity.embedClustersStore(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    assert(got == want, "the registered read path must auto-recover the swap")
-    assert(!spark.catalog.tableExists(s"${base}_elabels_stage"))
+    assert(liveLocation(s"${base}_elabels").getName == committed,
+      "the registered read path must re-point the catalog at the manifest's generation")
+    assert(got == want)
   }
 
   // ------------------------------------------------------------------
@@ -207,7 +224,7 @@ class Round15Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   // ------------------------------------------------------------------
-  // 3. Fail-fast single-writer stage-swap.
+  // 3. Fail-fast single-writer publish.
   // ------------------------------------------------------------------
 
   test("a second publish attempted mid-swap fails fast with a descriptive error and cannot clobber the stage") {
@@ -215,23 +232,27 @@ class Round15Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     val dir = java.nio.file.Files.createTempDirectory("graft_r15_lock_")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
-      var nested: Option[IllegalStateException] = None
-      ops.TextOps.SwapHooks.afterStageWrite = () => {
-        nested = Some(intercept[IllegalStateException] {
-          ops.TextOps.publishBucketed(spark, s"${base}_labels", "doc_id", 8,
-            spark.table(s"${base}_labels"))
-        })
+      // Another writer is mid-publish: it holds the lock and has a new
+      // generation half-written next to the live one.
+      val fs = ops.StoreFs.fs(spark, new org.apache.hadoop.fs.Path(dir.toString))
+      val lock = new org.apache.hadoop.fs.Path(dir.toString, "labels_swap.lock")
+      assert(ops.StoreFs.createLockNoOverwrite(fs, lock))
+      val inFlight = new org.apache.hadoop.fs.Path(dir.toString,
+        ops.TextOps.genDirName("labels", System.nanoTime()))
+      assert(fs.mkdirs(inFlight))
+      val e = intercept[IllegalStateException] {
+        ops.TextOps.publishBucketed(spark, s"${base}_labels", "doc_id", 8,
+          spark.table(s"${base}_labels"))
       }
-      try ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
-      finally ops.TextOps.SwapHooks.reset()
-      assert(nested.isDefined, "the nested publish must have been attempted and rejected")
-      assert(nested.get.getMessage.contains("single-writer"),
-        s"the error must name the violated contract: ${nested.get.getMessage}")
-      // The outer publish completed untouched, and the lock was released.
-      assert(labelsOf(s"${base}_labels") == sigDay1Want)
+      assert(e.getMessage.contains("labels_swap.lock") && e.getMessage.contains("single-writer"),
+        s"the error must name the lock and the violated contract: ${e.getMessage}")
+      assert(fs.exists(inFlight), "the refused publish must not sweep the other writer's generation")
+      assert(fs.exists(lock), "the refused publish must not release a lock it does not own")
+      // Once the other writer is done, publishing proceeds and releases the lock.
+      assert(ops.StoreFs.deleteQuietly(fs, lock))
       ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
-      assert(labelsOf(s"${base}_labels") == sigDay1Want,
-        "the lock must be released after a completed publish")
+      assert(labelsOf(s"${base}_labels") == sigDay1Want)
+      assert(!fs.exists(lock), "the lock must be released after a completed publish")
     } finally {
       dropSigTables(base)
       org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
@@ -262,14 +283,11 @@ class Round15Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       assert(labelDirs() == Seq(live),
         s"superseded generations must be reclaimed: ${labelDirs()}")
 
-      // Orphan a stage (crash after the stage write), then verify the next
-      // run reclaims it rather than leaking it forever.
-      ops.TextOps.SwapHooks.afterStageWrite =
-        () => throw new RuntimeException("injected crash after stage write")
-      try intercept[RuntimeException] {
-        ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
-      } finally ops.TextOps.SwapHooks.reset()
-      assert(labelDirs().size == 2, "fixture: the crash must orphan one staged generation")
+      // Orphan a generation (what a crash after the new generation's write
+      // but before its manifest PUT leaves), then verify the next run
+      // reclaims it rather than leaking it forever.
+      new java.io.File(dir.toFile, ops.TextOps.genDirName("labels", System.nanoTime())).mkdir()
+      assert(labelDirs().size == 2, "fixture: one orphaned generation")
       ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
       assert(labelDirs().size == 1,
         s"the next publish must reclaim the orphaned stage: ${labelDirs()}")

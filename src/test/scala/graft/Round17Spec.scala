@@ -7,37 +7,25 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Round-17: the VERDICT r16 worklist + the ADVICE r16 medium/low flags on
   * the store-swap lifecycle.
   *
-  *  1. [[ops.TextOps.recoverSwap]] is LOCK-AWARE (ADVICE r16 medium): the
-  *     live-absent/stage-present state a recovery keys on also occurs
-  *     INSIDE a healthy publish's drop→rename window, and a reader stealing
-  *     that rename made the writer (or a second racing reader) throw
-  *     spuriously. A FRESH `<stem>_swap.lock` now means "live writer owns
-  *     the swap — do not rename"; a stale or absent lock means crash —
-  *     recover.
-  *  2. Whoever loses a rename race re-checks `tableExists` and treats a
-  *     live table as the swap having committed — no spurious throw from
-  *     either the writer's or a recoverer's ALTER.
-  *  3. The REGISTERED maintenance cadence retires heal residue (VERDICT r15
+  *  1. The REGISTERED maintenance cadence retires heal residue (VERDICT r15
   *     next #4): `compactStore(dedupKeys)` existed and was unit-tested but
   *     no registered path invoked it, so the duplicate `_toks`/`_evecs`
   *     rows a re-driven append tolerates lived forever. Day-N maintenance
   *     now compacts buckets past [[ops.TextOps.MaintCompactFilesPerBucket]]
   *     files and retires the duplicates as it rewrites.
-  *  4. Key-duplicate retirement refuses CONFLICTING payloads (ADVICE r16
+  *  2. Key-duplicate retirement refuses CONFLICTING payloads (ADVICE r16
   *     low): rows sharing a dedup key must be bit-identical copies (the
   *     only thing a re-driven heal can produce) — anything else fails the
   *     compaction loudly instead of discarding an arbitrary survivor.
-  *  5. Generation-name stems never mangle user names (ADVICE r16 low): the
-  *     stem is recorded as a table property at publish; the name-parsing
-  *     fallback only strips OUR ≥13-digit nanoTime suffixes, so a base dir
-  *     a user named `labels_g2` is not collapsed onto a sibling store's
-  *     stem (whose orphan sweep would then reclaim its live generation).
+  *  3. Generation-name stems never mangle user names (ADVICE r16 low): the
+  *     stem is recorded as a table property and never parsed back out of
+  *     a directory name.
   */
 class Round17Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
-  // These suites exercise the label PUBLISH machinery (stage-then-swap crash
-  // windows, locks, generations) through the maintenance entry points. Since
-  // r18 the per-run publish is a delta APPEND that only folds through the
-  // stage-then-swap every [[ops.TextOps.LabelFoldRuns]] runs — cadence 1
+  // These suites exercise the label PUBLISH machinery (generations, the
+  // lock, the manifest commit) through the maintenance entry points. Since
+  // r18 the per-run publish is a delta APPEND that only folds through
+  // [[ops.TextOps.publishBucketed]] every [[ops.TextOps.LabelFoldRuns]] runs — cadence 1
   // reproduces the fold-every-run behavior these scenarios were written
   // against. Round18Spec covers the delta path at the production cadence.
   private val savedFoldRuns = ops.TextOps.LabelFoldRuns
@@ -104,140 +92,8 @@ class Round17Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     Seq("_ebands", "_evecs", "_elabels", "_elabels_stage", "_elabels_delta").foreach(sfx =>
       spark.sql(s"DROP TABLE IF EXISTS $base$sfx"))
 
-  /** Crash a sig-label publish between drop and rename, leaving the
-    * neither-table window on disk (lock released — the injected crash is an
-    * exception, not a JVM death, so publishBucketed's finally runs). */
-  private def crashDropRename(base: String, batch: DataFrame): Unit = {
-    ops.TextOps.SwapHooks.afterDrop =
-      () => throw new RuntimeException("injected crash between drop and rename")
-    try intercept[RuntimeException] {
-      ops.Dedup.maintainSigClusterStore(spark, base, batch)
-    } finally ops.TextOps.SwapHooks.reset()
-    assert(!spark.catalog.tableExists(s"${base}_labels") &&
-      spark.catalog.tableExists(s"${base}_labels_stage"),
-      "fixture: the crash must land in the neither-table window")
-  }
-
   // ------------------------------------------------------------------
-  // 1. Lock-aware recovery.
-  // ------------------------------------------------------------------
-
-  test("recoverSwap under a FRESH swap lock does NOT steal the rename; stale lock recovers") {
-    val base = s"graft_r17_lock_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r17_lock_")
-    val savedWait = ops.TextOps.swapRecoverWaitMs
-    val savedFresh = ops.TextOps.swapLockFreshMs
-    try {
-      ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
-      crashDropRename(base, sigDay1)
-      // Simulate a LIVE concurrent writer: a fresh lock file (as if another
-      // process is inside its drop→rename window right now).
-      val lock = new java.io.File(dir.toString, "labels_swap.lock")
-      java.nio.file.Files.createFile(lock.toPath)
-      ops.TextOps.swapRecoverWaitMs = 200L
-      ops.TextOps.recoverSwap(spark, s"${base}_labels")
-      assert(!spark.catalog.tableExists(s"${base}_labels"),
-        "a fresh lock means a live publish owns the swap — recovery must not rename")
-      assert(spark.catalog.tableExists(s"${base}_labels_stage"),
-        "the staged generation must be left for the live writer")
-      // The same lock adjudicated STALE (writer hard-crashed): recover.
-      ops.TextOps.swapLockFreshMs = 1L
-      Thread.sleep(5)
-      ops.TextOps.recoverSwap(spark, s"${base}_labels")
-      assert(spark.catalog.tableExists(s"${base}_labels"),
-        "a stale lock is a crash leftover — recovery must complete the swap")
-      assert(!spark.catalog.tableExists(s"${base}_labels_stage"))
-      assert(labelsOf(s"${base}_labels") == sigDay1Want)
-      java.nio.file.Files.deleteIfExists(lock.toPath)
-    } finally {
-      ops.TextOps.swapRecoverWaitMs = savedWait
-      ops.TextOps.swapLockFreshMs = savedFresh
-      dropSigTables(base)
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    }
-  }
-
-  test("recoverSwap under a fresh lock waits for the live writer's rename and returns once it lands") {
-    val base = s"graft_r17_wait_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r17_wait_")
-    val savedWait = ops.TextOps.swapRecoverWaitMs
-    try {
-      ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
-      crashDropRename(base, sigDay1)
-      val lock = new java.io.File(dir.toString, "labels_swap.lock")
-      java.nio.file.Files.createFile(lock.toPath)
-      ops.TextOps.swapRecoverWaitMs = 5000L
-      // The "live writer" completes its rename 300 ms into the reader's wait.
-      val writer = new Thread(() => {
-        Thread.sleep(300)
-        spark.sql(s"ALTER TABLE ${base}_labels_stage RENAME TO ${base}_labels")
-        java.nio.file.Files.deleteIfExists(lock.toPath)
-      })
-      writer.start()
-      val t0 = System.nanoTime()
-      ops.TextOps.recoverSwap(spark, s"${base}_labels")
-      writer.join()
-      val waitedMs = (System.nanoTime() - t0) / 1000000L
-      assert(spark.catalog.tableExists(s"${base}_labels"))
-      assert(waitedMs < 4000L,
-        s"recovery must return as soon as the writer's rename lands, not burn the full wait: ${waitedMs}ms")
-      assert(labelsOf(s"${base}_labels") == sigDay1Want)
-    } finally {
-      ops.TextOps.swapRecoverWaitMs = savedWait
-      dropSigTables(base)
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // 2. Rename races commit exactly once, and the loser does not throw.
-  // ------------------------------------------------------------------
-
-  test("a recovery stealing the rename inside the writer's drop→rename window does not fail the publish") {
-    val base = s"graft_r17_race_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r17_race_")
-    try {
-      ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
-      // The thief: between the writer's drop and rename, complete the swap
-      // out from under it (what a concurrent reader's recovery does when it
-      // misjudges the lock stale — clock skew, a long writer GC pause).
-      ops.TextOps.SwapHooks.afterDrop = () =>
-        spark.sql(s"ALTER TABLE ${base}_labels_stage RENAME TO ${base}_labels")
-      try ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
-      finally ops.TextOps.SwapHooks.reset()
-      assert(labelsOf(s"${base}_labels") == sigDay1Want,
-        "the stolen rename still committed the writer's staged generation")
-      assert(!spark.catalog.tableExists(s"${base}_labels_stage"))
-      // The lock was released: the next publish proceeds normally.
-      ops.Dedup.maintainSigClusterStore(spark, base, sigDay2)
-      assert(labelsOf(s"${base}_labels") == sigDay2Want)
-    } finally {
-      dropSigTables(base)
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    }
-  }
-
-  test("two concurrent recoveries of the same crashed swap: one renames, the loser re-checks and succeeds") {
-    val base = s"graft_r17_rrace_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r17_rrace_")
-    try {
-      ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
-      crashDropRename(base, sigDay1)
-      // First recovery completes the swap; the second observes live-present
-      // and is a no-op — and even a second recovery that raced past the
-      // tableExists check into the ALTER must not surface an error (the
-      // catch-and-recheck inside recoverSwap).
-      ops.TextOps.recoverSwap(spark, s"${base}_labels")
-      ops.TextOps.recoverSwap(spark, s"${base}_labels")
-      assert(labelsOf(s"${base}_labels") == sigDay1Want)
-    } finally {
-      dropSigTables(base)
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // 3. The REGISTERED maintenance cadence retires heal residue.
+  // 1. The REGISTERED maintenance cadence retires heal residue.
   // ------------------------------------------------------------------
 
   test("sig-tier day-N maintenance compacts _toks past the file cadence and retires heal residue") {
@@ -305,7 +161,7 @@ class Round17Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   // ------------------------------------------------------------------
-  // 4. Conflicting payloads fail the compaction loudly.
+  // 2. Conflicting payloads fail the compaction loudly.
   // ------------------------------------------------------------------
 
   test("compactStore(dedupKeys) refuses to pick a survivor among rows whose payloads differ") {
@@ -345,18 +201,8 @@ class Round17Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   // ------------------------------------------------------------------
-  // 5. Stem safety.
+  // 3. Stem safety.
   // ------------------------------------------------------------------
-
-  test("storeStem strips our nanoTime generation suffixes and ONLY those") {
-    import ops.TextOps.storeStem
-    assert(storeStem("labels_g1234567890123456789") == "labels")
-    assert(storeStem("labels_g0000000123456789012") == "labels")
-    // User-chosen names that the old `_g\d+` regex mangled:
-    assert(storeStem("labels_g2") == "labels_g2")
-    assert(storeStem("labels_g42") == "labels_g42")
-    assert(storeStem("labels") == "labels")
-  }
 
   test("published generations record their stem as a table property and reuse it") {
     val base = s"graft_r17_stem_${ctr.incrementAndGet()}"

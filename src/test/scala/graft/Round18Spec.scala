@@ -17,19 +17,16 @@ import org.scalatest.funsuite.AnyFunSuite
   *     fold cadence. These tests pin the delta path at the PRODUCTION
   *     cadence — base generation untouched between folds, overlay view at
   *     the from-scratch fixed point, every crash window convergent — while
-  *     Round14/15/17Spec keep the stage-then-swap machinery covered at
+  *     Round14/15/17Spec keep the full-rewrite publish covered at
   *     cadence 1.
   *  2. Band-table compaction rides the maintenance cadence (ADVICE r17
   *     medium): `_bands`/`_ebands` accrete one file per bucket per append
   *     exactly like the key-unique tables but were never compacted by any
   *     registered path.
-  *  3. [[ops.TextOps.recoverSwap]]'s stale-lock branch deletes the lock it
-  *     adjudicated (ADVICE r17 low): the data recovered automatically but
-  *     the store stayed unwritable until an operator removed the lock.
-  *  4. Generation names survive a NEGATIVE nanoTime (ADVICE r17 low):
+  *  3. Generation names survive a NEGATIVE nanoTime (ADVICE r17 low):
   *     the JLS allows an arbitrary origin, and `_g-00…` would match
   *     neither [[ops.TextOps.GenSuffixRe]] nor the orphan sweep.
-  *  5. Streaming appenders ride the batch maintenance cadence (VERDICT r17
+  *  4. Streaming appenders ride the batch maintenance cadence (VERDICT r17
   *     next #6): micro-batch appends accrete per-bucket files without
   *     bound on their own; the next day-N batch maintenance run compacts
   *     them back under [[ops.TextOps.MaintCompactFilesPerBucket]]. The IVF
@@ -254,32 +251,61 @@ class Round18Spec extends AnyFunSuite {
     // the bucket distribution — pinned on the physical tree (the PlanSpec
     // convention: walk the plan, don't regex explain text). AQE off so the
     // executed plan is collectible (the PlanSpec `physical` rationale).
+    // Two inputs: a delta at the production cadence, and the state right
+    // after a fold, whose SET LOCATION must have kept the live table's
+    // bucket spec.
     val base = s"graft_r18_plan_${ctr.incrementAndGet()}"
     val dir = java.nio.file.Files.createTempDirectory("graft_r18_plan_")
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    val savedRuns = ops.TextOps.LabelFoldRuns
+    def assertShuffleFree(clue: String): Unit = {
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try {
+        val plan = ops.TextOps.readLabels(spark, s"${base}_labels", "doc_id")
+          .queryExecution.executedPlan
+        val shuffles = plan.collect {
+          case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => s
+        }
+        assert(shuffles.isEmpty,
+          s"$clue: the overlay must not shuffle the corpus-sized base OR the delta: $shuffles")
+        val anti = plan.collect {
+          case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+            if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
+        }
+        assert(anti.nonEmpty, s"$clue: the base side must pass through a broadcast ANTI join")
+        // The planner may drop bucketing a plan does not need
+        // (DisableUnnecessaryBucketedScan), so pin the relation's spec.
+        val baseScans = plan.collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec
+            if f.tableIdentifier.exists(_.table == s"${base}_labels") => f
+        }
+        assert(baseScans.nonEmpty &&
+          baseScans.forall(_.relation.bucketSpec.exists(_.numBuckets == 8)),
+          s"$clue: the base side must scan the 8-bucket table: $baseScans")
+      } finally spark.conf.set("spark.sql.adaptive.enabled", prev)
+    }
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
       assert(spark.table(s"${base}_labels_delta").count() > 0, "fixture: non-empty delta")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val plan = ops.TextOps.readLabels(spark, s"${base}_labels", "doc_id")
-        .queryExecution.executedPlan
-      val shuffles = plan.collect {
-        case s: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => s
-      }
-      assert(shuffles.isEmpty,
-        s"the overlay must not shuffle the corpus-sized base OR the delta: $shuffles")
-      val anti = plan.collect {
-        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftAnti => j
-      }
-      assert(anti.nonEmpty, "the base side must pass through a broadcast ANTI join")
+      assertShuffleFree("delta at the production cadence")
+      ops.TextOps.LabelFoldRuns = 1
+      val before = liveDir(s"${base}_labels")
+      ops.Dedup.maintainSigClusterStore(spark, base, sigDay2)
+      assert(liveDir(s"${base}_labels") != before, "fixture: the run must fold")
+      assertShuffleFree("after a fold")
+      assert(viewOf(s"${base}_labels", "doc_id") == sigDay2Want)
     } finally {
+      ops.TextOps.LabelFoldRuns = savedRuns
       spark.conf.set("spark.sql.adaptive.enabled", prev)
       dropSigTables(base)
       org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
     }
   }
+
+  private def liveDir(tbl: String): String =
+    new org.apache.hadoop.fs.Path(spark.sessionState.catalog.getTableMetadata(
+      org.apache.spark.sql.catalyst.TableIdentifier(tbl)).location).getName
 
   // ------------------------------------------------------------------
   // 2. Band tables ride the compaction cadence.
@@ -315,60 +341,20 @@ class Round18Spec extends AnyFunSuite {
   }
 
   // ------------------------------------------------------------------
-  // 3. Stale-lock self-healing.
-  // ------------------------------------------------------------------
-
-  test("recoverSwap deletes the stale lock it adjudicated, so the next publish needs no manual cleanup") {
-    val base = s"graft_r18_lock_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r18_lock_")
-    val savedFresh = ops.TextOps.swapLockFreshMs
-    try {
-      ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
-      // Crash a fold-publish between drop and rename, then plant the lock a
-      // hard JVM death would have left behind (the injected exception path
-      // releases it via finally, a real crash would not).
-      ops.TextOps.SwapHooks.afterDrop =
-        () => throw new RuntimeException("injected crash between drop and rename")
-      try intercept[RuntimeException] {
-        ops.TextOps.publishBucketed(spark, s"${base}_labels", "doc_id", 8,
-          ops.TextOps.readLabels(spark, s"${base}_labels", "doc_id"))
-      } finally ops.TextOps.SwapHooks.reset()
-      val lock = new java.io.File(dir.toString, "labels_swap.lock")
-      java.nio.file.Files.createFile(lock.toPath)
-      ops.TextOps.swapLockFreshMs = 1L
-      Thread.sleep(5)
-      ops.TextOps.recoverSwap(spark, s"${base}_labels")
-      assert(spark.catalog.tableExists(s"${base}_labels"), "the swap must be completed")
-      assert(!lock.exists(),
-        "the stale lock must be deleted with the recovery, not left to wedge the next publish")
-      ops.TextOps.swapLockFreshMs = savedFresh
-      // The next publish proceeds with NO manual lock deletion.
-      ops.TextOps.publishBucketed(spark, s"${base}_labels", "doc_id", 8,
-        ops.TextOps.readLabels(spark, s"${base}_labels", "doc_id"))
-      assert(baseOf(s"${base}_labels") == sigDay0Want)
-    } finally {
-      ops.TextOps.swapLockFreshMs = savedFresh
-      dropSigTables(base)
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    }
-  }
-
-  // ------------------------------------------------------------------
-  // 4. Negative-nanoTime generation names.
+  // 3. Negative-nanoTime generation names.
   // ------------------------------------------------------------------
 
   test("genDirName folds a negative nanoTime into the sweep-visible namespace") {
-    import ops.TextOps.{genDirName, storeStem, GenSuffixRe}
+    import ops.TextOps.{genDirName, GenSuffixRe}
     for (nano <- Seq(Long.MinValue, -1L, 0L, 42L, Long.MaxValue - 1)) {
       val name = genDirName("labels", nano)
       assert(name.matches(s"labels$GenSuffixRe"),
         s"genDirName($nano) = $name must match the generation regex")
-      assert(storeStem(name) == "labels", s"storeStem must invert: $name")
     }
   }
 
   // ------------------------------------------------------------------
-  // 5. Streaming appends ride the batch maintenance cadence.
+  // 4. Streaming appends ride the batch maintenance cadence.
   // ------------------------------------------------------------------
 
   test("storeNearDedup micro-batch appends are compacted by the next batch maintenance run") {

@@ -27,7 +27,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class Round20Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = s"${SparkEntry.FixtureRoot}/sf0.001"
   private val ctr = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private def fmt(df: org.apache.spark.sql.DataFrame): String =
@@ -248,14 +248,13 @@ class Round20Spec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_r20_man_")
     val savedRuns = ops.TextOps.LabelFoldRuns
     try {
-      ops.TextOps.LabelFoldRuns = 1 // fold (stage-then-swap) on every run
+      ops.TextOps.LabelFoldRuns = 1 // fold (full rewrite) on every run
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
       val live = liveDirName(s"${base}_labels")
-      val stem = ops.TextOps.storeStem(live)
       val fs = ops.StoreFs.fs(spark, new org.apache.hadoop.fs.Path(dir.toString))
       val m = ops.StoreFs.readSmall(fs,
-        ops.TextOps.manifestPath(new org.apache.hadoop.fs.Path(dir.toString), stem))
+        ops.TextOps.manifestPath(new org.apache.hadoop.fs.Path(dir.toString), "labels"))
       assert(m.map(_.trim).contains(live),
         s"the manifest must name the live generation: manifest=$m live=$live")
       assert(viewOf(s"${base}_labels") == sigDay1Want)
@@ -266,7 +265,7 @@ class Round20Spec extends AnyFunSuite {
     }
   }
 
-  test("a crash between manifest PUT and catalog drop: the read path serves the manifest-committed generation") {
+  test("a crash between manifest PUT and SET LOCATION: the read path serves the manifest-committed generation") {
     val base = s"graft_r20_man_${ctr.incrementAndGet()}"
     val dir = java.nio.file.Files.createTempDirectory("graft_r20_man_")
     val savedRuns = ops.TextOps.LabelFoldRuns
@@ -274,127 +273,40 @@ class Round20Spec extends AnyFunSuite {
       ops.TextOps.LabelFoldRuns = 1
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       val oldGen = liveDirName(s"${base}_labels")
-      ops.TextOps.SwapHooks.afterManifestPut =
-        () => throw new RuntimeException("injected crash after the manifest PUT")
-      try intercept[RuntimeException] {
-        ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
-      } finally ops.TextOps.SwapHooks.reset()
-      // The crash landed BEFORE the catalog drop: the old generation is
-      // still the cataloged live table, the staged one is on disk, and the
-      // manifest — the commit point — already names the stage.
-      assert(spark.catalog.tableExists(s"${base}_labels"),
-        "fixture: the crash must land before the drop")
-      assert(spark.catalog.tableExists(s"${base}_labels_stage"))
-      assert(liveDirName(s"${base}_labels") == oldGen,
-        "fixture: the catalog must still lag at the old generation")
-      val stageGen = liveDirName(s"${base}_labels_stage")
-      val stem = ops.TextOps.storeStem(stageGen)
-      val fs = ops.StoreFs.fs(spark, new org.apache.hadoop.fs.Path(dir.toString))
-      assert(ops.StoreFs.readSmall(fs, ops.TextOps.manifestPath(
-          new org.apache.hadoop.fs.Path(dir.toString), stem)).map(_.trim)
-        .contains(stageGen), "fixture: the manifest must name the staged generation")
-      // The READ path (recoverSwap + overlay view) must reconcile the
-      // catalog to the manifest and serve the committed generation — the
-      // publish's finally-unlock already removed the lock, so the
-      // adjudication is immediate.
+      val oldDir = new java.io.File(dir.toFile, oldGen)
+      val copy = java.nio.file.Files.createTempDirectory("graft_r20_gen_")
+      org.apache.commons.io.FileUtils.copyDirectory(oldDir, copy.toFile)
+      ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
+      val newGen = liveDirName(s"${base}_labels")
+      assert(newGen != oldGen, "fixture: the fold must commit a new generation")
+      // The crash state: the manifest names the new generation, but the
+      // catalog still names the superseded one, complete on disk (the
+      // SET LOCATION and the superseded-delete never ran).
+      org.apache.commons.io.FileUtils.copyDirectory(copy.toFile, oldDir)
+      org.apache.commons.io.FileUtils.deleteQuietly(copy.toFile)
+      spark.sql(s"ALTER TABLE ${base}_labels SET LOCATION '${oldDir.toURI}'")
+      assert(spark.table(s"${base}_labels").count() == 2L,
+        "fixture: the catalog must serve the day-0 generation")
+      // The READ path (recoverSwap + overlay view) reconciles the catalog
+      // with the manifest and serves the committed generation.
       assert(viewOf(s"${base}_labels") == sigDay1Want,
         "the read must serve the manifest-committed generation, not the stale catalog one")
-      assert(liveDirName(s"${base}_labels") == stageGen,
-        "recovery republishes the manifest generation in the catalog")
-      assert(!spark.catalog.tableExists(s"${base}_labels_stage"))
-      // Recovery retires the superseded generation directly rather than
-      // leaving it to the next publish's sweep (and for a LEGACY bare-stem
-      // day-0 this path is the only one that ever could).
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(dir.toString + "/" + oldGen)),
-        "recovery must delete the superseded day-0 generation")
+      assert(liveDirName(s"${base}_labels") == newGen,
+        "recovery re-points the catalog at the manifest's generation")
+      // The next publish's sweep retires the superseded generation.
       ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
+      assert(!oldDir.exists(), "the next publish must sweep the superseded generation")
       assert(viewOf(s"${base}_labels") == sigDay1Want, "the replay is a fixed point")
     } finally {
       ops.TextOps.LabelFoldRuns = savedRuns
-      ops.TextOps.SwapHooks.reset()
-      dropSigTables(base)
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    }
-  }
-
-  test("a reader inside a HEALTHY publish's manifest→drop window does not steal the swap (fresh lock)") {
-    val base = s"graft_r20_man_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r20_man_")
-    val savedRuns = ops.TextOps.LabelFoldRuns
-    try {
-      ops.TextOps.LabelFoldRuns = 1
-      ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
-      val oldGen = liveDirName(s"${base}_labels")
-      // Simulate a concurrent reader landing EXACTLY between the writer's
-      // manifest PUT and its catalog drop: the lock is fresh (re-touched
-      // milliseconds ago), the manifest already names the staged
-      // generation — the reader must leave the swap to the live writer
-      // (the old generation still serves, so nothing blocks).
-      var liveDuringWindow: Option[String] = None
-      ops.TextOps.SwapHooks.afterManifestPut = () => {
-        ops.TextOps.recoverSwap(spark, s"${base}_labels")
-        liveDuringWindow = Some(liveDirName(s"${base}_labels"))
-      }
-      try ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
-      finally ops.TextOps.SwapHooks.reset()
-      assert(liveDuringWindow.contains(oldGen),
-        "the reader must NOT steal a fresh-locked writer's swap — the old " +
-        s"generation serves through the window: $liveDuringWindow vs $oldGen")
-      // …and the writer's own swap then completed normally.
-      assert(liveDirName(s"${base}_labels") != oldGen)
-      assert(viewOf(s"${base}_labels") == sigDay1Want)
-    } finally {
-      ops.TextOps.LabelFoldRuns = savedRuns
-      ops.TextOps.SwapHooks.reset()
-      dropSigTables(base)
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    }
-  }
-
-  test("a legacy (manifest-less) drop→rename crash recovers AND heals the manifest forward") {
-    val base = s"graft_r20_man_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r20_man_")
-    val savedRuns = ops.TextOps.LabelFoldRuns
-    try {
-      ops.TextOps.LabelFoldRuns = 1
-      ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
-      ops.TextOps.SwapHooks.afterDrop =
-        () => throw new RuntimeException("injected crash between drop and rename")
-      try intercept[RuntimeException] {
-        ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
-      } finally ops.TextOps.SwapHooks.reset()
-      assert(!spark.catalog.tableExists(s"${base}_labels"),
-        "fixture: the crash must land in the neither-table window")
-      val stageGen = liveDirName(s"${base}_labels_stage")
-      val stem = ops.TextOps.storeStem(stageGen)
-      val fs = ops.StoreFs.fs(spark, new org.apache.hadoop.fs.Path(dir.toString))
-      val manifest = ops.TextOps.manifestPath(
-        new org.apache.hadoop.fs.Path(dir.toString), stem)
-      // Erase the manifest to reproduce a store written by PRE-manifest
-      // code crashing in the classic window: recovery must still complete
-      // the swap from the stage table alone…
-      assert(ops.StoreFs.deleteQuietly(fs, manifest), "fixture: manifest existed")
-      assert(viewOf(s"${base}_labels") == sigDay1Want,
-        "the classic stage-table recovery path must keep working without a manifest")
-      // …and heal the manifest forward, so later reads resolve the live
-      // generation without the catalog.
-      assert(ops.StoreFs.readSmall(fs, manifest).map(_.trim)
-        .contains(liveDirName(s"${base}_labels")),
-        "recovery must write the manifest for a legacy store")
-    } finally {
-      ops.TextOps.LabelFoldRuns = savedRuns
-      ops.TextOps.SwapHooks.reset()
       dropSigTables(base)
       org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
     }
   }
 
   // ------------------------------------------------------------------
-  // 5. Day-0 generations are suffixed + manifest-committed from birth.
-  //    The pre-r20 bare-`<stem>` day-0 leaked PERMANENTLY if a fold
-  //    crashed after its catalog rename (or between drop and rename with
-  //    the manifest already gone): no catalog reference, no stage table
-  //    for recoverSwap, and a name the sweep's `_g` regex never matches.
+  // 5. Day-0 generations are suffixed + manifest-committed from birth,
+  //    so every leftover generation is one the orphan sweep can see.
   // ------------------------------------------------------------------
 
   test("a day-0 label build is generation-suffixed and manifest-committed at birth") {
@@ -418,66 +330,18 @@ class Round20Spec extends AnyFunSuite {
     }
   }
 
-  test("a crash between rename and superseded-delete: the next fold's sweep reclaims the stranded generation") {
-    val base = s"graft_r20_man_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r20_man_")
-    val savedRuns = ops.TextOps.LabelFoldRuns
-    try {
-      ops.TextOps.LabelFoldRuns = 1
-      ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
-      val day0Gen = liveDirName(s"${base}_labels")
-      val fs = ops.StoreFs.fs(spark, new org.apache.hadoop.fs.Path(dir.toString))
-      ops.TextOps.SwapHooks.afterRename =
-        () => throw new RuntimeException("injected crash after the catalog rename")
-      try intercept[RuntimeException] {
-        ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
-      } finally ops.TextOps.SwapHooks.reset()
-      // The swap COMMITTED (manifest + rename both landed) — only the
-      // superseded-delete was lost. The day-0 directory is stranded: no
-      // catalog reference, no stage table, nothing recoverSwap can act on.
-      assert(liveDirName(s"${base}_labels") != day0Gen,
-        "fixture: the rename must have committed before the crash")
-      assert(fs.exists(new org.apache.hadoop.fs.Path(dir.toString + "/" + day0Gen)),
-        "fixture: the superseded day-0 generation must be stranded on disk")
-      assert(viewOf(s"${base}_labels") == sigDay1Want,
-        "the committed generation serves through the leftover")
-      // The next fold's orphan sweep reclaims it — possible ONLY because
-      // day-0 is generation-suffixed: the bare `labels` layout was
-      // invisible to the sweep's regex forever.
-      ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
-      assert(!fs.exists(new org.apache.hadoop.fs.Path(dir.toString + "/" + day0Gen)),
-        "the next publish's sweep must reclaim the stranded day-0 generation")
-      assert(viewOf(s"${base}_labels") == sigDay1Want, "the replay is a fixed point")
-    } finally {
-      ops.TextOps.LabelFoldRuns = savedRuns
-      ops.TextOps.SwapHooks.reset()
-      dropSigTables(base)
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    }
-  }
-
-  test("a rebuild retires its predecessor generation and a legacy bare-stem directory") {
+  test("a rebuild retires its predecessor generation") {
     val base = s"graft_r20_man_${ctr.incrementAndGet()}"
     val dir = java.nio.file.Files.createTempDirectory("graft_r20_man_")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       val gen0 = liveDirName(s"${base}_labels")
       val fs = ops.StoreFs.fs(spark, new org.apache.hadoop.fs.Path(dir.toString))
-      // Plant the pre-r20 layout's bare-stem directory: a store built by
-      // older code being rebuilt in place — commitDay0's migration step
-      // must retire it (no sweep can, and after the rebuild nothing else
-      // ever references it).
-      val legacy = new org.apache.hadoop.fs.Path(dir.toString, "labels")
-      fs.mkdirs(legacy)
-      ops.StoreFs.writeAtomic(fs,
-        new org.apache.hadoop.fs.Path(legacy, "part-stale"), "stale")
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       val gen1 = liveDirName(s"${base}_labels")
       assert(gen1 != gen0, "a rebuild lands a fresh generation")
       assert(!fs.exists(new org.apache.hadoop.fs.Path(dir.toString + "/" + gen0)),
         "the rebuild must retire its predecessor generation at commit")
-      assert(!fs.exists(legacy),
-        "the rebuild must retire a legacy bare-stem directory (the migration step)")
       assert(ops.StoreFs.readSmall(fs, ops.TextOps.manifestPath(
           new org.apache.hadoop.fs.Path(dir.toString), "labels")).map(_.trim)
         .contains(gen1), "the manifest follows the rebuild")

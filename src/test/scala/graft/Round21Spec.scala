@@ -85,7 +85,7 @@ class Round21Spec extends AnyFunSuite {
 
   test("salted hot join at the production threshold: no fixture key is hot, result equals the plain join") {
     import org.apache.spark.sql.functions._
-    val sf = "/root/testdata/sf0.001"
+    val sf = s"${SparkEntry.FixtureRoot}/sf0.001"
     // The r21 re-calibration: skew is absolute (rows-per-task budget), so
     // on a fixture whose max per-key fan-out is 7, detection must find
     // NOTHING at the registered default — the operator degrades to

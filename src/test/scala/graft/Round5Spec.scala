@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * intended ones on the small fixture. */
 class Round5Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = s"${SparkEntry.FixtureRoot}/sf0.001"
 
   test("q_tpch18: every surviving order clears the quantity threshold") {
     val rows = ops.Tpch.tpch18(spark, sf).collect()

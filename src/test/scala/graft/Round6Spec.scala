@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * are the intended ones on the small fixture. */
 class Round6Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = s"${SparkEntry.FixtureRoot}/sf0.001"
 
   test("q_dedup_incremental: survivors + canonical set partition the corpus content") {
     // The incremental run must lose nothing and duplicate nothing: the

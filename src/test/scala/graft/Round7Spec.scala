@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * hold under adversarial sizing. */
 class Round7Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = s"${SparkEntry.FixtureRoot}/sf0.001"
 
   test("bloom dedup: output identical to the plain anti-join at production sizing") {
     val plain = ops.TextOps.dedupIncremental(spark, sf).collect().toSeq

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * VALUES are unchanged and stay covered by the per-round DuckDB oracle.) */
 class Round8Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = s"${SparkEntry.FixtureRoot}/sf0.001"
 
   // ---- native as-of: left-outer ----
 

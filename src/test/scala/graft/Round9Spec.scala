@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * test; autoBits' derivation table in Round8Spec.) */
 class Round9Spec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = s"${SparkEntry.FixtureRoot}/sf0.001"
 
   // ---- day-N maintained dedup store ----
 

@@ -64,7 +64,7 @@ class ShinglesSpec extends AnyFunSuite {
   }
 
   test("the real corpus shingles identically (n=2 and n=3, sf0.001)") {
-    val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
+    val docs = Tables(spark, s"${SparkEntry.FixtureRoot}/sf0.001", "documents")
     for (n <- Seq(2, 3)) {
       val native = docs.select(col("doc_id"),
           graft.functions.Functions.shingles(col("text"), n).as("s"))

@@ -175,7 +175,7 @@ class SigStoreSpec extends AnyFunSuite {
   // ---- IVF store maintenance (the ANN tier's append path, r12) ----
 
   test("ivf maintenance: append lands inside the cell layout, pruning holds, answers equal a rebuild") {
-    val sf = "/root/testdata/sf0.001"
+    val sf = s"${SparkEntry.FixtureRoot}/sf0.001"
     // The registered q_ivf_maint stages half + appends half (memoized per
     // JVM); force the staging now so the file layout is inspectable.
     val maintained = ops.Similarity.ivfMaint(spark, sf)

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SketchSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val d = "/root/testdata/sf0.01"
+  private val d = s"${SparkEntry.FixtureRoot}/sf0.01"
 
   test("approx_count_distinct (HLL++, rsd=0.02) is within 5% of exact per group") {
     val approx = ops.Aggregates.aggApprox(spark, d).collect()
@@ -65,7 +65,7 @@ class SketchSpec extends AnyFunSuite {
   test("Misra-Gries: candidate set covers every true heavy hitter under any partition layout") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val sf = "/root/testdata/sf0.001"
+    val sf = s"${SparkEntry.FixtureRoot}/sf0.001"
     val K = 800
     val bgs = Tables(spark, sf, "documents")
       .select(explode(ops.Dedup.shingles(col("text"), n = 2)).as("bg"))

@@ -41,7 +41,7 @@ class WinnowSpec extends AnyFunSuite {
 
   test("winnow keys: native ≡ HOF composition, ordered, adversarial + fixture corpus") {
     val docs = docsDf(adversarial)
-      .unionByName(Tables(spark, "/root/testdata/sf0.001", "documents").select("doc_id", "text"))
+      .unionByName(Tables(spark, s"${SparkEntry.FixtureRoot}/sf0.001", "documents").select("doc_id", "text"))
     for (w <- Seq(1, 2, 4, 7)) {
       val native = ops.TextOps.winnowPerDoc(docs, w)
         .collect().map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
@@ -67,7 +67,7 @@ class WinnowSpec extends AnyFunSuite {
 
   test("hash sample: native ≡ HOF composition, ordered, for mod 1/2/8") {
     val docs = docsDf(adversarial)
-      .unionByName(Tables(spark, "/root/testdata/sf0.001", "documents").select("doc_id", "text"))
+      .unionByName(Tables(spark, s"${SparkEntry.FixtureRoot}/sf0.001", "documents").select("doc_id", "text"))
     for (mod <- Seq(1, 2, 8)) {
       val native = docs.select(col("doc_id"),
           graft.functions.Functions.hashSampleMod(ops.Dedup.shingles(col("text")), mod))
