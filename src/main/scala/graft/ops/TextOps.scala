@@ -836,9 +836,8 @@ object TextOps {
     * Single-writer per store is the module-wide maintenance contract (one
     * scheduler-owned process per store — the [[compactStore]] /
     * [[publishBucketed]] requirement); the fold path additionally holds the
-    * swap lock inside [[publishBucketed]] itself. Every crash point of all
-    * three paths (day-0, delta append, fold) is swept by
-    * CrashPointSweepSpec. */
+    * swap lock inside [[publishBucketed]] itself. CrashPointSweepSpec
+    * crashes the append and the fold at every filesystem mutation. */
   private[graft] def publishLabelDelta(s: SparkSession, tbl: String, keyCol: String,
                                        defaultBuckets: Int, delta: DataFrame): Unit = {
     val meta = storeMeta(s)(org.apache.spark.sql.catalyst.TableIdentifier(tbl))

@@ -34,7 +34,7 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class CrashPointSweepSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
-  // ~230 crash points of two lifecycle runs each make per-query overhead
+  // ~150 crash points of two lifecycle runs each make per-query overhead
   // the sweep's whole cost, so this suite runs with AQE off (it submits
   // every query stage as its own job), one shuffle partition and Spark's
   // INFO log quiet. Neither setting moves a crash point: those are
@@ -173,20 +173,21 @@ class CrashPointSweepSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterA
 
   /** Crash point `n` of `entry`: a fresh store from `setup` (no fault),
     * `entry` with mutation `n` failing, the re-drive, the convergence
-    * check. Returns false when `entry` completed without reaching `n`. */
+    * check. Returns the failed mutation (operation, file name), or None
+    * when `entry` completed without reaching `n`. */
   private def crashPoint(n: Int, setup: Store => Unit, entry: Store => Unit,
-                         want: Map[Long, Long]): Boolean = {
+                         want: Map[Long, Long]): Option[(String, String)] = {
     val st = newStore()
     try {
       setup(st)
       FaultFs.arm(st.dir, n)
       val run = Try(entry(st))
       FaultFs.disarm(st.dir) match {
-        case (_, None) =>
+        case None =>
           run.get
           assertConverged(st, want, s"clean run (mutation #$n not reached)")
-          false
-        case (_, Some((op, path))) =>
+          None
+        case Some((op, path)) =>
           val clue = s"fault at mutation #$n ($op ${path.getName})"
           run match {
             case Failure(e) => assert(messages(e).exists(_.contains(FaultFs.Scheme)),
@@ -204,7 +205,7 @@ class CrashPointSweepSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterA
           }
           entry(st)
           assertConverged(st, want, clue)
-          true
+          Some(op -> path.getName)
       }
     } finally {
       FaultFs.disarm(st.dir)
@@ -214,19 +215,23 @@ class CrashPointSweepSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterA
 
   /** Sweep `entry` over every crash point N = 1, 2, … until it completes
     * without reaching N, [[Workers]] crash points at a time (each store
-    * has its own directory and fault counter). Returns the number of
-    * crash points. */
+    * has its own directory and fault counter). Returns the failed
+    * mutation of every crash point. */
   private def sweep(setup: Store => Unit, entry: Store => Unit,
-                    want: Map[Long, Long]): Int = {
+                    want: Map[Long, Long]): Seq[(String, String)] = {
     val next = new java.util.concurrent.atomic.AtomicInteger(0)
     val cleanAt = new java.util.concurrent.atomic.AtomicInteger(Int.MaxValue)
+    val faults = new java.util.concurrent.ConcurrentHashMap[Int, (String, String)]()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(Workers)
     try {
       val workers = (1 to Workers).map(_ => pool.submit(new java.util.concurrent.Callable[Unit] {
         def call(): Unit = {
           var n = next.incrementAndGet()
           while (n < cleanAt.get) {
-            if (!crashPoint(n, setup, entry, want)) cleanAt.accumulateAndGet(n, math.min)
+            crashPoint(n, setup, entry, want) match {
+              case Some(f) => faults.put(n, f)
+              case None => cleanAt.accumulateAndGet(n, math.min)
+            }
             n = next.incrementAndGet()
           }
         }
@@ -236,15 +241,19 @@ class CrashPointSweepSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterA
         catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
       }
     } finally pool.shutdownNow()
-    cleanAt.get - 1
+    (1 until cleanAt.get).map(faults.get)
   }
+
+  private val LockDelete = "delete" -> "labels_swap.lock"
+  private val ManifestPut = "create" -> "labels.manifest"
 
   test("day-0 label build: every crash point converges on re-drive") {
     val want = fromScratch(day0Docs)
     assert(want == Map(1L -> 1L, 2L -> 1L), s"fixture: $want")
-    val points = sweep(_ => (), buildDay0, want)
-    assert(points > 0)
-    info(s"$points crash points")
+    val faults = sweep(_ => (), buildDay0, want)
+    assert(faults.contains(ManifestPut) && faults.contains(LockDelete),
+      s"the sweep must reach commitDay0's manifest PUT and unlock: $faults")
+    info(s"${faults.size} crash points")
   }
 
   /** Day 1's label delta and the labels it must converge to. */
@@ -259,15 +268,16 @@ class CrashPointSweepSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterA
   test("delta append: every crash point converges on re-drive") {
     val (delta, want) = day1Delta
     assert(ops.TextOps.LabelFoldRuns > 1, "the production cadence does not fold")
-    val points = sweep(copyDay0, publishDelta(delta), want)
-    assert(points > 0)
-    info(s"$points crash points")
+    val faults = sweep(copyDay0, publishDelta(delta), want)
+    assert(faults.nonEmpty && !faults.contains(ManifestPut), s"an append commits nothing: $faults")
+    info(s"${faults.size} crash points")
   }
 
   test("fold (LabelFoldRuns = 1): every crash point converges on re-drive") {
     val (delta, want) = day1Delta
-    val points = withFoldRuns(1)(sweep(copyDay0, publishDelta(delta), want))
-    assert(points > 0)
-    info(s"$points crash points")
+    val faults = withFoldRuns(1)(sweep(copyDay0, publishDelta(delta), want))
+    assert(faults.contains(ManifestPut) && faults.contains(LockDelete),
+      s"the sweep must reach the fold's manifest PUT and unlock: $faults")
+    info(s"${faults.size} crash points")
   }
 }

@@ -96,11 +96,9 @@ object FaultFs {
   def arm(dir: java.nio.file.Path, n: Int): Unit =
     armed.put(dir.toAbsolutePath.toString, new Armed(n))
 
-  /** Stop counting under `dir`; returns (mutations counted, the fault that
-    * fired). */
-  def disarm(dir: java.nio.file.Path): (Int, Option[(String, Path)]) =
-    Option(armed.remove(dir.toAbsolutePath.toString))
-      .map(a => a.synchronized((a.calls, a.fired))).getOrElse((0, None))
+  /** Stop counting under `dir`; returns the fault that fired, if any. */
+  def disarm(dir: java.nio.file.Path): Option[(String, Path)] =
+    Option(armed.remove(dir.toAbsolutePath.toString)).flatMap(a => a.synchronized(a.fired))
 
   private def tick(op: String, p: Path): Unit = {
     val path = p.toUri.getPath
