@@ -4,8 +4,10 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
+import org.apache.spark.sql.sources.BaseRelation
+import org.apache.spark.sql.types.{LongType, TimestampNTZType}
 
 /** Loaders for the driver-generated parquet test tables (TESTDATA.md).
   *
@@ -17,18 +19,21 @@ import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
   * scan is where most of the win lives, so every query in this library
   * selects explicit columns early so `ReadSchema` stays minimal.
   *
-  * Schema memo: a parquet read without a schema infers one by reading
-  * footers in a Spark job, which every query would pay before it even
-  * plans (one job per table it loads). Each table's schema is inferred once
-  * and every later call reads with `spark.read.schema(s)`, which runs no
-  * job. The memo is keyed on the qualified path, the path's modification
-  * time (a rewritten table is inferred again; a directory's time moves
-  * whenever a file in it is added or removed, as every Spark write of it
-  * does) and the parquet confs that change what inference returns
-  * ([[SchemaConfs]]; `events` sets `nanosAsLong` itself). Only the schema
-  * is shared: every call still builds a fresh relation with fresh
-  * attribute ids, so a query that loads one table twice (q_tpch21 reads
-  * `lineitem` three times) self-joins cleanly.
+  * Relation memo: resolving a parquet directory is per-call driver work
+  * that every query would pay before it even plans: schema inference (a
+  * Spark job reading footers), `DataSource` resolution and the file
+  * index's listing of the directory. Each table is resolved once, and the
+  * resolved `HadoopFsRelation` (its schema and its file index, with the
+  * listed files) is kept. The memo is keyed on the session, the qualified
+  * path, the path's modification time and the parquet confs that change
+  * what inference returns ([[SchemaConfs]]; `events` sets `nanosAsLong`
+  * itself). Every call still `getFileStatus`es the path, so a rewritten
+  * table is resolved again: a directory's time moves whenever a file in
+  * it is added or removed, as every Spark write of it does. Only the
+  * relation is shared: every call wraps it in a fresh `LogicalRelation`
+  * (`baseRelationToDataFrame`), whose output attributes get fresh ids, so
+  * a query that loads one table twice (a self-join) resolves each side's
+  * columns without ambiguity.
   */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -67,18 +72,21 @@ object Tables {
     "spark.sql.parquet.mergeSchema",
     "spark.sql.parquet.respectSummaryFiles")
 
-  private case class SchemaKey(path: String, modTime: Long, confs: Seq[String])
+  private case class RelationKey(session: SparkSession, path: String, modTime: Long,
+                                 confs: Seq[String])
 
-  private val schemas = new ConcurrentHashMap[SchemaKey, StructType]()
+  private val relations = new ConcurrentHashMap[RelationKey, BaseRelation]()
 
-  /** A fresh parquet relation over `path`, read with its memoized schema. */
+  /** A fresh `LogicalRelation` over `path`'s memoized parquet relation. */
   private[graft] def read(spark: SparkSession, path: String): DataFrame = {
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val status = fs.getFileStatus(p)
-    val key = SchemaKey(status.getPath.toString, status.getModificationTime,
+    val status = ops.StoreFs.fs(spark, p).getFileStatus(p)
+    val key = RelationKey(spark, status.getPath.toString, status.getModificationTime,
       SchemaConfs.map(spark.conf.get))
-    val schema = schemas.computeIfAbsent(key, _ => spark.read.parquet(path).schema)
-    spark.read.schema(schema).parquet(path)
+    val rel = relations.computeIfAbsent(key, _ =>
+      spark.read.parquet(path).queryExecution.analyzed
+        .collectFirst { case r: LogicalRelation => r.relation }
+        .getOrElse(throw new IllegalStateException(s"$path: not a file relation")))
+    spark.baseRelationToDataFrame(rel)
   }
 }

@@ -149,7 +149,10 @@ object Similarity {
     * on k bands must score once, not k times; at 100 TB the verify is the
     * expensive half, so the dedup goes first). One shuffle on (band,bucket),
     * one on the pair key; fully deterministic → DuckDB-oracle-checked,
-    * unlike the fixture-threshold [[embedNearDup]] demo this upgrades. */
+    * unlike the fixture-threshold [[embedNearDup]] demo this upgrades.
+    * The pairs come unordered: every store caller feeds them to a join,
+    * a union or connected components, where a global sort is a range
+    * exchange and a sort for nothing; [[embedNearDup2]] sorts its result. */
   def embedNearDupBanded(embIn: DataFrame, threshold: Double,
                          bands: Int = 4, bits: Int = 8): DataFrame = {
     val eb = embIn
@@ -179,7 +182,6 @@ object Similarity {
       .groupBy("vec_a", "vec_b")
       .agg(first(col("cos")).as("cos"))
       .select(col("vec_a"), col("vec_b"), round(col("cos"), 2).as("cos_sim"))
-      .orderBy("vec_a", "vec_b")
   }
 
   /** Corpus-adaptive band width: `bits = clamp(floor, cap,
@@ -208,7 +210,7 @@ object Similarity {
   // registered query stays scale-safe at every larger SF.
   val embedNearDup2: Q = (s, d) => {
     val emb = Tables(s, d, "embeddings")
-    embedNearDupBanded(emb, 0.40, bits = autoBits(emb.count()))
+    embedNearDupBanded(emb, 0.40, bits = autoBits(emb.count())).orderBy("vec_a", "vec_b")
   }
 
   // --------------------------------------------------------------------

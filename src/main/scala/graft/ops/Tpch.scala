@@ -652,13 +652,21 @@ object Tpch {
     * after the order date while every other supplier's shipped sooner (the
     * fixture's receipt/commit-date analog). TPC-H's doubly-quantified
     * correlated query — EXISTS(another supplier) AND NOT EXISTS(another
-    * LATE supplier) — decorrelated to per-order set aggregates: ONE fact
-    * shuffle on orderkey builds (distinct-supplier count, late-supplier
-    * set), the blame filter is `n_supp >= 2 AND size(late_set) == 1`, and
-    * the culprit explodes out of the 1-element set. No lineitem self-join
-    * anywhere: at 100 TB that's one fact shuffle instead of three. The
-    * DuckDB oracle runs the ACTUAL quantifiers (EXISTS / NOT EXISTS), so a
-    * hash match proves the decorrelation itself, not just the arithmetic. */
+    * LATE supplier) — decorrelated to per-order min/max aggregates: ONE
+    * fact shuffle on orderkey, and the blame filter is
+    * `min(supp) < max(supp) AND min(late) = max(late)`, the culprit being
+    * `min(late)`. A set of non-null values has ≥ 2 distinct members exactly
+    * when its min is below its max, and exactly one when its min equals its
+    * max; min and max ignore nulls as `countDistinct` and `collect_set` do,
+    * and an order with no (late) supplier gets a null min and fails the
+    * filter. So this is the `countDistinct(supp) >= 2 AND
+    * size(collect_set(late)) = 1` form with fixed-width aggregation
+    * buffers: one codegen'd `HashAggregate` pair instead of Spark's
+    * distinct rewrite into four `ObjectHashAggregate`s over a second
+    * shuffle on (orderkey, suppkey). No lineitem self-join anywhere: at
+    * 100 TB that's one fact shuffle instead of three. The DuckDB oracle
+    * runs the ACTUAL quantifiers (EXISTS / NOT EXISTS), so a hash match
+    * proves the decorrelation itself, not just the arithmetic. */
   val tpch21: Q = (s, d) => {
     val ord = Tables(s, d, "orders")
       .filter(col("o_orderstatus") === "F").select("o_orderkey", "o_orderdate")
@@ -668,12 +676,11 @@ object Tpch {
         when(col("l_shipdate") >= col("o_orderdate") + expr("INTERVAL 90 DAYS"),
           col("l_suppkey")))
       .groupBy("o_orderkey")
-      .agg(countDistinct(col("l_suppkey")).as("n_supp"),
-        collect_set(col("late_supp")).as("late_supps"))
-      .filter(col("n_supp") >= 2 && size(col("late_supps")) === 1)
+      .agg(min(col("l_suppkey")).as("min_supp"), max(col("l_suppkey")).as("max_supp"),
+        min(col("late_supp")).as("culprit"), max(col("late_supp")).as("max_late"))
+      .filter(col("min_supp") < col("max_supp") && col("culprit") === col("max_late"))
     val supp = Tables(s, d, "supplier").select("s_suppkey", "s_name")
-    perOrder.select(col("late_supps").getItem(0).as("culprit"))
-      .groupBy("culprit").agg(count(lit(1)).as("numwait"))
+    perOrder.groupBy("culprit").agg(count(lit(1)).as("numwait"))
       .join(Hints.dimBroadcast(supp), col("culprit") === col("s_suppkey"))
       .select(col("s_suppkey"), col("s_name"), col("numwait"))
       .orderBy(col("numwait").desc, col("s_suppkey"))

@@ -9,10 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * The sig-tier cluster store (the Round20Spec geometry, 4 buckets) lives
   * on `faultfs://` ([[FaultFs]]), so every filesystem mutation the
-  * lifecycle makes — each `create`, `rename`, `delete`, `mkdirs`, inside
-  * Spark's writers and committers as much as in the engine's own code — is
-  * a numbered crash point. Each entry is run with a fault at mutation
-  * N = 1, 2, … until it completes without reaching N:
+  * lifecycle makes — each `create`, `rename`, `delete`, `mkdirs` that
+  * makes a directory, inside Spark's writers and committers as much as in
+  * the engine's own code — is a numbered crash point. A clean run of an
+  * entry makes the same number of them every time (the sweep checks it),
+  * so each entry is run with a fault at mutation N = 1, 2, … until it
+  * completes without reaching N:
   *   - the day-0 label build ([[ops.Dedup.buildSigClusterStore]]: the
   *     store tables, the label generation, [[ops.TextOps.commitDay0]]);
   *   - a delta append ([[ops.TextOps.publishLabelDelta]] at the
@@ -173,20 +175,22 @@ class CrashPointSweepSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterA
 
   /** Crash point `n` of `entry`: a fresh store from `setup` (no fault),
     * `entry` with mutation `n` failing, the re-drive, the convergence
-    * check. Returns the failed mutation (operation, file name), or None
-    * when `entry` completed without reaching `n`. */
+    * check. Returns the failed mutation (operation, file name), or the
+    * number of mutations made when `entry` completed without reaching
+    * `n`. */
   private def crashPoint(n: Int, setup: Store => Unit, entry: Store => Unit,
-                         want: Map[Long, Long]): Option[(String, String)] = {
+                         want: Map[Long, Long]): Either[Int, (String, String)] = {
     val st = newStore()
     try {
       setup(st)
       FaultFs.arm(st.dir, n)
       val run = Try(entry(st))
-      FaultFs.disarm(st.dir) match {
+      val seen = FaultFs.disarm(st.dir)
+      seen.fired match {
         case None =>
           run.get
           assertConverged(st, want, s"clean run (mutation #$n not reached)")
-          None
+          Left(seen.calls)
         case Some((op, path)) =>
           val clue = s"fault at mutation #$n ($op ${path.getName})"
           run match {
@@ -205,7 +209,7 @@ class CrashPointSweepSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterA
           }
           entry(st)
           assertConverged(st, want, clue)
-          Some(op -> path.getName)
+          Right(op -> path.getName)
       }
     } finally {
       FaultFs.disarm(st.dir)
@@ -216,12 +220,15 @@ class CrashPointSweepSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterA
   /** Sweep `entry` over every crash point N = 1, 2, … until it completes
     * without reaching N, [[Workers]] crash points at a time (each store
     * has its own directory and fault counter). Returns the failed
-    * mutation of every crash point. */
+    * mutation of every crash point. Stopping at the first clean N covers
+    * every crash point only if each clean run makes the same number of
+    * mutations, N - 1, so every clean run is checked for that count. */
   private def sweep(setup: Store => Unit, entry: Store => Unit,
                     want: Map[Long, Long]): Seq[(String, String)] = {
     val next = new java.util.concurrent.atomic.AtomicInteger(0)
     val cleanAt = new java.util.concurrent.atomic.AtomicInteger(Int.MaxValue)
     val faults = new java.util.concurrent.ConcurrentHashMap[Int, (String, String)]()
+    val cleanRuns = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(Workers)
     try {
       val workers = (1 to Workers).map(_ => pool.submit(new java.util.concurrent.Callable[Unit] {
@@ -229,8 +236,10 @@ class CrashPointSweepSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterA
           var n = next.incrementAndGet()
           while (n < cleanAt.get) {
             crashPoint(n, setup, entry, want) match {
-              case Some(f) => faults.put(n, f)
-              case None => cleanAt.accumulateAndGet(n, math.min)
+              case Right(f) => faults.put(n, f)
+              case Left(made) =>
+                cleanRuns.put(n, made)
+                cleanAt.accumulateAndGet(n, math.min)
             }
             n = next.incrementAndGet()
           }
@@ -241,7 +250,13 @@ class CrashPointSweepSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterA
         catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
       }
     } finally pool.shutdownNow()
-    (1 until cleanAt.get).map(faults.get)
+    import scala.jdk.CollectionConverters._
+    val last = cleanAt.get - 1
+    assert(cleanRuns.values.asScala.forall(_ == last) && faults.keySet.asScala.forall(_ <= last),
+      s"every clean run must make exactly $last mutations (clean runs by crash point: " +
+        s"${cleanRuns.asScala.toSeq.sorted}; last fault at #${faults.keySet.asScala.maxOption}), " +
+        "or stopping at the first clean crash point can leave the last ones unswept")
+    (1 to last).map(faults.get)
   }
 
   private val LockDelete = "delete" -> "labels_swap.lock"

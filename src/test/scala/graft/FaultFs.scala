@@ -9,14 +9,18 @@ import org.apache.spark.sql.SparkSession
 
 /** Test-only fault injection: the local filesystem under the `faultfs://`
   * scheme, failing exactly one chosen mutation. A directory armed with N
-  * ([[FaultFs.arm]]) counts every `create`, `rename`, `delete` and
-  * `mkdirs` on a path under it (from any instance — the scheme is
-  * uncached), and its Nth call throws an IOException before it touches the
-  * disk; every other call passes through. Reads and listings are never
-  * counted, so a store on `faultfs://<dir>` behaves exactly like one on
-  * `file://<dir>` except at the armed crash point. Directories are armed
-  * independently, so stores in different directories can be swept
-  * concurrently. */
+  * ([[FaultFs.arm]]) counts every `create`, `rename` and `delete` on a
+  * path under it, and every `mkdirs` that creates a directory (from any
+  * instance — the scheme is uncached), and its Nth call throws an
+  * IOException before it touches the disk; every other call passes
+  * through. A `mkdirs` of a directory that exists changes nothing, and is
+  * not counted: tasks writing side by side race to make their common
+  * parent (`_temporary/0/_temporary`), and counting every caller that
+  * found it missing made a clean run's count differ from run to run.
+  * Reads and listings are never counted, so a store on `faultfs://<dir>`
+  * behaves exactly like one on `file://<dir>` except at the armed crash
+  * point. Directories are armed independently, so stores in different
+  * directories can be swept concurrently. */
 class FaultFs extends RawLocalFileSystem {
   override def getUri: java.net.URI = java.net.URI.create(s"${FaultFs.Scheme}:///")
   override def getScheme: String = FaultFs.Scheme
@@ -58,15 +62,16 @@ class FaultFs extends RawLocalFileSystem {
     super.delete(p, recursive)
   }
 
-  override def mkdirs(p: Path): Boolean = {
-    FaultFs.tick("mkdirs", p)
+  override def mkdirs(p: Path): Boolean = FaultFs.mkdirsLock.synchronized {
+    if (!pathToFile(p).isDirectory) FaultFs.tick("mkdirs", p)
     super.mkdirs(p)
   }
 
-  override def mkdirs(p: Path, permission: FsPermission): Boolean = {
-    FaultFs.tick("mkdirs", p)
-    super.mkdirs(p, permission)
-  }
+  override def mkdirs(p: Path, permission: FsPermission): Boolean =
+    FaultFs.mkdirsLock.synchronized {
+      if (!pathToFile(p).isDirectory) FaultFs.tick("mkdirs", p)
+      super.mkdirs(p, permission)
+    }
 }
 
 object FaultFs {
@@ -80,6 +85,14 @@ object FaultFs {
     var calls = 0
     var fired: Option[(String, Path)] = None
   }
+
+  /** What an armed directory saw: the fault that fired, if any, and how
+    * many mutations it counted (a fired fault's included). */
+  case class Record(fired: Option[(String, Path)], calls: Int)
+
+  /** Makes "is it a directory yet?" and the `mkdirs` one step, so exactly
+    * one of two racing callers counts the directory it creates. */
+  private val mkdirsLock = new Object
   private val armed = new java.util.concurrent.ConcurrentHashMap[String, Armed]()
 
   /** Route `faultfs://` paths of `spark`'s Hadoop conf to [[FaultFs]]. */
@@ -96,9 +109,10 @@ object FaultFs {
   def arm(dir: java.nio.file.Path, n: Int): Unit =
     armed.put(dir.toAbsolutePath.toString, new Armed(n))
 
-  /** Stop counting under `dir`; returns the fault that fired, if any. */
-  def disarm(dir: java.nio.file.Path): Option[(String, Path)] =
-    Option(armed.remove(dir.toAbsolutePath.toString)).flatMap(a => a.synchronized(a.fired))
+  /** Stop counting under `dir`; returns what it saw since [[arm]]. */
+  def disarm(dir: java.nio.file.Path): Record =
+    Option(armed.remove(dir.toAbsolutePath.toString))
+      .fold(Record(None, 0))(a => a.synchronized(Record(a.fired, a.calls)))
 
   private def tick(op: String, p: Path): Unit = {
     val path = p.toUri.getPath

@@ -307,9 +307,47 @@ class PlanSpec extends AnyFunSuite {
     // The doubly-quantified EXISTS/NOT-EXISTS runs as per-order set
     // aggregates; a lineitem self-join would show as a 4th/5th scan and
     // triple the fact shuffle at scale.
-    val scans = "Scan parquet".r.findAllIn(physical("q_tpch21").toString).size
+    val p = physical("q_tpch21")
+    val scans = "Scan parquet".r.findAllIn(p.toString).size
     assert(scans == 3, s"expected scans of lineitem+orders+supplier only, got $scans")
     assert(!plan("q_tpch21").contains("CartesianProduct"))
+    // The per-order test is min/max over fixed-width buffers: codegen'd
+    // hash aggregates only, and no distinct-rewrite shuffle on
+    // (o_orderkey, l_suppkey).
+    import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    assert(p.collect { case a: ObjectHashAggregateExec => a }.isEmpty,
+      s"per-order aggregates must not be object hash aggregates:\n$p")
+    val keys = p.collect { case e: ShuffleExchangeExec => e.outputPartitioning }.collect {
+      case h: org.apache.spark.sql.catalyst.plans.physical.HashPartitioning =>
+        h.expressions.flatMap(_.references.map(_.name)).toSet
+    }
+    assert(!keys.contains(Set("o_orderkey", "l_suppkey")),
+      s"no exchange may be keyed on (o_orderkey, l_suppkey): $keys")
+  }
+
+  test("embed-store edge derivation: the banded batch pairs feed the union unsorted") {
+    // A global sort of the batch x batch pairs is a range exchange plus a
+    // sort whose order the union, the contraction and connected components
+    // all discard.
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_edges_")
+    val base = s"graft_plan_edges_${System.nanoTime}"
+    val emb = Tables(spark, d, "embeddings").select("vec_id", "embedding")
+    val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    try {
+      ops.Similarity.buildEmbedBandStore(spark, base, dir.toString,
+        emb.filter(org.apache.spark.sql.functions.col("vec_id") % 2 === 0))
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      val p = ops.Similarity.newVerifiedEdges(spark, base,
+        emb.filter(org.apache.spark.sql.functions.col("vec_id") % 2 === 1), 0.40, 4, 8)
+        .queryExecution.executedPlan
+      val globalSorts = p.collect { case s: org.apache.spark.sql.execution.SortExec if s.global => s }
+      assert(globalSorts.isEmpty, s"no global Sort in the edge derivation:\n$p")
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", prev)
+      Seq("_ebands", "_evecs").foreach(sfx => spark.sql(s"DROP TABLE IF EXISTS $base$sfx"))
+      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+    }
   }
 
   test("tpch22: recent-order date filter pushed into the orders scan under the anti join") {

@@ -80,7 +80,7 @@ class Round9Spec extends AnyFunSuite {
     // explicit-8-bit form is the conclusive check.
     val auto = ops.Similarity.embedNearDup2(spark, sf).collect().toSeq
     val explicit8 = ops.Similarity.embedNearDupBanded(
-      Tables(spark, sf, "embeddings"), 0.40, bits = 8).collect().toSeq
+      Tables(spark, sf, "embeddings"), 0.40, bits = 8).orderBy("vec_a", "vec_b").collect().toSeq
     assert(auto == explicit8,
       "auto-derived bits must equal the explicit 8-bit form at fixture scale")
   }

@@ -8,10 +8,11 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
 
-/** `Tables` infers each table's parquet schema once and reads with it from
-  * then on. Pinned here: a repeated load runs no Spark job, the memoized
-  * read returns what a plain `spark.read.parquet` returns, a rewritten
-  * table is inferred again, and every call still builds its own relation. */
+/** `Tables` resolves each table's parquet relation once and reuses it from
+  * then on. Pinned here: a repeated load runs no Spark job and lists no
+  * files, the memoized read returns what a plain `spark.read.parquet`
+  * returns, a rewritten table is resolved again (schema and rows), and
+  * every call still gets its own attribute ids. */
 class TablesSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val sf = s"${SparkEntry.FixtureRoot}/sf0.001"
@@ -50,6 +51,17 @@ class TablesSpec extends AnyFunSuite {
     }
   }
 
+  test("a repeated load discovers no files, for every fixture table") {
+    val discovered = org.apache.spark.metrics.source.HiveCatalogMetrics.METRIC_FILES_DISCOVERED
+    for (t <- tables) {
+      Tables(spark, sf, t).schema
+      val before = discovered.getCount
+      Tables(spark, sf, t).schema
+      assert(discovered.getCount == before,
+        s"loading $t again discovered ${discovered.getCount - before} files")
+    }
+  }
+
   test("the memoized read returns the schema and rows of a plain parquet read") {
     for (t <- tables) {
       val path = s"$sf/$t.parquet"
@@ -64,15 +76,20 @@ class TablesSpec extends AnyFunSuite {
   test("a table rewritten at the same path is read with its new schema") {
     val dir = java.nio.file.Files.createTempDirectory("graft_tables_")
     try {
+      val path = s"$dir/t.parquet"
       spark.range(3).select(col("id").cast("int").as("a"))
-        .write.mode("overwrite").parquet(s"$dir/t.parquet")
+        .write.mode("overwrite").parquet(path)
       assert(Tables(spark, dir.toString, "t").columns.toSeq == Seq("a"))
+      // Same schema, other files: only the rows tell a stale file index.
+      spark.range(10, 14).select(col("id").cast("int").as("a"))
+        .write.mode("overwrite").parquet(path)
+      assert(digest(Tables(spark, dir.toString, "t")) == digest(spark.read.parquet(path)))
       spark.range(5).select(col("id").as("a"), col("id").cast("string").as("b"))
-        .write.mode("overwrite").parquet(s"$dir/t.parquet")
+        .write.mode("overwrite").parquet(path)
       val again = Tables(spark, dir.toString, "t")
-      assert(again.schema == spark.read.parquet(s"$dir/t.parquet").schema)
+      assert(again.schema == spark.read.parquet(path).schema)
       assert(again.columns.toSeq == Seq("a", "b"))
-      assert(again.count() == 5)
+      assert(digest(again) == digest(spark.read.parquet(path)))
     } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
