@@ -551,7 +551,7 @@ object Dedup {
   //   <base>_toks  (doc_id, toks)       bucketed by doc_id — the verify
   //     stage's token sets, joined on the candidate's existing-side id.
   // Appends land as correctly-hashed per-bucket files honoring each
-  // table's own catalog spec ([[TextOps.appendFps]] rationale);
+  // table's own catalog spec ([[TextOps.appendBucketed]]);
   // [[TextOps.compactStore]] applies unchanged to either table.
   // --------------------------------------------------------------------
 
@@ -563,18 +563,15 @@ object Dedup {
   private def toksOf(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), array_distinct(split(col("text"), " ")).as("toks"))
 
-  /** Write both store tables from a day-0 corpus. One file per bucket
-    * (repartition-then-bucketBy, the [[TextOps.dedupStore]] precondition
-    * for sort-free probes under the legacy bucketed-scan conf). */
+  /** Write both store tables from a day-0 corpus, one sorted file per
+    * bucket ([[TextOps.bucketedWriter]]). */
   def buildSigStore(s: SparkSession, base: String, loc: String, docs: DataFrame,
                     buckets: Int = SigStoreBuckets): Unit = {
     s.sql(s"DROP TABLE IF EXISTS ${base}_bands")
     s.sql(s"DROP TABLE IF EXISTS ${base}_toks")
-    bandsOf(docs).repartition(buckets, col("band"), col("sig"))
-      .write.bucketBy(buckets, "band", "sig").sortBy("band", "sig")
+    TextOps.bucketedWriter(bandsOf(docs), buckets, "band", "sig")
       .option("path", s"$loc/bands").mode("overwrite").saveAsTable(s"${base}_bands")
-    toksOf(docs).repartition(buckets, col("doc_id"))
-      .write.bucketBy(buckets, "doc_id").sortBy("doc_id")
+    TextOps.bucketedWriter(toksOf(docs), buckets, "doc_id")
       .option("path", s"$loc/toks").mode("overwrite").saveAsTable(s"${base}_toks")
   }
 
@@ -598,17 +595,8 @@ object Dedup {
     * lakehouse-format atomic two-table commit (the named fix) replaces the
     * file-layer append. */
   def appendSigStore(s: SparkSession, base: String, docs: DataFrame): Unit = {
-    def widthOf(tbl: String): Int =
-      TextOps.storeMeta(s)(org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-        .bucketSpec.map(_.numBuckets).getOrElse(SigStoreBuckets)
-    val tw = widthOf(s"${base}_toks")
-    toksOf(docs).repartition(tw, col("doc_id"))
-      .write.bucketBy(tw, "doc_id").sortBy("doc_id")
-      .mode("append").saveAsTable(s"${base}_toks")
-    val bw = widthOf(s"${base}_bands")
-    bandsOf(docs).repartition(bw, col("band"), col("sig"))
-      .write.bucketBy(bw, "band", "sig").sortBy("band", "sig")
-      .mode("append").saveAsTable(s"${base}_bands")
+    TextOps.appendBucketed(s, s"${base}_toks", toksOf(docs))
+    TextOps.appendBucketed(s, s"${base}_bands", bandsOf(docs))
   }
 
   /** Screen a batch against the persisted store: batch-side signatures are
@@ -660,58 +648,20 @@ object Dedup {
   }
 
   // --------------------------------------------------------------------
-  // Incremental near-dup cluster MAINTENANCE over the signature store —
-  // the text-tier twin of [[Similarity.maintainEmbedClusterStore]] (r13's
-  // headline), closing the last asymmetry between the two near-dup tiers:
-  // the embed tier had build/append/screen/maintained-clusters, the sig
-  // tier stopped at build/append/screen while [[dedupClusters]] recomputed
-  // signatures + candidates + CC over the WHOLE corpus every run. The
-  // maintained store adds a third table,
-  //   <base>_labels (doc_id, canonical_id)  bucketed by doc_id
-  // — the transitive near-dup cluster labels of everything ingested so
-  // far. Day-N maintenance computes signatures for the BATCH only (store
-  // side exchange-free, the [[screenAgainstStore]] plan), exact-verifies
-  // only NEW-edge pairs (batch×store via the bucketed band join + batch×
-  // batch via [[candidatePairs]] — never re-verifying the accumulated
-  // corpus's edges), and merges labels through a CONTRACTED graph: each
-  // new edge's endpoints collapse to their existing canonical labels
-  // (labels are component MINIMA, so contraction preserves merged minima
-  // — the [[Similarity]] r13 argument, unchanged), so connected components
-  // runs over touched components + new nodes only, not the corpus. The
-  // label table is cluster membership — orders of magnitude smaller than
-  // the corpus — and publishes per-run DELTAS (changed ∪ first-time rows,
-  // [[TextOps.publishLabelDelta]]) that fold into a fresh base generation
-  // at the [[TextOps.LabelFoldRuns]] cadence via the manifest-committed
-  // rewrite ([[TextOps.publishBucketed]]); readers overlay
-  // latest-wins ([[TextOps.readLabels]]).
+  // Near-dup cluster MAINTENANCE over the signature store: the shared
+  // label lifecycle ([[TextOps.buildLabels]] / [[TextOps.maintainLabels]])
+  // with this tier's edges (exact token-set Jaccard) and append.
   // --------------------------------------------------------------------
 
-  /** Build the signature store PLUS the day-0 label table: LSH-verified
-    * pairs within `docs` at `threshold`, connected components, labels
-    * persisted bucketed by doc_id (only documents that belong to some
-    * near-dup cluster appear — the [[dedupClusters]] output convention). */
+  /** Build the signature store PLUS the day-0 label table `<base>_labels
+    * (doc_id, canonical_id)` over LSH-verified pairs within `docs` at
+    * `threshold` ([[TextOps.buildLabels]]). */
   def buildSigClusterStore(s: SparkSession, base: String, loc: String, docs: DataFrame,
                            threshold: Double = 0.6, buckets: Int = SigStoreBuckets): Unit = {
     buildSigStore(s, base, loc, docs, buckets)
-    s.sql(s"DROP TABLE IF EXISTS ${base}_labels")
-    // A delta left over from a prior store registered under the same name
-    // would overlay stale labels onto the fresh day-0 build. Clear the
-    // dropped external table's FILES too (ADVICE r20 low): a crash before
-    // commitDay0's own delta-clear would leave them for the next append to
-    // re-register, resurrecting pre-rebuild labels via latest-wins.
-    s.sql(s"DROP TABLE IF EXISTS ${base}_labels_delta")
-    TextOps.clearDeltaDir(s, loc, "labels")
-    connectedComponentsAuto(
-        exactJaccard(candidatePairs(bandsOf(docs)), docs)
-          .filter(col("jaccard") >= threshold).select("doc_a", "doc_b"))
-      .select(col("id").as("doc_id"), col("comp").as("canonical_id"))
-      .repartition(buckets, col("doc_id"))
-      .write.bucketBy(buckets, "doc_id").sortBy("doc_id")
-      // Generation-suffixed + manifest-committed from birth (r20) — see
-      // [[TextOps.day0Location]].
-      .option("path", TextOps.day0Location(loc, "labels"))
-      .mode("overwrite").saveAsTable(s"${base}_labels")
-    TextOps.commitDay0(s, s"${base}_labels", "labels")
+    TextOps.buildLabels(s, s"${base}_labels", loc, "labels", "doc_id", buckets,
+      exactJaccard(candidatePairs(bandsOf(docs)), docs)
+        .filter(col("jaccard") >= threshold).select("doc_a", "doc_b"))
   }
 
   /** A batch's NEW verified edges: batch×store candidates from the bucketed
@@ -741,75 +691,12 @@ object Dedup {
         .filter(col("jaccard") >= threshold).select("doc_a", "doc_b"))
   }
 
-  /** Day-N cluster maintenance — the [[Similarity.maintainEmbedClusterStore]]
-    * protocol verbatim on the text tier: derive the batch's new verified
-    * edges, CONTRACT each endpoint through the persisted label table, run
-    * connected components over the contracted graph only, write back
-    * remapped + first-time labels, append the batch's store-novel docs.
-    * Novelty screens against the BAND table's distinct doc_ids (the ADVICE
-    * r13 heal: `_toks` appends first, so a crash between the two writes
-    * leaves a token row with no band rows — a `_toks` screen would hide
-    * that doc forever; the `_bands` screen re-drives the half-committed
-    * append, and the duplicate `_toks` row is already tolerated by the
-    * countDistinct conventions in [[screenAgainstStore]]). Label publish is
-    * the DELTA append ([[TextOps.publishLabelDelta]] — changed ∪ first-time
-    * rows only, folding into a fresh base generation every
-    * [[TextOps.LabelFoldRuns]] runs through [[TextOps.publishBucketed]]),
-    * recovered first thing on entry. */
+  /** Day-N cluster maintenance of the signature store
+    * ([[TextOps.maintainLabels]]). */
   def maintainSigClusterStore(s: SparkSession, base: String, batch: DataFrame,
-                              threshold: Double = 0.6): Unit = {
-    TextOps.recoverSwap(s, s"${base}_labels")
-    val edges = newVerifiedSigEdges(s, base, batch, threshold)
-    val lab = TextOps.readLabels(s, s"${base}_labels", "doc_id")
-    val contracted = edges
-      .join(lab.select(col("doc_id").as("doc_a"), col("canonical_id").as("ca")),
-        Seq("doc_a"), "left")
-      .join(lab.select(col("doc_id").as("doc_b"), col("canonical_id").as("cb")),
-        Seq("doc_b"), "left")
-      .select(coalesce(col("ca"), col("doc_a")).as("doc_a"),
-        coalesce(col("cb"), col("doc_b")).as("doc_b"))
-    val m = connectedComponentsAuto(contracted)
-    // Labels whose canonical CHANGED under the merge — an inner join
-    // against the small component map (broadcast side), so only the
-    // touched minority survives. Pre-r18 this was a left join producing
-    // ALL labels for a corpus-sized full-table rewrite; now only the
-    // changed ∪ first-time delta is derived, materialized, and published
-    // (VERDICT r17 next #2 — at sf100 the full rewrite made a 1% batch
-    // cost 1.2× the bare clustering).
-    val changed = lab
-      .join(m.select(col("id").as("canonical_id"), col("comp").as("newc")),
-        Seq("canonical_id"))
-      .filter(col("newc") =!= col("canonical_id"))
-      .select(col("doc_id"), col("newc").as("canonical_id"))
-    // Contracted nodes not yet labeled = batch docs + store docs whose first
-    // edge ever is a cross edge (they were singletons at build time).
-    val fresh = m.join(lab.select(col("doc_id").as("id")), Seq("id"), "left_anti")
-      .select(col("id").as("doc_id"), col("comp").as("canonical_id"))
-    // Materialize BEFORE touching the store: the delta derivation reads the
-    // very label tables the publish appends to (the appendNovel self-read
-    // barrier), and the append below changes the band/toks tables the edge
-    // derivation read. The checkpoint is DELTA-sized now, not corpus-sized.
-    val delta = changed.unionByName(fresh).localCheckpoint()
-    val novel = batch
-      .join(s.table(s"${base}_bands").select("doc_id").distinct(),
-        Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    appendSigStore(s, base, novel)
-    // Registered compaction cadence (VERDICT r15 next #4): once a bucket
-    // accretes past the [[TextOps.MaintCompactFilesPerBucket]] append
-    // files, rewrite it — and in the key-unique `_toks` table, retire any
-    // duplicate row the band-screen heal's re-driven append tolerated. The
-    // multi-row-per-key `_bands` table rides the same cadence with no key
-    // retirement (ADVICE r17 medium: it accretes one file per bucket per
-    // append too, and every screen and edge derivation joins it — without
-    // compaction its single-file sort-free scan property degraded forever).
-    TextOps.compactStore(s, s"${base}_toks",
-      maxFilesPerBucket = TextOps.MaintCompactFilesPerBucket,
-      dedupKeys = Seq("doc_id"))
-    TextOps.compactStore(s, s"${base}_bands",
-      maxFilesPerBucket = TextOps.MaintCompactFilesPerBucket)
-    TextOps.publishLabelDelta(s, s"${base}_labels", "doc_id", SigStoreBuckets, delta)
-  }
+                              threshold: Double = 0.6): Unit =
+    TextOps.maintainLabels(s, s"${base}_labels", "doc_id", s"${base}_bands", s"${base}_toks",
+      batch, newVerifiedSigEdges(s, base, batch, threshold))(appendSigStore(s, base, _))
 
   /** Registered store-backed cluster maintenance — [[dedupClusters]]'s
     * incremental twin: the even-doc_id half builds the store + day-0 labels

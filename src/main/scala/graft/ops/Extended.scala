@@ -318,7 +318,8 @@ object Extended {
     * proves the non-parquet source path end-to-end (header handling, typed
     * read, round-trip fidelity) and is oracle-checked against the original
     * parquet. Staging happens AT MOST ONCE per (format, sfDir) per JVM via
-    * [[stageOnce]] into a process-private temp directory, so the registered
+    * [[stageOnce]] into a directory under the process-private
+    * [[TextOps.storeRoot]] (deleted at JVM exit), so the registered
     * query's steady-state execution path is the read alone (a bench
     * re-measure times zero writes) and two concurrent JVMs (driver Verify +
     * sbt test) can never race on a shared staging path. Schema is explicit
@@ -328,7 +329,8 @@ object Extended {
 
   private[ops] def stageOnce(key: String)(write: String => Unit): String =
     staged.computeIfAbsent(key, { _ =>
-      val dir = java.nio.file.Files.createTempDirectory("graft_stage_").toString
+      val dir = java.nio.file.Files.createTempDirectory(
+        java.nio.file.Paths.get(TextOps.storeRoot), "graft_stage_").toString
       write(dir)
       dir
     })
@@ -415,13 +417,11 @@ object Extended {
       val B = bucketsFor(Tables(s, d, "lineitem").count())
       s.sql(s"DROP TABLE IF EXISTS $liT")
       s.sql(s"DROP TABLE IF EXISTS $ordT")
-      Tables(s, d, "lineitem").select("l_orderkey", "l_quantity")
-        .repartition(B, col("l_orderkey"))
-        .write.bucketBy(B, "l_orderkey").sortBy("l_orderkey")
+      TextOps.bucketedWriter(Tables(s, d, "lineitem").select("l_orderkey", "l_quantity"),
+          B, "l_orderkey")
         .option("path", s"$dir/li").mode("overwrite").saveAsTable(liT)
-      Tables(s, d, "orders").select("o_orderkey", "o_orderpriority")
-        .repartition(B, col("o_orderkey"))
-        .write.bucketBy(B, "o_orderkey").sortBy("o_orderkey")
+      TextOps.bucketedWriter(Tables(s, d, "orders").select("o_orderkey", "o_orderpriority"),
+          B, "o_orderkey")
         .option("path", s"$dir/ord").mode("overwrite").saveAsTable(ordT)
     }
     s.table(liT).join(s.table(ordT), col("l_orderkey") === col("o_orderkey"))

@@ -239,11 +239,9 @@ object Similarity {
                           buckets: Int = EmbedStoreBuckets): Unit = {
     s.sql(s"DROP TABLE IF EXISTS ${base}_ebands")
     s.sql(s"DROP TABLE IF EXISTS ${base}_evecs")
-    embedBandsOf(vecs, bands, bits).repartition(buckets, col("band"), col("bucket"))
-      .write.bucketBy(buckets, "band", "bucket").sortBy("band", "bucket")
+    TextOps.bucketedWriter(embedBandsOf(vecs, bands, bits), buckets, "band", "bucket")
       .option("path", s"$loc/ebands").mode("overwrite").saveAsTable(s"${base}_ebands")
-    vecs.select("vec_id", "embedding").repartition(buckets, col("vec_id"))
-      .write.bucketBy(buckets, "vec_id").sortBy("vec_id")
+    TextOps.bucketedWriter(vecs.select("vec_id", "embedding"), buckets, "vec_id")
       .option("path", s"$loc/evecs").mode("overwrite").saveAsTable(s"${base}_evecs")
     // (bands, bits) is build-time INDEX METADATA: a screen or append run
     // with different values silently produces mismatched buckets — near-dups
@@ -262,8 +260,7 @@ object Similarity {
     * fails, naming the missing ones. */
   private[graft] def embedStoreParams(s: SparkSession, base: String,
                                       bands: Int = -1, bits: Int = -1): (Int, Int) = {
-    val props = TextOps.storeMeta(s)(
-      org.apache.spark.sql.catalyst.TableIdentifier(s"${base}_ebands")).properties
+    val props = TextOps.storeMeta(s, s"${base}_ebands").properties
     val missing = Seq("graft.bands", "graft.bits").filterNot(props.contains)
     require(missing.isEmpty, s"embed band store '$base' has no ${missing.mkString(", ")} " +
       s"table propert${if (missing.size == 1) "y" else "ies"} on ${base}_ebands — " +
@@ -278,7 +275,7 @@ object Similarity {
 
   /** Append a batch of (vec_id, embedding) rows the caller has already
     * screened as novel; each table's own catalog bucket spec is honored
-    * (the [[TextOps.appendNovel]] r11 lesson) and the batch must be
+    * ([[TextOps.appendBucketed]]) and the batch must be
     * materialized if its lineage reads either store table. (bands, bits)
     * resolve from the store's own table properties ([[embedStoreParams]]).
     * The VECTOR table appends first: a crash between the two writes then
@@ -289,17 +286,8 @@ object Similarity {
   def appendEmbedBandStore(s: SparkSession, base: String, vecs: DataFrame,
                            bands: Int = -1, bits: Int = -1): Unit = {
     val (bn, bt) = embedStoreParams(s, base, bands, bits)
-    def widthOf(tbl: String): Int =
-      TextOps.storeMeta(s)(org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-        .bucketSpec.map(_.numBuckets).getOrElse(EmbedStoreBuckets)
-    val vw = widthOf(s"${base}_evecs")
-    vecs.select("vec_id", "embedding").repartition(vw, col("vec_id"))
-      .write.bucketBy(vw, "vec_id").sortBy("vec_id")
-      .mode("append").saveAsTable(s"${base}_evecs")
-    val bw = widthOf(s"${base}_ebands")
-    embedBandsOf(vecs, bn, bt).repartition(bw, col("band"), col("bucket"))
-      .write.bucketBy(bw, "band", "bucket").sortBy("band", "bucket")
-      .mode("append").saveAsTable(s"${base}_ebands")
+    TextOps.appendBucketed(s, s"${base}_evecs", vecs.select("vec_id", "embedding"))
+    TextOps.appendBucketed(s, s"${base}_ebands", embedBandsOf(vecs, bn, bt))
   }
 
   /** Screen a batch against the persisted band store: candidates from the
@@ -379,52 +367,21 @@ object Similarity {
   }
 
   // --------------------------------------------------------------------
-  // Incremental SemDeDup cluster MAINTENANCE over the band store — the
-  // r12 gap (VERDICT next #1): [[embedClusters]] recomputes candidates +
-  // verify + connected components over the WHOLE corpus every run, yet the
-  // band store already persists exactly the candidate structure an
-  // incremental pass needs. The maintained store adds a third table,
-  //   <base>_elabels (vec_id, canonical_id)  bucketed by vec_id
-  // — the transitive cluster labels of everything ingested so far. Day-N
-  // maintenance screens only the BATCH (bands computed once, store side
-  // exchange-free), verifies only NEW-edge pairs (batch×store + batch×
-  // batch — never re-verifying the accumulated corpus's edges), and merges
-  // labels through a CONTRACTED graph: each new edge's endpoints collapse
-  // to their existing canonical labels, so the connected-components pass
-  // runs over touched components + new nodes only, not the corpus. The
-  // label table itself is cluster membership — orders of magnitude smaller
-  // than the corpus — and rewrites in full per maintenance run (a
-  // lakehouse MERGE would rewrite only changed rows; same named fix as the
-  // other store tiers' compaction race).
+  // SemDeDup cluster MAINTENANCE over the band store: the shared label
+  // lifecycle ([[TextOps.buildLabels]] / [[TextOps.maintainLabels]]) with
+  // this tier's edges (banded cosine) and append.
   // --------------------------------------------------------------------
 
-  /** Build the band store PLUS the day-0 label table: banded verified
-    * pairs within `vecs`, connected components, labels persisted bucketed
-    * by vec_id (only vectors that belong to some near-dup cluster appear —
-    * the [[embedClusters]] output convention). */
+  /** Build the band store PLUS the day-0 label table `<base>_elabels
+    * (vec_id, canonical_id)` over banded verified pairs within `vecs`
+    * ([[TextOps.buildLabels]]). */
   def buildEmbedClusterStore(s: SparkSession, base: String, loc: String, vecs: DataFrame,
                              threshold: Double = 0.40, bands: Int = 4, bits: Int = 8,
                              buckets: Int = EmbedStoreBuckets): Unit = {
     buildEmbedBandStore(s, base, loc, vecs, bands, bits, buckets)
-    s.sql(s"DROP TABLE IF EXISTS ${base}_elabels")
-    // A delta left over from a prior store registered under the same name
-    // would overlay stale labels onto the fresh day-0 build. Clear the
-    // dropped external table's FILES too (ADVICE r20 low): a crash before
-    // commitDay0's own delta-clear would leave them for the next append to
-    // re-register, resurrecting pre-rebuild labels via latest-wins.
-    s.sql(s"DROP TABLE IF EXISTS ${base}_elabels_delta")
-    TextOps.clearDeltaDir(s, loc, "elabels")
-    Dedup.connectedComponentsAuto(
-        embedNearDupBanded(vecs, threshold, bands, bits)
-          .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
-      .select(col("id").as("vec_id"), col("comp").as("canonical_id"))
-      .repartition(buckets, col("vec_id"))
-      .write.bucketBy(buckets, "vec_id").sortBy("vec_id")
-      // Generation-suffixed + manifest-committed from birth (r20) — see
-      // [[TextOps.day0Location]].
-      .option("path", TextOps.day0Location(loc, "elabels"))
-      .mode("overwrite").saveAsTable(s"${base}_elabels")
-    TextOps.commitDay0(s, s"${base}_elabels", "elabels")
+    TextOps.buildLabels(s, s"${base}_elabels", loc, "elabels", "vec_id", buckets,
+      embedNearDupBanded(vecs, threshold, bands, bits)
+        .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
   }
 
   /** A batch's NEW verified edges: batch×store candidates from the bucketed
@@ -454,90 +411,20 @@ object Similarity {
       embedNearDupBanded(batch, threshold, bands, bits).select("vec_a", "vec_b"))
   }
 
-  /** Day-N cluster maintenance: derive the batch's new verified edges,
-    * CONTRACT each endpoint through the persisted label table (an endpoint
-    * already in a cluster collapses to its canonical id — labels are
-    * component MINIMA, so the contracted graph's min-label components are
-    * the merged graph's true minima), run connected components over that
-    * contracted graph only, then publish the DELTA: labels whose canonical
-    * changed plus first-time-clustered nodes, appended latest-wins and
-    * folded at the [[TextOps.LabelFoldRuns]] cadence. Appends the
-    * batch's store-novel vectors into the band store (replay-idempotent:
-    * a replayed batch's vectors are no longer novel, and the label merge
-    * recomputes the same deterministic fixed point). Deep merge chains are
-    * safe by construction — [[Dedup.connectedComponentsAuto]] probes
-    * min-label and switches to star contraction past the depth cap. */
+  /** Day-N cluster maintenance of the band store
+    * ([[TextOps.maintainLabels]]). */
   def maintainEmbedClusterStore(s: SparkSession, base: String, batch: DataFrame,
-                                threshold: Double = 0.40): Unit = {
-    recoverLabelSwap(s, base)
-    val (bands, bits) = embedStoreParams(s, base)
-    val edges = newVerifiedEdges(s, base, batch, threshold, bands, bits)
-    val lab = TextOps.readLabels(s, s"${base}_elabels", "vec_id")
-    val contracted = edges
-      .join(lab.select(col("vec_id").as("vec_a"), col("canonical_id").as("ca")),
-        Seq("vec_a"), "left")
-      .join(lab.select(col("vec_id").as("vec_b"), col("canonical_id").as("cb")),
-        Seq("vec_b"), "left")
-      .select(coalesce(col("ca"), col("vec_a")).as("doc_a"),
-        coalesce(col("cb"), col("vec_b")).as("doc_b"))
-    val m = Dedup.connectedComponentsAuto(contracted)
-    // Labels whose canonical CHANGED under the merge — inner join against
-    // the small component map, touched minority only (the
-    // [[Dedup.maintainSigClusterStore]] delta derivation, VERDICT r17
-    // next #2: the full-table rewrite dominated a 1% batch at scale).
-    val changed = lab
-      .join(m.select(col("id").as("canonical_id"), col("comp").as("newc")),
-        Seq("canonical_id"))
-      .filter(col("newc") =!= col("canonical_id"))
-      .select(col("vec_id"), col("newc").as("canonical_id"))
-    // Contracted nodes not yet labeled = batch vectors + store vectors whose
-    // first edge ever is a cross edge (they were singletons at build time).
-    val fresh = m.join(lab.select(col("vec_id").as("id")), Seq("id"), "left_anti")
-      .select(col("id").as("vec_id"), col("comp").as("canonical_id"))
-    // Materialize BEFORE touching the store: the delta derivation reads the
-    // very label tables the publish appends to (the appendNovel self-read
-    // barrier), and the append below changes the band tables the edge
-    // derivation read. The checkpoint is DELTA-sized now, not corpus-sized.
-    val delta = changed.unionByName(fresh).localCheckpoint()
-    // Band-store append novelty is screened against the BAND table, not the
-    // vector table (ADVICE r13): [[appendEmbedBandStore]] writes vectors
-    // first, so a crash between the two writes leaves a vector row with no
-    // band rows — screening on `_evecs` would classify that vector as
-    // non-novel on replay and its band rows would NEVER be written, making
-    // it permanently invisible to candidate generation (both
-    // [[screenEmbedStore]] and [[newVerifiedEdges]] join on `_ebands`).
-    // Screening on `_ebands` re-drives the half-committed append instead;
-    // the resulting duplicate `_evecs` row is already tolerated by the
-    // distinct-candidate conventions in every consumer.
-    val novel = batch
-      .join(s.table(s"${base}_ebands").select("vec_id").distinct(),
-        Seq("vec_id"), "left_anti")
-      .localCheckpoint()
-    appendEmbedBandStore(s, base, novel)
-    // Registered compaction cadence (VERDICT r15 next #4): once a bucket
-    // accretes past the [[TextOps.MaintCompactFilesPerBucket]] append
-    // files, rewrite it — and in the key-unique `_evecs` table, retire any
-    // duplicate row the band-screen heal's re-driven append tolerated.
-    TextOps.compactStore(s, s"${base}_evecs",
-      maxFilesPerBucket = TextOps.MaintCompactFilesPerBucket,
-      dedupKeys = Seq("vec_id"))
-    // The multi-row-per-key `_ebands` table rides the same cadence with no
-    // key retirement (ADVICE r17 medium: it accretes one file per bucket
-    // per append too, and every screen and edge derivation joins it).
-    TextOps.compactStore(s, s"${base}_ebands",
-      maxFilesPerBucket = TextOps.MaintCompactFilesPerBucket)
-    publishLabels(s, base, delta)
-  }
-
-  /** Delta-proportional label publish (VERDICT r17 next #2) — the shared
-    * append-then-fold protocol, see [[TextOps.publishLabelDelta]]. */
-  private[graft] def publishLabels(s: SparkSession, base: String, delta: DataFrame): Unit =
-    TextOps.publishLabelDelta(s, s"${base}_elabels", "vec_id", EmbedStoreBuckets, delta)
+                                threshold: Double = 0.40): Unit =
+    TextOps.maintainLabels(s, s"${base}_elabels", "vec_id", s"${base}_ebands", s"${base}_evecs",
+      batch, {
+        val (bands, bits) = embedStoreParams(s, base)
+        newVerifiedEdges(s, base, batch, threshold, bands, bits)
+      })(appendEmbedBandStore(s, base, _))
 
   /** Re-point the label table at its manifest-committed generation after a
     * crash between a fold's manifest PUT and its `SET LOCATION` —
-    * [[TextOps.recoverSwap]]; [[maintainEmbedClusterStore]] runs it first
-    * thing, and the registered read path runs it before every label read. */
+    * [[TextOps.recoverSwap]], which [[TextOps.maintainLabels]] runs first
+    * thing; the registered read path runs it before every label read. */
   private[graft] def recoverLabelSwap(s: SparkSession, base: String): Unit =
     TextOps.recoverSwap(s, s"${base}_elabels")
 

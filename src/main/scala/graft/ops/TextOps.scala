@@ -197,7 +197,7 @@ object TextOps {
   /** Store root is PROCESS-private (the [[Extended.stageOnce]] rationale):
     * the driver's Verify and a dev sbt JVM must never race on one path.
     * Deleted recursively on JVM exit (ADVICE r08). */
-  private[ops] lazy val storeRoot: String = {
+  private[graft] lazy val storeRoot: String = {
     val dir = java.nio.file.Files.createTempDirectory("graft_store_")
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       import java.nio.file._
@@ -237,14 +237,7 @@ object TextOps {
     val tbl = canonStoreName(d)
     buildStoreOnce(s, s"store_$d", tbl) { loc =>
       s.sql(s"DROP TABLE IF EXISTS $tbl")
-      // repartition on fp BEFORE the bucketed write: task partitioning then
-      // coincides with bucket assignment, so each bucket is exactly ONE file
-      // — the precondition for Spark's reader to trust the write-time sortBy
-      // (FileSourceScanExec only reports sorted output for single-file
-      // buckets), which deletes the probe-side Sort as well as the Exchange.
-      fps.filter(col("b") === 0).select("fp").distinct()
-        .repartition(StoreBuckets, col("fp"))
-        .write.bucketBy(StoreBuckets, "fp").sortBy("fp")
+      bucketedWriter(fps.filter(col("b") === 0).select("fp").distinct(), StoreBuckets, "fp")
         .option("path", loc).mode("overwrite").saveAsTable(tbl)
     }
     fps.filter(col("b") === 1)
@@ -280,9 +273,7 @@ object TextOps {
     val tbl = canonStoreName(d) + "_maint"
     buildStoreOnce(s, s"maint_$d", tbl) { loc =>
       s.sql(s"DROP TABLE IF EXISTS $tbl")
-      fps.filter(col("b") === 0).select("fp").distinct()
-        .repartition(StoreBuckets, col("fp"))
-        .write.bucketBy(StoreBuckets, "fp").sortBy("fp")
+      bucketedWriter(fps.filter(col("b") === 0).select("fp").distinct(), StoreBuckets, "fp")
         .option("path", loc).mode("overwrite").saveAsTable(tbl)
       appendNovel(s, tbl,
         fps.filter(col("b") === 1).select("fp").distinct())
@@ -290,13 +281,47 @@ object TextOps {
     s.table(tbl).orderBy("fp")
   }
 
-  /** Catalog metadata for a store table — the same lookup [[compactStore]]
-    * makes for the location; [[appendNovel]] reads the bucket spec from it
-    * so maintenance honors whatever width the table was BUILT with. */
-  private[ops] def storeMeta(s: SparkSession) =
+  /** Catalog metadata for store table `tbl`: its location, properties and
+    * bucket spec. */
+  private[ops] def storeMeta(s: SparkSession, tbl: String) =
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.catalog
-      .getTableMetadata(_: org.apache.spark.sql.catalyst.TableIdentifier)
+      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(tbl))
+
+  /** The bucket spec of store table `tbl`; a table without one is refused,
+    * naming it. */
+  private def bucketSpecOf(tbl: String,
+                           meta: org.apache.spark.sql.catalyst.catalog.CatalogTable) =
+    meta.bucketSpec.getOrElse(throw new IllegalArgumentException(
+      s"$tbl is not a bucketed table — store writes need its catalog bucket spec"))
+
+  /** The store's one layout rule, and the only place it is spelled out:
+    * `repartition(n, cols)` BEFORE `bucketBy(n, cols).sortBy(cols)`. Task
+    * partitioning then coincides with bucket assignment (the shuffle and
+    * Spark's bucketed writer share `HashPartitioning.partitionIdExpression`,
+    * and AQE never coalesces a repartition with an explicit count), so each
+    * bucket is exactly ONE sorted file — the precondition for Spark's reader
+    * to trust the write-time sortBy (FileSourceScanExec only reports sorted
+    * output for single-file buckets), which deletes the probe-side Sort as
+    * well as the Exchange. Callers add the path, mode and table name. */
+  private[graft] def bucketedWriter(df: DataFrame, n: Int, cols: String*) =
+    df.repartition(n, cols.map(col): _*)
+      .write.bucketBy(n, cols.head, cols.tail: _*).sortBy(cols.head, cols.tail: _*)
+
+  /** Append `df` to bucketed table `tbl` through [[bucketedWriter]], at the
+    * width and on the bucket columns of the table's OWN catalog spec (r11: a
+    * hardcoded width made every append to a store of another width throw
+    * Spark's spec-mismatch AnalysisException — maintenance must work on any
+    * store a user built, not just ones this module wrote). Every store table
+    * sorts by its bucket columns, and Spark's spec check refuses an append
+    * to one that does not. Callers must guarantee `df` is materialized — no
+    * live scan of `tbl` left in its lineage (the self-read barrier
+    * [[appendNovel]] explains). */
+  private[graft] def appendBucketed(s: SparkSession, tbl: String, df: DataFrame): Unit = {
+    val spec = bucketSpecOf(tbl, storeMeta(s, tbl))
+    bucketedWriter(df, spec.numBuckets, spec.bucketColumnNames: _*)
+      .mode("append").saveAsTable(tbl)
+  }
 
   /** Append a batch's NOVEL fingerprints into the bucketed store. The novel
     * set is materialized (eager localCheckpoint) BEFORE the append starts:
@@ -305,30 +330,13 @@ object TextOps {
     * correctness would ride on the scan's file listing being snapshotted
     * before the new files land (ADVICE r09). With it, the store read
     * completes first and the write sources RDD blocks, not table files.
-    * The bucket count comes from the table's OWN catalog bucketSpec (r11:
-    * a hardcoded `StoreBuckets` made every append to a non-32-bucket store
-    * throw Spark's spec-mismatch AnalysisException — maintenance must work
-    * on any store a user built, not just ones this module wrote). */
+    * The streaming path ([[graft.streaming.Streams.storeDedup]]) anti-joins
+    * and checkpoints once per micro-batch — because it also EMITS the novel
+    * rows downstream — and calls [[appendBucketed]] directly so the store
+    * isn't probed a second time inside the append. */
   private[graft] def appendNovel(s: SparkSession, tbl: String, batch: DataFrame): Unit =
-    appendFps(s, tbl,
+    appendBucketed(s, tbl,
       batch.join(s.table(tbl), Seq("fp"), "left_anti").localCheckpoint())
-
-  /** Bucketed append of ALREADY-novel fingerprints, honoring the table's
-    * own catalog bucket spec. Callers must guarantee `fps` is (a) disjoint
-    * from the store and (b) materialized — no live scan of `tbl` left in
-    * its lineage (the self-read barrier [[appendNovel]]'s Scaladoc
-    * explains). [[appendNovel]] establishes both for batch callers; the
-    * streaming path ([[graft.streaming.Streams.storeDedup]]) anti-joins
-    * and checkpoints once per micro-batch — because it also EMITS the
-    * novel rows downstream — and calls this directly so the store isn't
-    * probed a second time inside the append. */
-  private[graft] def appendFps(s: SparkSession, tbl: String, fps: DataFrame): Unit = {
-    val nBuckets = storeMeta(s)(org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-      .bucketSpec.map(_.numBuckets).getOrElse(StoreBuckets)
-    fps.repartition(nBuckets, col("fp"))
-      .write.bucketBy(nBuckets, "fp").sortBy("fp")
-      .mode("append").saveAsTable(tbl)
-  }
 
   /** Compact the bucketed store after day-N appends — the maintenance step
     * that keeps the probe plan sort-free forever (VERDICT r09 missing #2):
@@ -349,7 +357,7 @@ object TextOps {
     * Shuffle partition i IS bucket i — the shuffle and Spark's bucketed
     * writer share `HashPartitioning.partitionIdExpression`, and AQE never
     * coalesces a repartition with an explicit count (the same property
-    * [[appendFps]] relies on). Each oversized bucket's single staged
+    * [[bucketedWriter]] relies on). Each oversized bucket's single staged
     * `part-<i>-<uuid>-c000…` file then moves in as
     * `part-<i>-<uuid>_<bucket>.c000…`, whose trailing `_<bucket>` Spark's
     * `BucketingUtils` parses exactly like a bucketed-writer file, and that
@@ -380,9 +388,8 @@ object TextOps {
   def compactStore(s: SparkSession, tbl: String, maxFilesPerBucket: Int = 1,
                    afterListing: () => Unit = () => (),
                    dedupKeys: Seq[String] = Nil): Int = {
-    val meta = storeMeta(s)(org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-    val spec = meta.bucketSpec.getOrElse(
-      sys.error(s"compactStore($tbl): not a bucketed table"))
+    val meta = storeMeta(s, tbl)
+    val spec = bucketSpecOf(tbl, meta)
     require(spec.bucketColumnNames.forall(dedupKeys.contains) || dedupKeys.isEmpty,
       s"compactStore($tbl): dedupKeys (${dedupKeys.mkString(",")}) must contain " +
         s"the bucket columns (${spec.bucketColumnNames.mkString(",")})")
@@ -513,7 +520,7 @@ object TextOps {
     * sweep below and overwrite its manifest commit. */
   private[graft] def commitDay0(s: SparkSession, tbl: String, stem: String): Unit = {
     val live = new org.apache.hadoop.fs.Path(
-      storeMeta(s)(org.apache.spark.sql.catalyst.TableIdentifier(tbl)).location)
+      storeMeta(s, tbl).location)
     val parent = live.getParent
     val fs = StoreFs.fs(s, live)
     withSwapLock(fs, parent, stem, s"commitDay0($tbl)") {
@@ -622,17 +629,16 @@ object TextOps {
     * file-layer operations route through the Hadoop `FileSystem` API
     * ([[StoreFs]]); on S3 the lock's create-no-overwrite is not atomic, so
     * single-writer there must come from the scheduler (one maintenance
-    * process per store, as [[compactStore]] already requires). Bucket
-    * width honors the live table's own catalog spec (the [[appendNovel]]
-    * convention). */
-  private[graft] def publishBucketed(s: SparkSession, tbl: String, bucketCol: String,
-                                     defaultBuckets: Int, df: DataFrame): Unit = {
+    * process per store, as [[compactStore]] already requires). Width and
+    * bucket columns are the live table's own catalog spec (the
+    * [[appendBucketed]] convention). */
+  private[graft] def publishBucketed(s: SparkSession, tbl: String, df: DataFrame): Unit = {
     // A prior writer may have crashed between its manifest PUT and its SET
     // LOCATION — reconcile FIRST, so the sweep keeps the committed
     // generation, not the one the catalog still names.
     recoverSwap(s, tbl)
-    val meta = storeMeta(s)(org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-    val w = meta.bucketSpec.map(_.numBuckets).getOrElse(defaultBuckets)
+    val meta = storeMeta(s, tbl)
+    val spec = bucketSpecOf(tbl, meta)
     val live = new org.apache.hadoop.fs.Path(meta.location)
     val stem = stemOf(tbl, meta)
     val parent = live.getParent
@@ -642,8 +648,7 @@ object TextOps {
       s.sql(s"DROP TABLE IF EXISTS ${tbl}_stage")
       sweepGenerations(fs, parent, stem, live, who)
       val gen = new org.apache.hadoop.fs.Path(parent, genDirName(stem, System.nanoTime()))
-      df.repartition(w, col(bucketCol))
-        .write.bucketBy(w, bucketCol).sortBy(bucketCol)
+      bucketedWriter(df, spec.numBuckets, spec.bucketColumnNames: _*)
         .option("path", gen.toString).mode("overwrite").saveAsTable(s"${tbl}_stage")
       s.sql(s"DROP TABLE ${tbl}_stage")
       StoreFs.writeAtomic(fs, manifestPath(parent, stem), gen.getName)
@@ -652,9 +657,8 @@ object TextOps {
     }
   }
 
-  /** Compaction cadence for the REGISTERED day-N maintenance paths
-    * ([[graft.ops.Dedup.maintainSigClusterStore]] /
-    * [[graft.ops.Similarity.maintainEmbedClusterStore]]): each append lands
+  /** Compaction cadence for the REGISTERED day-N maintenance path
+    * ([[maintainLabels]]): each append lands
     * one file per bucket, and once a bucket carries more than this many
     * files it is rewritten to one sorted file — at which point the
     * key-unique inert tables (`_toks`, `_evecs`) also retire any duplicate
@@ -718,7 +722,7 @@ object TextOps {
     * consult the writer's lock. The superseded generation is left to the
     * next publish's sweep, which runs under the lock. */
   private[graft] def recoverSwap(s: SparkSession, tbl: String): Unit = {
-    val meta = storeMeta(s)(org.apache.spark.sql.catalyst.TableIdentifier(tbl))
+    val meta = storeMeta(s, tbl)
     val live = new org.apache.hadoop.fs.Path(meta.location)
     val fs = StoreFs.fs(s, live)
     val stem = stemOf(tbl, meta)
@@ -823,7 +827,8 @@ object TextOps {
     * into the base at the [[LabelFoldRuns]] cadence. `delta` must hold
     * exactly the keys whose canonical changed plus the first-time-labeled
     * keys — key-unique, disjoint from unchanged rows (the
-    * [[graft.ops.Dedup.maintainSigClusterStore]] derivation).
+    * [[maintainLabels]] derivation). The delta is bucketed like the label
+    * table it overlays.
     *
     * Crash windows, all of which leave a readable, convergent store:
     *   - mid-append: partial per-bucket files carry this run's seq; the
@@ -839,9 +844,9 @@ object TextOps {
     * swap lock inside [[publishBucketed]] itself. CrashPointSweepSpec
     * crashes the append and the fold at every filesystem mutation. */
   private[graft] def publishLabelDelta(s: SparkSession, tbl: String, keyCol: String,
-                                       defaultBuckets: Int, delta: DataFrame): Unit = {
-    val meta = storeMeta(s)(org.apache.spark.sql.catalyst.TableIdentifier(tbl))
-    val w = meta.bucketSpec.map(_.numBuckets).getOrElse(defaultBuckets)
+                                       delta: DataFrame): Unit = {
+    val meta = storeMeta(s, tbl)
+    val w = bucketSpecOf(tbl, meta).numBuckets
     val baseLoc = new org.apache.hadoop.fs.Path(meta.location)
     val stem = stemOf(tbl, meta)
     // `<stem>_delta` never matches [[GenSuffixRe]], so the generation
@@ -853,9 +858,7 @@ object TextOps {
         case null => 0L
         case x => x.asInstanceOf[Long]
       })
-    delta.withColumn("seq", lit(nextSeq))
-      .repartition(w, col(keyCol))
-      .write.bucketBy(w, keyCol).sortBy(keyCol)
+    bucketedWriter(delta.withColumn("seq", lit(nextSeq)), w, keyCol)
       .option("path", deltaLoc.toString).mode("append").saveAsTable(dt)
     // Empty appends (a no-change replay) do not advance the fold counter —
     // `runs` counts seqs with actual rows. Cadence ≤ 1 folds UNCONDITIONALLY,
@@ -875,7 +878,7 @@ object TextOps {
       // retire. The new generation's write READS base + delta and writes a
       // third location, so there is no self-read hazard; the superseded
       // base generation is deleted only after the commit.
-      publishBucketed(s, tbl, keyCol, defaultBuckets, readLabels(s, tbl, keyCol))
+      publishBucketed(s, tbl, readLabels(s, tbl, keyCol))
       val fs = StoreFs.fs(s, deltaLoc)
       // Refresh even when a delete fails: the session's cached listing
       // would otherwise name the deleted files, and every later read of
@@ -884,6 +887,127 @@ object TextOps {
       try StoreFs.listFiles(fs, deltaLoc).foreach(st => fs.delete(st.getPath, false))
       finally s.catalog.refreshTable(dt)
     }
+  }
+
+  // --------------------------------------------------------------------
+  // Incremental near-dup cluster MAINTENANCE, shared by both near-dup
+  // tiers: the text tier's signature store ([[Dedup.buildSigClusterStore]],
+  // `<base>_labels (doc_id, canonical_id)` over `_bands`/`_toks`) and the
+  // embedding tier's band store ([[Similarity.buildEmbedClusterStore]] —
+  // the SemDeDup shape, `<base>_elabels (vec_id, canonical_id)` over
+  // `_ebands`/`_evecs`). The from-scratch queries ([[Dedup.dedupClusters]],
+  // [[Similarity.embedClusters]]) recompute candidates + verify + connected
+  // components over the WHOLE corpus every run, yet each band store already
+  // persists exactly the candidate structure an incremental pass needs. The
+  // label table, bucketed by the key, holds the transitive cluster labels
+  // of everything ingested so far — cluster membership, orders of
+  // magnitude smaller than the corpus. Day-N maintenance screens only the
+  // BATCH (bands computed once, store side exchange-free), verifies only
+  // NEW-edge pairs (batch×store + batch×batch — never re-verifying the
+  // accumulated corpus's edges), and merges labels through a CONTRACTED
+  // graph: each new edge's endpoints collapse to their existing canonical
+  // labels, so connected components run over touched components + new
+  // nodes only, not the corpus. Labels are component MINIMA, so the
+  // contracted graph's min-label components are the merged graph's true
+  // minima. Each run publishes a DELTA (changed ∪ first-time rows,
+  // [[publishLabelDelta]]) that folds into a fresh base generation at the
+  // [[LabelFoldRuns]] cadence via the manifest-committed
+  // [[publishBucketed]]; readers overlay latest-wins ([[readLabels]]).
+  // --------------------------------------------------------------------
+
+  /** Day-0 label build of a cluster store: connected components over the
+    * tier's verified `edges` (doc_a, doc_b), persisted as `tbl` (`keyCol`,
+    * canonical_id) bucketed by `keyCol` — only keys that belong to some
+    * near-dup cluster appear, the from-scratch queries' output convention.
+    * Generation-suffixed ([[day0Location]]) and manifest-committed
+    * ([[commitDay0]]) from birth (r20). */
+  private[graft] def buildLabels(s: SparkSession, tbl: String, loc: String, stem: String,
+                                 keyCol: String, buckets: Int, edges: DataFrame): Unit = {
+    s.sql(s"DROP TABLE IF EXISTS $tbl")
+    // A delta left over from a prior store registered under the same name
+    // would overlay stale labels onto the fresh day-0 build. Clear the
+    // dropped external table's FILES too (ADVICE r20 low): a crash before
+    // commitDay0's own delta-clear would leave them for the next append to
+    // re-register, resurrecting pre-rebuild labels via latest-wins.
+    s.sql(s"DROP TABLE IF EXISTS ${tbl}_delta")
+    clearDeltaDir(s, loc, stem)
+    bucketedWriter(Dedup.connectedComponentsAuto(edges)
+        .select(col("id").as(keyCol), col("comp").as("canonical_id")), buckets, keyCol)
+      .option("path", day0Location(loc, stem))
+      .mode("overwrite").saveAsTable(tbl)
+    commitDay0(s, tbl, stem)
+  }
+
+  /** Day-N cluster maintenance of label table `tbl`, recovered first thing
+    * on entry ([[recoverSwap]]): derive the batch's new verified `edges`
+    * (two endpoint columns, by-name so they are built after the recovery),
+    * CONTRACT each endpoint through the current labels, run connected
+    * components over the contracted graph only, then publish the delta
+    * ([[publishLabelDelta]]). Deep merge chains are safe by construction —
+    * [[Dedup.connectedComponentsAuto]] probes min-label and switches to
+    * star contraction past the depth cap.
+    *
+    * The batch's store-novel rows go to the tier's `append`, which writes
+    * the key-unique `keyed` table (`_toks` / `_evecs`) BEFORE the `bands`
+    * table. Novelty is screened against the BAND table's distinct keys (the
+    * ADVICE r13 heal): a crash between the two writes leaves a keyed row
+    * with no band rows, and a screen on `keyed` would classify that row as
+    * non-novel on replay — its band rows would never be written, leaving
+    * it permanently invisible to candidate generation (every screen and
+    * edge derivation joins the band table). The band screen re-drives the
+    * half-committed append instead; the duplicate keyed row is tolerated by
+    * every consumer's distinct-candidate (countDistinct) convention. This
+    * makes the run replay-idempotent: a replayed batch's rows are no longer
+    * novel, and the label merge recomputes the same deterministic fixed
+    * point. */
+  private[graft] def maintainLabels(s: SparkSession, tbl: String, keyCol: String,
+                                    bands: String, keyed: String, batch: DataFrame,
+                                    edges: => DataFrame)(append: DataFrame => Unit): Unit = {
+    recoverSwap(s, tbl)
+    val e = edges
+    val Array(a, b) = e.columns
+    val lab = readLabels(s, tbl, keyCol)
+    val contracted = e
+      .join(lab.select(col(keyCol).as(a), col("canonical_id").as("ca")), Seq(a), "left")
+      .join(lab.select(col(keyCol).as(b), col("canonical_id").as("cb")), Seq(b), "left")
+      .select(coalesce(col("ca"), col(a)).as("doc_a"), coalesce(col("cb"), col(b)).as("doc_b"))
+    val m = Dedup.connectedComponentsAuto(contracted)
+    // Labels whose canonical CHANGED under the merge — an inner join
+    // against the small component map (broadcast side), so only the
+    // touched minority survives. Pre-r18 this was a left join producing
+    // ALL labels for a corpus-sized full-table rewrite (VERDICT r17 next
+    // #2 — at sf100 the full rewrite made a 1% batch cost 1.2× the bare
+    // clustering).
+    val changed = lab
+      .join(m.select(col("id").as("canonical_id"), col("comp").as("newc")),
+        Seq("canonical_id"))
+      .filter(col("newc") =!= col("canonical_id"))
+      .select(col(keyCol), col("newc").as("canonical_id"))
+    // Contracted nodes not yet labeled = batch rows + store rows whose first
+    // edge ever is a cross edge (they were singletons at build time).
+    val fresh = m.join(lab.select(col(keyCol).as("id")), Seq("id"), "left_anti")
+      .select(col("id").as(keyCol), col("comp").as("canonical_id"))
+    // Materialize BEFORE touching the store: the delta derivation reads the
+    // very label tables the publish appends to (the [[appendNovel]]
+    // self-read barrier), and the append below changes the band tables the
+    // edge derivation read. The checkpoint is DELTA-sized, not corpus-sized.
+    val delta = changed.unionByName(fresh).localCheckpoint()
+    val novel = batch
+      .join(s.table(bands).select(keyCol).distinct(), Seq(keyCol), "left_anti")
+      .localCheckpoint()
+    append(novel)
+    // Registered compaction cadence (VERDICT r15 next #4): once a bucket
+    // accretes past the [[MaintCompactFilesPerBucket]] append files,
+    // rewrite it — and in the key-unique `keyed` table, retire any
+    // duplicate row the band-screen heal's re-driven append tolerated. The
+    // multi-row-per-key `bands` table rides the same cadence with no key
+    // retirement (ADVICE r17 medium: it accretes one file per bucket per
+    // append too, and every screen and edge derivation joins it — without
+    // compaction its single-file sort-free scan property degraded forever).
+    compactStore(s, keyed, maxFilesPerBucket = MaintCompactFilesPerBucket,
+      dedupKeys = Seq(keyCol))
+    compactStore(s, bands, maxFilesPerBucket = MaintCompactFilesPerBucket)
+    publishLabelDelta(s, tbl, keyCol, delta)
   }
 
   /** Registered day-N maintenance WITH compaction: day 1 writes the store
@@ -902,9 +1026,7 @@ object TextOps {
     val tbl = canonStoreName(d) + "_cmp"
     buildStoreOnce(s, s"cmp_$d", tbl) { loc =>
       s.sql(s"DROP TABLE IF EXISTS $tbl")
-      fps.filter(col("b") === 0).select("fp").distinct()
-        .repartition(StoreBuckets, col("fp"))
-        .write.bucketBy(StoreBuckets, "fp").sortBy("fp")
+      bucketedWriter(fps.filter(col("b") === 0).select("fp").distinct(), StoreBuckets, "fp")
         .option("path", loc).mode("overwrite").saveAsTable(tbl)
       (1 to 3).foreach { day =>
         appendNovel(s, tbl, fps.filter(col("b") === day).select("fp").distinct())

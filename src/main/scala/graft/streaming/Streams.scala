@@ -178,7 +178,7 @@ object Streams {
     * canonical-keep rule), anti-join the store — zero exchange on the
     * store side, the same bucketed-probe plan the batch queries pin —
     * hand the NOVEL documents to `onNovel`, then append their
-    * fingerprints into the store ([[graft.ops.TextOps.appendFps]], which
+    * fingerprints into the store ([[graft.ops.TextOps.appendBucketed]], which
     * honors the table's own catalog bucket spec) so the NEXT micro-batch,
     * and tomorrow's batch pipeline, probe against them.
     *
@@ -222,7 +222,7 @@ object Streams {
           .join(s.table(tbl), Seq("fp"), "left_anti")
           .localCheckpoint()
         onNovel(novel.select("doc_id", "fp", "text"), batchId)
-        graft.ops.TextOps.appendFps(s, tbl, novel.select("fp"))
+        graft.ops.TextOps.appendBucketed(s, tbl, novel.select("fp"))
       }
     checkpoint.foreach(w.option("checkpointLocation", _))
     w.start()

@@ -29,7 +29,7 @@ class CompactStoreSpec extends AnyFunSuite {
       fps(0 until 400).repartition(Buckets, col("fp"))
         .write.bucketBy(Buckets, "fp").sortBy("fp")
         .option("path", s"$dir/t").mode("overwrite").saveAsTable(tbl)
-      ops.TextOps.appendFps(spark, tbl,
+      ops.TextOps.appendBucketed(spark, tbl,
         fps(1000 until 1400).filter(bucketOf(col("fp")).isin(grow.toSeq: _*)))
       f(tbl, new java.io.File(s"$dir/t"))
     } finally {
@@ -107,6 +107,22 @@ class CompactStoreSpec extends AnyFunSuite {
       val e = intercept[RuntimeException](ops.TextOps.compactStore(spark, tbl))
       assert(e.getMessage.contains("part-00000-stray.snappy.parquet") && e.getMessage.contains(tbl),
         e.getMessage)
+    }
+  }
+
+  test("appendBucketed refuses a table with no bucket spec, naming it, and writes nothing") {
+    val tbl = s"graft_compact_plain_${ctr.incrementAndGet()}"
+    val dir = java.nio.file.Files.createTempDirectory("graft_compact_plain_")
+    try {
+      fps(0 until 10).write.option("path", s"$dir/t").mode("overwrite").saveAsTable(tbl)
+      val e = intercept[IllegalArgumentException](
+        ops.TextOps.appendBucketed(spark, tbl, fps(10 until 20)))
+      assert(e.getMessage.contains(tbl) && e.getMessage.contains("not a bucketed table"),
+        e.getMessage)
+      assert(spark.table(tbl).count() == 10)
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
     }
   }
 

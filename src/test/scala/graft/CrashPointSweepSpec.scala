@@ -102,7 +102,7 @@ class CrashPointSweepSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterA
   /** Publish `delta` — (doc_id, canonical_id) rows — into `st`'s labels. */
   private def publishDelta(delta: Map[Long, Long])(st: Store): Unit = {
     import spark.implicits._
-    ops.TextOps.publishLabelDelta(spark, st.tbl, "doc_id", Buckets,
+    ops.TextOps.publishLabelDelta(spark, st.tbl, "doc_id",
       delta.toSeq.toDF("doc_id", "canonical_id"))
   }
 

@@ -186,8 +186,15 @@ class Round13Spec extends AnyFunSuite {
       // a second file (deterministic multi-file state, no bucket-hash
       // luck) — and doubles as a robustness fixture: the duplicate rows
       // must not change any screen verdict (distinct-candidate counting).
-      ops.Dedup.appendSigStore(spark, base, d0)
-      ops.Dedup.appendSigStore(spark, base, Seq(doc(3)).toDF("doc_id", "text"))
+      // Appends take their width from each table's own spec: every file
+      // lands in one of the store's 4 buckets, whatever the module default.
+      def appendInSpec(docs: org.apache.spark.sql.DataFrame): Unit = {
+        ops.Dedup.appendSigStore(spark, base, docs)
+        for (sfx <- Seq("_bands", "_toks"); b <- bucketFiles(s"$base$sfx").keys)
+          assert(b.toInt < 4, s"$base$sfx has a file in bucket $b of a 4-bucket table")
+      }
+      appendInSpec(d0)
+      appendInSpec(Seq(doc(3)).toDF("doc_id", "text"))
       val batch = Seq(doc(3), 50L -> "unrelated vocabulary entirely disjoint tokens nothing shared with others at all").toDF("doc_id", "text")
       val before = ops.Dedup.screenAgainstStore(spark, base, batch)
         .orderBy("doc_id").collect().toSeq

@@ -241,8 +241,7 @@ class Round15Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
         ops.TextOps.genDirName("labels", System.nanoTime()))
       assert(fs.mkdirs(inFlight))
       val e = intercept[IllegalStateException] {
-        ops.TextOps.publishBucketed(spark, s"${base}_labels", "doc_id", 8,
-          spark.table(s"${base}_labels"))
+        ops.TextOps.publishBucketed(spark, s"${base}_labels", spark.table(s"${base}_labels"))
       }
       assert(e.getMessage.contains("labels_swap.lock") && e.getMessage.contains("single-writer"),
         s"the error must name the lock and the violated contract: ${e.getMessage}")

@@ -180,7 +180,7 @@ class Round18Spec extends AnyFunSuite {
       ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
       // The crash state: fold's publishBucketed committed, the delta clear
       // never ran. Reproduce it exactly by folding manually.
-      ops.TextOps.publishBucketed(spark, s"${base}_labels", "doc_id", 8,
+      ops.TextOps.publishBucketed(spark, s"${base}_labels",
         ops.TextOps.readLabels(spark, s"${base}_labels", "doc_id"))
       assert(baseOf(s"${base}_labels") == sigDay1Want, "fixture: fold committed")
       assert(filesPerBucket(s"${base}_labels_delta").nonEmpty,

@@ -172,4 +172,15 @@ class Round6Spec extends AnyFunSuite {
       .map(r => (r.getInt(0), r.getString(1), r.getInt(2)))
     assert(viaCsv.toSeq == direct.toSeq)
   }
+
+  test("staged sources live under the store root, which is deleted at JVM exit") {
+    val root = new java.io.File(ops.TextOps.storeRoot).getCanonicalFile.toPath
+    val files = ops.Extended.csvScan(spark, sf).inputFiles
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      val p = new java.io.File(new java.net.URI(f)).getCanonicalFile.toPath
+      assert(p.startsWith(root) && p.getParent.getFileName.toString.startsWith("graft_stage_"),
+        s"staged file $p is not in a graft_stage_* directory under $root")
+    }
+  }
 }
