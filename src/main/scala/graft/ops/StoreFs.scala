@@ -20,7 +20,9 @@ import org.apache.spark.sql.SparkSession
   * follows it by `ALTER TABLE … SET LOCATION` ([[TextOps.publishBucketed]],
   * [[TextOps.commitDay0]]). What still assumes rename-as-commit on S3A is
   * COMPACTION ([[TextOps.compactStore]] stages all of a table's rewritten
-  * buckets in one write, then commits them one rename per bucket;
+  * buckets in one bucketed write to a dot-prefixed directory under the
+  * table — registered as a staging table only for the write — then moves
+  * each staged bucket file in by its own rename, one bucket at a time;
   * [[Similarity.ivfCompactCells]] moves each cell's staged files one
   * rename at a time), plus the swap LOCK's `create(overwrite=false)`,
   * which is check-then-create there (no lock — single-writer must come

@@ -296,17 +296,36 @@ object TextOps {
       s"$tbl is not a bucketed table — store writes need its catalog bucket spec"))
 
   /** The store's one layout rule, and the only place it is spelled out:
-    * `repartition(n, cols)` BEFORE `bucketBy(n, cols).sortBy(cols)`. Task
-    * partitioning then coincides with bucket assignment (the shuffle and
-    * Spark's bucketed writer share `HashPartitioning.partitionIdExpression`,
-    * and AQE never coalesces a repartition with an explicit count), so each
-    * bucket is exactly ONE sorted file — the precondition for Spark's reader
-    * to trust the write-time sortBy (FileSourceScanExec only reports sorted
+    * `repartition(n, cols)`, then `coalesce(min(n, defaultParallelism))`,
+    * BEFORE `bucketBy(n, cols).sortBy(cols)`. The shuffle and Spark's
+    * bucketed writer share `HashPartitioning.partitionIdExpression`, and
+    * AQE never coalesces a repartition with an explicit count, so shuffle
+    * partition i holds exactly bucket i's rows. The coalesce merges WHOLE
+    * shuffle partitions without another shuffle, so every bucket's rows
+    * still meet in one write task; that task sorts by (bucket id, cols)
+    * and writes one file per bucket, so each bucket stays exactly ONE file
+    * sorted by its bucket columns — the precondition for Spark's reader to
+    * trust the write-time sortBy (FileSourceScanExec only reports sorted
     * output for single-file buckets), which deletes the probe-side Sort as
-    * well as the Exchange. Callers add the path, mode and table name. */
+    * well as the Exchange. `maxRecordsPerFile` is pinned to 0 here (a
+    * table this creates stores the pin; [[appendBucketed]] pins any other)
+    * because a session-level limit would split a bucket into several
+    * files and silently lose that sorted scan.
+    *
+    * Why the width is `min(n, defaultParallelism)`: a write task costs a
+    * fixed closure deserialization (~24 ms each on a `local[1]` session)
+    * whatever it writes, and one task per bucket ran 16 such tasks per
+    * embed-store write on one slot. The session's task slots are the
+    * parallelism that exists (the morsel-driven engine's rule: threads, not
+    * data cuts, set it), so the write launches no more tasks than slots;
+    * with `n` or more slots the coalesce is a no-op that Catalyst's
+    * `CollapseRepartition` removes. Callers add the path, mode and table
+    * name. */
   private[graft] def bucketedWriter(df: DataFrame, n: Int, cols: String*) =
     df.repartition(n, cols.map(col): _*)
-      .write.bucketBy(n, cols.head, cols.tail: _*).sortBy(cols.head, cols.tail: _*)
+      .coalesce(math.min(n, df.sparkSession.sparkContext.defaultParallelism))
+      .write.option("maxRecordsPerFile", 0L)
+      .bucketBy(n, cols.head, cols.tail: _*).sortBy(cols.head, cols.tail: _*)
 
   /** Append `df` to bucketed table `tbl` through [[bucketedWriter]], at the
     * width and on the bucket columns of the table's OWN catalog spec (r11: a
@@ -318,7 +337,13 @@ object TextOps {
     * live scan of `tbl` left in its lineage (the self-read barrier
     * [[appendNovel]] explains). */
   private[graft] def appendBucketed(s: SparkSession, tbl: String, df: DataFrame): Unit = {
-    val spec = bucketSpecOf(tbl, storeMeta(s, tbl))
+    val meta = storeMeta(s, tbl)
+    val spec = bucketSpecOf(tbl, meta)
+    // An append writes with the table's STORED options, not the writer's
+    // (Spark swaps in the existing table's descriptor), so the pin only
+    // holds for tables [[bucketedWriter]] created; any other gets it once.
+    if (!meta.storage.properties.get("maxRecordsPerFile").contains("0"))
+      s.sql(s"ALTER TABLE $tbl SET SERDEPROPERTIES ('maxRecordsPerFile' = '0')")
     bucketedWriter(df, spec.numBuckets, spec.bucketColumnNames: _*)
       .mode("append").saveAsTable(tbl)
   }
@@ -352,19 +377,21 @@ object TextOps {
     *
     * All oversized buckets are rewritten by ONE Spark write: read their
     * listed files, `repartition(numBuckets, bucketColumns)`, optionally
-    * retire duplicates, sort within partitions by the table's sortBy
-    * columns, write to a dot-prefixed staging directory under the store.
-    * Shuffle partition i IS bucket i — the shuffle and Spark's bucketed
-    * writer share `HashPartitioning.partitionIdExpression`, and AQE never
-    * coalesces a repartition with an explicit count (the same property
-    * [[bucketedWriter]] relies on). Each oversized bucket's single staged
-    * `part-<i>-<uuid>-c000…` file then moves in as
-    * `part-<i>-<uuid>_<bucket>.c000…`, whose trailing `_<bucket>` Spark's
-    * `BucketingUtils` parses exactly like a bucketed-writer file, and that
-    * bucket's listed files are deleted. Staged files of buckets that were
-    * not rewritten must be empty (partition 0 always gets a file) and are
-    * dropped with the staging directory — refused or failed compactions
-    * included, so no `.graft_compact_*` residue outlives the call.
+    * retire duplicates, then write through the store's one bucketed write
+    * ([[bucketedWriter]]) into a dot-prefixed staging table under the
+    * store — [[publishBucketed]]'s pattern: `saveAsTable` at the staging
+    * path, then an immediate `DROP` of that external registration, which
+    * leaves the files. The staged files therefore obey the same layout
+    * rule as every other store write: one sorted file per non-empty
+    * bucket, named `part-…_<bucket>.c000…`. Each oversized bucket's staged
+    * file moves in under its own name (the write's uuid keeps it distinct
+    * from every live file), and that bucket's listed files are deleted. A
+    * staged file of a bucket that is not being rewritten means a source
+    * file held another bucket's rows; moving it would duplicate that
+    * bucket's file and dropping it would lose rows, so the compaction
+    * refuses before anything moves. The staging table and directory are
+    * dropped on every exit, refused or failed compactions included, so no
+    * staging table and no `.graft_compact_*` residue outlives the call.
     *
     * COMMIT WINDOW: one rename plus the listed files' deletes per bucket.
     * A crash inside it leaves that bucket holding both the merged file and
@@ -393,22 +420,28 @@ object TextOps {
     require(spec.bucketColumnNames.forall(dedupKeys.contains) || dedupKeys.isEmpty,
       s"compactStore($tbl): dedupKeys (${dedupKeys.mkString(",")}) must contain " +
         s"the bucket columns (${spec.bucketColumnNames.mkString(",")})")
+    require(spec.sortColumnNames == spec.bucketColumnNames,
+      s"compactStore($tbl): the table sorts by (${spec.sortColumnNames.mkString(",")}), " +
+        s"not by its bucket columns (${spec.bucketColumnNames.mkString(",")}) as every " +
+        "store table does")
     val loc = new org.apache.hadoop.fs.Path(meta.location)
     val fs = StoreFs.fs(s, loc)
     val bucketId = """.*_(\d+)(?:\..*)?$""".r
+    def bucketOf(p: org.apache.hadoop.fs.Path): Int = p.getName match {
+      case bucketId(b) => b.toInt
+      case n => sys.error(s"compactStore($tbl): data file $n in ${p.getParent} has no " +
+        "_<bucket> suffix — not written by a bucketed writer")
+    }
     val byBucket = StoreFs.listFiles(fs, loc)
       .filter(_.getPath.getName.startsWith("part-"))
-      .groupBy(_.getPath.getName match {
-        case bucketId(b) => b
-        case n => sys.error(s"compactStore($tbl): data file $n in $loc has no " +
-          "_<bucket> suffix — not written by a bucketed writer")
-      })
+      .groupBy(st => bucketOf(st.getPath))
     val oversized = byBucket.filter(_._2.size > maxFilesPerBucket)
     afterListing()
     if (oversized.isEmpty) return 0
     // Staged on the store's own filesystem, so the commit is a real rename;
     // Spark's file listing skips `.`-prefixed names, so readers never see it.
     val tmp = new org.apache.hadoop.fs.Path(loc, s".graft_compact_${System.nanoTime()}")
+    val stage = s"${tbl}_compact"
     try {
       // The catalog schema spares the schema-inference job a bare read runs.
       val raw = s.read.schema(meta.schema)
@@ -420,7 +453,8 @@ object TextOps {
       // table's unique key and each rewritten bucket keeps one row per key;
       // leave Nil for multi-row-per-key tables (`_bands`). The key contains
       // the bucket columns, so after the repartition every copy of a key
-      // shares a partition and neither step below shuffles again.
+      // shares a partition, and neither step below nor the write's own
+      // repartition (the same partitioning) shuffles again.
       // Retirement is full-row distinct + an invariant check, NOT
       // dropDuplicates(keys) (ADVICE r16 low): the heal contract only ever
       // re-drives a batch BIT-IDENTICALLY, so rows sharing a key must be
@@ -443,26 +477,20 @@ object TextOps {
               "discard an arbitrary survivor"))))
           .drop("__graft_key_rows")
       }
-      val sorted = if (spec.sortColumnNames.isEmpty) merged
-        else merged.sortWithinPartitions(spec.sortColumnNames.map(col): _*)
-      sorted.write.option("maxRecordsPerFile", 0L).parquet(tmp.toString)
+      s.sql(s"DROP TABLE IF EXISTS $stage")
+      bucketedWriter(merged, spec.numBuckets, spec.bucketColumnNames: _*)
+        .option("path", tmp.toString).mode("overwrite").saveAsTable(stage)
+      s.sql(s"DROP TABLE $stage")
       val staged = StoreFs.listFiles(fs, tmp).map(_.getPath)
         .filter(_.getName.startsWith("part-"))
-        .groupBy(_.getName.stripPrefix("part-").takeWhile(_.isDigit).toInt)
-      // A row lands outside the rewritten buckets only if its source file
-      // held a row of another bucket; dropping that staged file would lose
-      // it, so refuse before anything moves.
-      staged.foreach { case (i, ps) =>
-        if (!oversized.keySet.exists(_.toInt == i) && ps.exists(parquetRows(s, _) > 0))
-          sys.error(s"compactStore($tbl): rewritten files hold rows of bucket $i, " +
-            "which is not being rewritten — the store's files do not match their " +
-            "bucket suffixes; refusing to drop those rows")
-      }
+        .groupBy(bucketOf)
+      for (i <- staged.keySet.toSeq.sorted if !oversized.contains(i))
+        sys.error(s"compactStore($tbl): rewritten files hold rows of bucket $i, " +
+          "which is not being rewritten — the store's files do not match their " +
+          "bucket suffixes; refusing to drop those rows")
       val moves = oversized.toSeq.map { case (bid, files) =>
-        staged.getOrElse(bid.toInt, Nil) match {
-          // part-00003-<uuid>-c000.snappy.parquet -> part-00003-<uuid>_00003.c000...
-          case Seq(p) => (p, new org.apache.hadoop.fs.Path(loc,
-            p.getName.replaceFirst("-c000", s"_$bid.c000")), files)
+        staged.getOrElse(bid, Nil) match {
+          case Seq(p) => (p, new org.apache.hadoop.fs.Path(loc, p.getName), files)
           case ps => sys.error(s"compactStore($tbl) bucket $bid: staged ${ps.size} files, expected 1")
         }
       }
@@ -473,16 +501,10 @@ object TextOps {
       }
       oversized.size
     } finally {
+      s.sql(s"DROP TABLE IF EXISTS $stage")
       StoreFs.deleteQuietly(fs, tmp)
       s.catalog.refreshTable(tbl)
     }
-  }
-
-  /** Row count of one parquet file, from its footer. */
-  private def parquetRows(s: SparkSession, p: org.apache.hadoop.fs.Path): Long = {
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, s.sparkContext.hadoopConfiguration))
-    try r.getRecordCount finally r.close()
   }
 
   /** The generation MANIFEST (VERDICT r19 next #2): `<stem>.manifest` in

@@ -64,7 +64,7 @@ class BucketingSpec extends AnyFunSuite {
   }
 
   test("date-partitioned table: the date predicate prunes partitions at plan time") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = TestSpark.tempDir("graft_part").toString
     Tables(spark, sf, "orders")
       .withColumn("o_year", year(col("o_orderdate")))
       .write.mode("overwrite").partitionBy("o_year")

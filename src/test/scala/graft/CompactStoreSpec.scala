@@ -24,7 +24,7 @@ class CompactStoreSpec extends AnyFunSuite {
     * only to `grow` — so exactly those buckets hold two files. */
   private def withStore[A](grow: Set[Int])(f: (String, java.io.File) => A): A = {
     val tbl = s"graft_compact_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_")
+    val dir = TestSpark.tempDir("graft_compact_")
     try {
       fps(0 until 400).repartition(Buckets, col("fp"))
         .write.bucketBy(Buckets, "fp").sortBy("fp")
@@ -40,6 +40,9 @@ class CompactStoreSpec extends AnyFunSuite {
 
   private val bucketId = """.*_(\d+)(?:\..*)?$""".r
 
+  /** Names of every table in the session catalog. */
+  private def tables(): Set[String] = spark.catalog.listTables().collect().map(_.name).toSet
+
   /** bucket -> (file name -> length) of the table's data files. */
   private def layout(loc: java.io.File): Map[Int, Map[String, Long]] =
     loc.listFiles().toSeq.filter(f => f.isFile && f.getName.startsWith("part-"))
@@ -54,6 +57,7 @@ class CompactStoreSpec extends AnyFunSuite {
       assert(before.filter(_._2.size > 1).keySet == grow,
         "fixture: exactly the grown buckets are oversized, and bucket 0 is not one")
       val want = spark.table(tbl).collect().map(_.getString(0)).toSet
+      val catalog = tables()
 
       assert(ops.TextOps.compactStore(spark, tbl) == grow.size)
 
@@ -70,6 +74,7 @@ class CompactStoreSpec extends AnyFunSuite {
       assert(misplaced.isEmpty, s"rows outside their hash's bucket: ${misplaced.collect().toSeq}")
       assert(spark.table(tbl).collect().map(_.getString(0)).toSet == want)
       assert(!loc.list().exists(_.startsWith(".graft_compact_")), "staging directory left behind")
+      assert(tables() == catalog, "staging table left behind")
     }
   }
 
@@ -112,7 +117,7 @@ class CompactStoreSpec extends AnyFunSuite {
 
   test("appendBucketed refuses a table with no bucket spec, naming it, and writes nothing") {
     val tbl = s"graft_compact_plain_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_compact_plain_")
+    val dir = TestSpark.tempDir("graft_compact_plain_")
     try {
       fps(0 until 10).write.option("path", s"$dir/t").mode("overwrite").saveAsTable(tbl)
       val e = intercept[IllegalArgumentException](
@@ -133,10 +138,12 @@ class CompactStoreSpec extends AnyFunSuite {
       val b3 = layout(loc)(3).keys.head
       plant(loc, b3, b3.replace("_00003.", "_00002."))
       val before = layout(loc)
+      val catalog = tables()
       val e = intercept[RuntimeException](ops.TextOps.compactStore(spark, tbl))
       assert(e.getMessage.contains("bucket 3"), e.getMessage)
       assert(layout(loc) == before)
       assert(!loc.list().exists(_.startsWith(".graft_compact_")), "staging directory left behind")
+      assert(tables() == catalog, "staging table left behind")
     }
   }
 }

@@ -15,7 +15,7 @@ class CorpusOpsSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   private def planted(rows: Seq[(Long, String)]): String = {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_corpus_")
+    val dir = TestSpark.tempDir("graft_corpus_")
     plantedDirs += dir
     rows.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")

@@ -86,7 +86,7 @@ class CrashPointSweepSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterA
 
   private def newStore(): Store = {
     val n = ctr.incrementAndGet()
-    Store(s"graft_sweep_$n", java.nio.file.Files.createTempDirectory(s"graft_sweep_${n}_"))
+    Store(s"graft_sweep_$n", TestSpark.tempDir(s"graft_sweep_${n}_"))
   }
 
   private def dropStore(st: Store): Unit = {

@@ -330,7 +330,7 @@ class PlanSpec extends AnyFunSuite {
     // A global sort of the batch x batch pairs is a range exchange plus a
     // sort whose order the union, the contraction and connected components
     // all discard.
-    val dir = java.nio.file.Files.createTempDirectory("graft_plan_edges_")
+    val dir = TestSpark.tempDir("graft_plan_edges_")
     val base = s"graft_plan_edges_${System.nanoTime}"
     val emb = Tables(spark, d, "embeddings").select("vec_id", "embedding")
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")

@@ -61,7 +61,7 @@ class RocksDbStateSpec extends AnyFunSuite {
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
 
-      val ckpt = Files.createTempDirectory("graft_ckpt_rocks_agg").toString
+      val ckpt = TestSpark.tempDir("graft_ckpt_rocks_agg").toString
       val stream = MemoryStream[(Timestamp, String, Double)]
       val events = stream.toDF().toDF("ts", "event_type", "value")
       val agg = Streams.hourlyByType(events, watermark = true)
@@ -109,7 +109,7 @@ class RocksDbStateSpec extends AnyFunSuite {
       implicit val sqlCtx = spark.sqlContext
       import spark.implicits._
 
-      val ckpt = Files.createTempDirectory("graft_ckpt_rocks_sess").toString
+      val ckpt = TestSpark.tempDir("graft_ckpt_rocks_sess").toString
       val stream = MemoryStream[(Long, Timestamp)]
       val events = stream.toDF().toDF("user_id", "ts")
       val sessions = Streams.sessionize(spark, events, gapMs = 10 * 60 * 1000L)

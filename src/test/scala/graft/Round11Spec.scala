@@ -62,7 +62,7 @@ class Round11Spec extends AnyFunSuite {
       (i.toLong, text, "en", "chain", text.length.toLong)
     }
     val docsDf = docRows.toDF("doc_id", "text", "lang", "source", "n_chars")
-    val dir = java.nio.file.Files.createTempDirectory("graft_chain_docs_")
+    val dir = TestSpark.tempDir("graft_chain_docs_")
     try {
       docsDf.coalesce(2).write.mode("overwrite").parquet(s"$dir/documents.parquet")
       // The pair graph the registered query will cluster, recomputed via
@@ -122,7 +122,7 @@ class Round11Spec extends AnyFunSuite {
     }
     val embDf = vecRows.toDF("vec_id", "embedding", "label")
       .withColumn("embedding", col("embedding").cast("array<float>"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_chain_emb_")
+    val dir = TestSpark.tempDir("graft_chain_emb_")
     try {
       embDf.coalesce(2).write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
       val bits = ops.Similarity.autoBits(n)
@@ -225,7 +225,7 @@ class Round11Spec extends AnyFunSuite {
 
     val prop = Prop.forAllNoShrink(gen) { case (batches, threshold, compactAfter) =>
       val tbl = s"graft_prop_store_${tblCounter.incrementAndGet()}"
-      val dir = java.nio.file.Files.createTempDirectory("graft_prop_store_")
+      val dir = TestSpark.tempDir("graft_prop_store_")
       def fps(ids: Seq[Int]) =
         ids.toDF("id").select(md5(col("id").cast("string")).as("fp"))
       try {

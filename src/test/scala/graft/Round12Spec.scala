@@ -86,7 +86,7 @@ class Round12Spec extends AnyFunSuite {
   test("non-default bucket width end-to-end: append honors the catalog spec, compaction restores the sort-free probe") {
     val Buckets = 5
     val tbl = s"graft_r12_store_${tblCounter.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r12_store_")
+    val dir = TestSpark.tempDir("graft_r12_store_")
     try {
       val (a, b) = ((0 to 40), (25 to 70))
       buildStore(tbl, dir.toString, Buckets, a)
@@ -116,7 +116,7 @@ class Round12Spec extends AnyFunSuite {
   test("compaction vs concurrent append: an append inside the listing->move window is never lost") {
     val Buckets = 4
     val tbl = s"graft_r12_store_${tblCounter.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r12_race_")
+    val dir = TestSpark.tempDir("graft_r12_race_")
     try {
       val (a, b, c) = ((0 to 30), (20 to 50), (45 to 80))
       buildStore(tbl, dir.toString, Buckets, a)

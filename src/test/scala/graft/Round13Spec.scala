@@ -94,7 +94,7 @@ class Round13Spec extends AnyFunSuite {
 
   test("embed-cluster store: day-N merge equals from-scratch CC (cross-day merge, singleton link, new cluster), replay idempotent") {
     val base = s"graft_r13_ecl_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r13_ecl_")
+    val dir = TestSpark.tempDir("graft_r13_ecl_")
     try {
       ops.Similarity.buildEmbedClusterStore(spark, base, dir.toString, day0, threshold = 0.9)
       // Day-0 labels: exactly the two planted clusters, minima canonical.
@@ -129,7 +129,7 @@ class Round13Spec extends AnyFunSuite {
 
   test("embed store params are table properties: mismatched caller values fail fast, defaults resolve from the store") {
     val base = s"graft_r13_prop_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r13_prop_")
+    val dir = TestSpark.tempDir("graft_r13_prop_")
     try {
       ops.Similarity.buildEmbedBandStore(spark, base, dir.toString, day0, bands = 4, bits = 6)
       assert(ops.Similarity.embedStoreParams(spark, base) == (4, 6))
@@ -177,7 +177,7 @@ class Round13Spec extends AnyFunSuite {
   test("sig store compaction: bands and toks tables compact to one sorted file per bucket, screen output unchanged") {
     import spark.implicits._
     val base = s"graft_r13_sig_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r13_sig_")
+    val dir = TestSpark.tempDir("graft_r13_sig_")
     def doc(i: Int) = i.toLong -> s"alpha bravo charlie delta echo foxtrot golf id$i tail$i more$i words$i here$i"
     try {
       val d0 = Seq(doc(1), doc(2)).toDF("doc_id", "text")
@@ -217,7 +217,7 @@ class Round13Spec extends AnyFunSuite {
 
   test("embed store compaction: ebands, evecs and elabels tables compact, screen and labels unchanged") {
     val base = s"graft_r13_ecmp_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r13_ecmp_")
+    val dir = TestSpark.tempDir("graft_r13_ecmp_")
     try {
       // 2 buckets (non-default width): the day-1 append then lands second
       // files in occupied buckets deterministically enough to exercise a
@@ -271,8 +271,8 @@ class Round13Spec extends AnyFunSuite {
     import spark.implicits._
 
     val tbl = s"graft_r13_replay_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r13_replay_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_r13_ckpt_").toString
+    val dir = TestSpark.tempDir("graft_r13_replay_")
+    val ckpt = TestSpark.tempDir("graft_r13_ckpt_").toString
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     Seq("seed doc").toDF("text")
       .select(md5(col("text").cast("binary")).as("fp")).distinct()
@@ -323,8 +323,8 @@ class Round13Spec extends AnyFunSuite {
     import spark.implicits._
 
     val base = s"graft_r13_ereplay_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r13_ereplay_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_r13_eckpt_").toString
+    val dir = TestSpark.tempDir("graft_r13_ereplay_")
+    val ckpt = TestSpark.tempDir("graft_r13_eckpt_").toString
     ops.Similarity.buildEmbedBandStore(spark, base, dir.toString, day0, bands = 4, bits = 8)
 
     val verdicts = mutable.ArrayBuffer.empty[(Long, Map[Long, Boolean])]
@@ -367,7 +367,7 @@ class Round13Spec extends AnyFunSuite {
 
   test("maintenance edge derivation: both store scans reach their joins exchange-free (the screen's plan shape)") {
     val base = s"graft_r13_plan_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r13_plan_")
+    val dir = TestSpark.tempDir("graft_r13_plan_")
     try {
       ops.Similarity.buildEmbedClusterStore(spark, base, dir.toString, day0, threshold = 0.9)
       val confs = Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1",
@@ -412,8 +412,8 @@ class Round13Spec extends AnyFunSuite {
     }.toDF("cent_id", "cemb")
     def v(id: Long, axis: Int) = StreamVec(id,
       Array.tabulate(8)(i => if (i == axis) 1.0f else 0.0f))
-    val dir = java.nio.file.Files.createTempDirectory("graft_r13_ivf_").toString + "/store"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_r13_ivfck_").toString
+    val dir = TestSpark.tempDir("graft_r13_ivf_").toString + "/store"
+    val ckpt = TestSpark.tempDir("graft_r13_ivfck_").toString
     ops.Similarity.ivfAssign(Seq(v(1, 0)).toDF("vec_id", "embedding"), cent)
       .write.mode("overwrite").partitionBy("cell").parquet(dir)
 
@@ -453,7 +453,7 @@ class Round13Spec extends AnyFunSuite {
   test("screen n_cands counts distinct candidates: a duplicate store row (crashed-append residue) cannot inflate it") {
     import spark.implicits._
     val base = s"graft_r13_dup_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r13_dup_")
+    val dir = TestSpark.tempDir("graft_r13_dup_")
     val text = "golf hotel india juliet kilo lima mike november oscar papa quebec romeo"
     try {
       ops.Dedup.buildSigStore(spark, base,

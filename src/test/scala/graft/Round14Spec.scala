@@ -98,7 +98,7 @@ class Round14Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("maintenance heals a vectors-written-bands-missing crash: band rows are re-driven, labels equal from-scratch") {
     val base = s"graft_r14_heal_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r14_heal_")
+    val dir = TestSpark.tempDir("graft_r14_heal_")
     try {
       ops.Similarity.buildEmbedClusterStore(spark, base, dir.toString, day0, threshold = 0.9)
       // Simulate appendEmbedBandStore dying between its two writes: the
@@ -147,8 +147,8 @@ class Round14Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     import spark.implicits._
 
     val base = s"graft_r14_nreplay_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r14_nreplay_")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_r14_nckpt_").toString
+    val dir = TestSpark.tempDir("graft_r14_nreplay_")
+    val ckpt = TestSpark.tempDir("graft_r14_nckpt_").toString
     val seed = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
     val fresh = "unrelated vocabulary entirely disjoint tokens nothing shared with the stored corpus at all"
     ops.Dedup.buildSigStore(spark, base,
@@ -206,8 +206,8 @@ class Round14Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     }.toDF("cent_id", "cemb")
     def v(id: Long, axis: Int) = StreamVec(id,
       Array.tabulate(8)(i => if (i == axis) 1.0f else 0.0f))
-    val dir = java.nio.file.Files.createTempDirectory("graft_r14_ivf_").toString + "/store"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_r14_ivfck_").toString
+    val dir = TestSpark.tempDir("graft_r14_ivf_").toString + "/store"
+    val ckpt = TestSpark.tempDir("graft_r14_ivfck_").toString
     ops.Similarity.ivfAssign(Seq(v(1, 0)).toDF("vec_id", "embedding"), cent)
       .write.mode("overwrite").partitionBy("cell").parquet(dir)
     val q = Seq(Tuple1(Array.tabulate(8)(i => if (i == 1) 1.0f else 0.0f))).toDF("qemb")
@@ -290,7 +290,7 @@ class Round14Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("sig cluster maintenance: cross-day merge, first-edge store singleton, new cluster — labels equal from-scratch") {
     val base = s"graft_r14_scl_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r14_scl_")
+    val dir = TestSpark.tempDir("graft_r14_scl_")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       assert(labelsOf(s"${base}_labels") == Map(1L -> 1L, 2L -> 1L),
@@ -313,7 +313,7 @@ class Round14Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("sig cluster maintenance replay: a re-delivered batch is a fixed point with no duplicate store rows") {
     val base = s"graft_r14_sclr_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r14_sclr_")
+    val dir = TestSpark.tempDir("graft_r14_sclr_")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
@@ -332,7 +332,7 @@ class Round14Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("sig maintenance heals a toks-written-bands-missing crash: band rows re-driven, labels equal from-scratch") {
     val base = s"graft_r14_sclh_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r14_sclh_")
+    val dir = TestSpark.tempDir("graft_r14_sclh_")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       // Simulate appendSigStore dying between its two writes: the batch's

@@ -103,7 +103,7 @@ class Round15Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     * Returns the generation the manifest committed. */
   private def crashBeforeSetLocation(tbl: String)(fold: => Unit): String = {
     val old = liveLocation(tbl)
-    val copy = java.nio.file.Files.createTempDirectory("graft_r15_gen_")
+    val copy = TestSpark.tempDir("graft_r15_gen_")
     val oldDir = new java.io.File(old.toUri)
     try {
       org.apache.commons.io.FileUtils.copyDirectory(oldDir, copy.toFile)
@@ -159,7 +159,7 @@ class Round15Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("heal → compact(_toks, dedupKeys): exactly one row per doc_id, screens and labels bit-identical") {
     val base = s"graft_r15_cmp_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r15_cmp_")
+    val dir = TestSpark.tempDir("graft_r15_cmp_")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       // The Round14Spec crash: _toks lands, _bands never does.
@@ -193,7 +193,7 @@ class Round15Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("heal → compact(_evecs, dedupKeys): exactly one row per vec_id, screens and labels bit-identical") {
     val base = s"graft_r15_ecmp_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r15_ecmp_")
+    val dir = TestSpark.tempDir("graft_r15_ecmp_")
     try {
       ops.Similarity.buildEmbedClusterStore(spark, base, dir.toString, eDay0, threshold = 0.9)
       // The Round14Spec crash: _evecs lands, _ebands never does.
@@ -229,7 +229,7 @@ class Round15Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("a second publish attempted mid-swap fails fast with a descriptive error and cannot clobber the stage") {
     val base = s"graft_r15_lock_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r15_lock_")
+    val dir = TestSpark.tempDir("graft_r15_lock_")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       // Another writer is mid-publish: it holds the lock and has a new
@@ -264,7 +264,7 @@ class Round15Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("label generation dirs keep a constant-length name and superseded/orphaned generations are reclaimed") {
     val base = s"graft_r15_gen_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r15_gen_")
+    val dir = TestSpark.tempDir("graft_r15_gen_")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       for (_ <- 1 to 3) ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)

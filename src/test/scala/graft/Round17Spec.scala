@@ -98,7 +98,7 @@ class Round17Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("sig-tier day-N maintenance compacts _toks past the file cadence and retires heal residue") {
     val base = s"graft_r17_cad_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r17_cad_")
+    val dir = TestSpark.tempDir("graft_r17_cad_")
     try {
       // buckets = 1 so every append lands in the same bucket: day-0 (1 file)
       // + planted heal residue (1) + two day-N appends (2) = 4 files, one
@@ -133,7 +133,7 @@ class Round17Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("embed-tier day-N maintenance compacts _evecs past the file cadence and retires heal residue") {
     val base = s"graft_r17_ecad_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r17_ecad_")
+    val dir = TestSpark.tempDir("graft_r17_ecad_")
     try {
       ops.Similarity.buildEmbedClusterStore(spark, base, dir.toString, eDay0,
         threshold = 0.9, buckets = 1)
@@ -166,7 +166,7 @@ class Round17Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("compactStore(dedupKeys) refuses to pick a survivor among rows whose payloads differ") {
     val base = s"graft_r17_conf_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r17_conf_")
+    val dir = TestSpark.tempDir("graft_r17_conf_")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 1)
       // doc 1 re-appears with DIFFERENT tokens — not a re-driven heal (those
@@ -176,6 +176,7 @@ class Round17Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
         .repartition(1, col("doc_id"))
         .write.bucketBy(1, "doc_id").sortBy("doc_id")
         .mode("append").saveAsTable(s"${base}_toks")
+      val catalog = spark.catalog.listTables().collect().map(_.name).toSet
       val e = intercept[Throwable] {
         ops.TextOps.compactStore(spark, s"${base}_toks", dedupKeys = Seq("doc_id"))
       }
@@ -191,6 +192,8 @@ class Round17Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
           _.getFileName.toString.startsWith(".graft_compact_")),
         "a refused compaction must not leave its staging directory behind")
       finally staging.close()
+      assert(spark.catalog.listTables().collect().map(_.name).toSet == catalog,
+        "a refused compaction must not leave its staging table behind")
       // Nothing was silently discarded: both payload variants still present.
       val n = spark.table(s"${base}_toks").filter(col("doc_id") === 1L).count()
       assert(n == 2L, "the conflicting rows must survive the refused compaction")
@@ -206,7 +209,7 @@ class Round17Spec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("published generations record their stem as a table property and reuse it") {
     val base = s"graft_r17_stem_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r17_stem_")
+    val dir = TestSpark.tempDir("graft_r17_stem_")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)

@@ -120,7 +120,7 @@ class Round18Spec extends AnyFunSuite {
     assert(ops.TextOps.LabelFoldRuns > 2,
       s"fixture: this test requires the production cadence, got ${ops.TextOps.LabelFoldRuns}")
     val base = s"graft_r18_delta_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r18_delta_")
+    val dir = TestSpark.tempDir("graft_r18_delta_")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
@@ -145,7 +145,7 @@ class Round18Spec extends AnyFunSuite {
 
   test("sig tier: the fold cadence rewrites the base through the stage-swap and clears the delta") {
     val base = s"graft_r18_fold_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r18_fold_")
+    val dir = TestSpark.tempDir("graft_r18_fold_")
     val saved = ops.TextOps.LabelFoldRuns
     try {
       ops.TextOps.LabelFoldRuns = 2
@@ -174,7 +174,7 @@ class Round18Spec extends AnyFunSuite {
 
   test("a crash between the fold's publish and the delta clear is a read-side no-op and the next run supersedes the residue") {
     val base = s"graft_r18_resid_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r18_resid_")
+    val dir = TestSpark.tempDir("graft_r18_resid_")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
@@ -201,7 +201,7 @@ class Round18Spec extends AnyFunSuite {
 
   test("a crash-interrupted delta append is superseded by the re-driven run at a fresh seq") {
     val base = s"graft_r18_part_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r18_part_")
+    val dir = TestSpark.tempDir("graft_r18_part_")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       // A maintenance run crashed mid-append: a SUBSET of its (correct,
@@ -229,7 +229,7 @@ class Round18Spec extends AnyFunSuite {
   test("embed tier: maintenance publishes a delta at the production cadence — overlay at the fixed point, base untouched") {
     assert(ops.TextOps.LabelFoldRuns > 1)
     val base = s"graft_r18_edelta_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r18_edelta_")
+    val dir = TestSpark.tempDir("graft_r18_edelta_")
     try {
       ops.Similarity.buildEmbedClusterStore(spark, base, dir.toString, eDay0, threshold = 0.9)
       val day0Labels = viewOf(s"${base}_elabels", "vec_id")
@@ -255,7 +255,7 @@ class Round18Spec extends AnyFunSuite {
     // after a fold, whose SET LOCATION must have kept the live table's
     // bucket spec.
     val base = s"graft_r18_plan_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r18_plan_")
+    val dir = TestSpark.tempDir("graft_r18_plan_")
     val prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     val savedRuns = ops.TextOps.LabelFoldRuns
     def assertShuffleFree(clue: String): Unit = {
@@ -313,7 +313,7 @@ class Round18Spec extends AnyFunSuite {
 
   test("maintenance compacts _bands past the cadence (ADVICE r17 medium)") {
     val base = s"graft_r18_bands_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r18_bands_")
+    val dir = TestSpark.tempDir("graft_r18_bands_")
     try {
       // buckets = 1: every append lands one file in the single bucket.
       // day-0 (1) + three maintenance appends = 4 > cadence 3 — the fourth
@@ -361,7 +361,7 @@ class Round18Spec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val base = s"graft_r18_stream_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r18_stream_")
+    val dir = TestSpark.tempDir("graft_r18_stream_")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 1)
       val stream = MemoryStream[StreamDoc]
@@ -398,7 +398,7 @@ class Round18Spec extends AnyFunSuite {
 
   test("ivfCompactCells bounds ingest accretion and retires replayed duplicates") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_r18_ivf_").toString
+    val dir = TestSpark.tempDir("graft_r18_ivf_").toString
     val cent = Seq((0L, vec(P1, (T, 0f), 0f)), (1L, vec(P2, (0f, T), 0f)))
       .toDF("cent_id", "cemb")
     val vecs = (0 until 8).map(i => (i.toLong, vec(if (i % 2 == 0) P1 else P2, (T, 0f), 0.001f * i)))

@@ -75,7 +75,7 @@ class Round19Spec extends AnyFunSuite {
 
   test("overlay read under the cardinality ceiling: broadcast anti-join, no shuffle (the r18 regime)") {
     val base = s"graft_r19_bc_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r19_bc_")
+    val dir = TestSpark.tempDir("graft_r19_bc_")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
@@ -102,7 +102,7 @@ class Round19Spec extends AnyFunSuite {
 
   test("overlay read ABOVE the cardinality ceiling: no forced broadcast, zero-exchange bucketed anti-join fallback") {
     val base = s"graft_r19_smj_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r19_smj_")
+    val dir = TestSpark.tempDir("graft_r19_smj_")
     val prevAqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
     val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     val savedCeil = ops.TextOps.LabelDeltaMaxBytes
@@ -150,7 +150,7 @@ class Round19Spec extends AnyFunSuite {
 
   test("an over-ceiling batch folds into the base in the same publish call, whatever the run count") {
     val base = s"graft_r19_fold_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r19_fold_")
+    val dir = TestSpark.tempDir("graft_r19_fold_")
     val savedCeil = ops.TextOps.LabelDeltaMaxBytes
     try {
       assert(ops.TextOps.LabelFoldRuns > 2, "fixture: production cadence")
@@ -187,7 +187,7 @@ class Round19Spec extends AnyFunSuite {
 
   test("ivfCompactCells splits an oversize cell across multiple files and still retires replayed duplicates") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_r19_ivf_").toString
+    val dir = TestSpark.tempDir("graft_r19_ivf_").toString
     val cent = Seq((0L, vec(P1, (T, 0f), 0f)), (1L, vec(P2, (0f, T), 0f)))
       .toDF("cent_id", "cemb")
     val vecs = (0 until 8).map(i =>
@@ -255,7 +255,7 @@ class Round19Spec extends AnyFunSuite {
   // ------------------------------------------------------------------
 
   test("StoreFs: atomic lock create-no-overwrite, quiet recursive delete") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r19_fs_")
+    val dir = TestSpark.tempDir("graft_r19_fs_")
     try {
       val lock = new org.apache.hadoop.fs.Path(dir.toString, "x_swap.lock")
       val fs = ops.StoreFs.fs(spark, lock)

@@ -122,7 +122,7 @@ class Round20Spec extends AnyFunSuite {
 
   test("ivfCompactCells converges: a cell above maxFilesPerCell × targetFileBytes reaches a fixed point") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_r20_ivf_").toString
+    val dir = TestSpark.tempDir("graft_r20_ivf_").toString
     def v(seed: Int): Array[Float] = {
       val a = new Array[Float](8); a(0) = 1f; a(1) = seed * 0.001f; a
     }
@@ -228,7 +228,7 @@ class Round20Spec extends AnyFunSuite {
   // ------------------------------------------------------------------
 
   test("StoreFs.writeAtomic replaces content atomically; readSmall is None on missing") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r20_man_")
+    val dir = TestSpark.tempDir("graft_r20_man_")
     try {
       val p = new org.apache.hadoop.fs.Path(dir.toString, "x.manifest")
       val fs = ops.StoreFs.fs(spark, p)
@@ -245,7 +245,7 @@ class Round20Spec extends AnyFunSuite {
 
   test("every publish commits through the manifest: it names the live generation") {
     val base = s"graft_r20_man_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r20_man_")
+    val dir = TestSpark.tempDir("graft_r20_man_")
     val savedRuns = ops.TextOps.LabelFoldRuns
     try {
       ops.TextOps.LabelFoldRuns = 1 // fold (full rewrite) on every run
@@ -267,14 +267,14 @@ class Round20Spec extends AnyFunSuite {
 
   test("a crash between manifest PUT and SET LOCATION: the read path serves the manifest-committed generation") {
     val base = s"graft_r20_man_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r20_man_")
+    val dir = TestSpark.tempDir("graft_r20_man_")
     val savedRuns = ops.TextOps.LabelFoldRuns
     try {
       ops.TextOps.LabelFoldRuns = 1
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       val oldGen = liveDirName(s"${base}_labels")
       val oldDir = new java.io.File(dir.toFile, oldGen)
-      val copy = java.nio.file.Files.createTempDirectory("graft_r20_gen_")
+      val copy = TestSpark.tempDir("graft_r20_gen_")
       org.apache.commons.io.FileUtils.copyDirectory(oldDir, copy.toFile)
       ops.Dedup.maintainSigClusterStore(spark, base, sigDay1)
       val newGen = liveDirName(s"${base}_labels")
@@ -311,7 +311,7 @@ class Round20Spec extends AnyFunSuite {
 
   test("a day-0 label build is generation-suffixed and manifest-committed at birth") {
     val base = s"graft_r20_man_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r20_man_")
+    val dir = TestSpark.tempDir("graft_r20_man_")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       val live = liveDirName(s"${base}_labels")
@@ -332,7 +332,7 @@ class Round20Spec extends AnyFunSuite {
 
   test("a rebuild retires its predecessor generation") {
     val base = s"graft_r20_man_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r20_man_")
+    val dir = TestSpark.tempDir("graft_r20_man_")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       val gen0 = liveDirName(s"${base}_labels")
@@ -354,7 +354,7 @@ class Round20Spec extends AnyFunSuite {
 
   test("a rebuild-in-place clears the previous store's stale delta files") {
     val base = s"graft_r20_man_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r20_man_")
+    val dir = TestSpark.tempDir("graft_r20_man_")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString, sigDay0, buckets = 8)
       // Accrete a delta the fold cadence (default 8) will NOT clear: docs
@@ -385,7 +385,7 @@ class Round20Spec extends AnyFunSuite {
   test("the embed-tier day-0 shares the suffixed + manifest-committed layout") {
     import spark.implicits._
     val base = s"graft_r20_man_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r20_man_")
+    val dir = TestSpark.tempDir("graft_r20_man_")
     try {
       // The Round14Spec geometry (band hashing needs ≥ 32 sign dims).
       def v(pattern: Int, t: Float): Array[Float] = {

@@ -36,7 +36,7 @@ class Round21Spec extends AnyFunSuite {
 
   test("commitDay0 refuses to run under a held swap lock, and proceeds once it is freed") {
     val base = s"graft_r21_lock_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r21_lock_")
+    val dir = TestSpark.tempDir("graft_r21_lock_")
     try {
       ops.Dedup.buildSigClusterStore(spark, base, dir.toString,
         docsDF(1L -> tA, 2L -> tA), buckets = 4)
@@ -61,7 +61,7 @@ class Round21Spec extends AnyFunSuite {
 
   test("the builder clears stale delta files at the DROP, before the day-0 write") {
     val base = s"graft_r21_delta_${ctr.incrementAndGet()}"
-    val dir = java.nio.file.Files.createTempDirectory("graft_r21_delta_")
+    val dir = TestSpark.tempDir("graft_r21_delta_")
     try {
       val fs = ops.StoreFs.fs(spark, new org.apache.hadoop.fs.Path(dir.toString))
       // The crash-window residue: delta FILES on disk with no registered
@@ -110,7 +110,7 @@ class Round21Spec extends AnyFunSuite {
   }
 
   test("readSmall degrades a transient I/O failure to None (catalog decides)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_r21_iofs_")
+    val dir = TestSpark.tempDir("graft_r21_iofs_")
     try {
       val p = new org.apache.hadoop.fs.Path(dir.toString, "labels.manifest")
       val real = ops.StoreFs.fs(spark, p)

@@ -55,7 +55,7 @@ class Round7Spec extends AnyFunSuite {
       (1L, s"$shared other words entirely from here on"),
       (2L, "totally unique words one two three four five six seven eight"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_dupng_").toString
+    val dir = TestSpark.tempDir("graft_dupng_").toString
     docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = ops.TextOps.dupNgrams(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap

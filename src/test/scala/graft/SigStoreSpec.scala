@@ -35,7 +35,7 @@ class SigStoreSpec extends AnyFunSuite {
   test("batch: store-backed screen matches the recomputing screen, probes shuffle the batch side only, append absorbs novel docs") {
     val Buckets = 4
     val base = "graft_sigstore_t1"
-    val dir = java.nio.file.Files.createTempDirectory("graft_sigstore_")
+    val dir = TestSpark.tempDir("graft_sigstore_")
     try {
       val existing = docsDF(1L -> base0,
         2L -> "solar panels hum beside the canal while engineers tune turbines and measure voltage under grey skies")
@@ -117,7 +117,7 @@ class SigStoreSpec extends AnyFunSuite {
     import spark.implicits._
 
     val base = "graft_sigstore_t2"
-    val dir = java.nio.file.Files.createTempDirectory("graft_sigstream_")
+    val dir = TestSpark.tempDir("graft_sigstream_")
     try {
       ops.Dedup.buildSigStore(spark, base, dir.toString,
         docsDF(1L -> base0), buckets = 4)
@@ -216,7 +216,7 @@ class SigStoreSpec extends AnyFunSuite {
   test("embed band store: screen verdicts, exchange-free store probes, append absorbs novel vectors") {
     import spark.implicits._
     val base = "graft_ebandstore_t1"
-    val dir = java.nio.file.Files.createTempDirectory("graft_ebandstore_")
+    val dir = TestSpark.tempDir("graft_ebandstore_")
     try {
       def v(id: Long, coords: Seq[Float]) = (id, coords.toArray)
       val e1 = v(1L, Seq.fill(32)(1.0f))
@@ -282,7 +282,7 @@ class SigStoreSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val base = "graft_ebandstore_t2"
-    val dir = java.nio.file.Files.createTempDirectory("graft_ebandstream_")
+    val dir = TestSpark.tempDir("graft_ebandstream_")
     try {
       def arr(coords: Seq[Float]) = coords.toArray
       val e1 = arr(Seq.fill(32)(1.0f))
@@ -345,7 +345,7 @@ class SigStoreSpec extends AnyFunSuite {
     def vec(id: Long, axis: Int, wobble: Float) = StreamVec(id,
       Array.tabulate(8)(i => if (i == axis) 1.0f else if (i == (axis + 1) % 8) wobble else 0.0f))
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_stream_").toString + "/store"
+    val dir = TestSpark.tempDir("graft_ivf_stream_").toString + "/store"
     // Day-0 staging: two vectors.
     ops.Similarity.ivfAssign(
       Seq(vec(1, 0, 0.1f), vec(2, 1, 0.1f)).toDF("vec_id", "embedding"), cent)

@@ -19,7 +19,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("parquet sink/source round-trip preserves schema and rows") {
-    val dir = Files.createTempDirectory("graft_parquet").toString
+    val dir = TestSpark.tempDir("graft_parquet").toString
     sample.write.mode("overwrite").parquet(dir)
     val back = spark.read.parquet(dir).orderBy("id")
     // parquet reads back as nullable — compare names and types.
@@ -29,7 +29,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("csv sink/source round-trip with header and inferred schema") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = TestSpark.tempDir("graft_csv").toString
     sample.write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read
       .option("header", "true").option("inferSchema", "true")
@@ -40,7 +40,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("json-lines sink/source round-trip") {
-    val dir = Files.createTempDirectory("graft_json").toString
+    val dir = TestSpark.tempDir("graft_json").toString
     sample.write.mode("overwrite").json(dir)
     val back = spark.read.json(dir).orderBy("id")
     assert(back.count() == 3)
@@ -48,7 +48,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("orc sink/source round-trip") {
-    val dir = Files.createTempDirectory("graft_orc").toString
+    val dir = TestSpark.tempDir("graft_orc").toString
     sample.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir).orderBy("id")
     assert(back.count() == 3)
@@ -58,7 +58,7 @@ class SinkSpec extends AnyFunSuite {
 
   test("text sink/source round-trip (one line per row)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft_text").toString
+    val dir = TestSpark.tempDir("graft_text").toString
     Seq("the quick fox", "jumps over", "the lazy dog").toDF("value")
       .write.mode("overwrite").text(dir)
     val back = spark.read.text(dir)
@@ -68,7 +68,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("binaryFile source: the media-ingestion path reads whole files as binary rows") {
-    val dir = Files.createTempDirectory("graft_bin")
+    val dir = TestSpark.tempDir("graft_bin")
     val payloads = Map("a.bin" -> Array[Byte](1, 2, 3), "b.bin" -> Array[Byte](9, 8, 7, 6))
     payloads.foreach { case (name, bytes) =>
       Files.write(dir.resolve(name), bytes)
@@ -85,7 +85,7 @@ class SinkSpec extends AnyFunSuite {
   }
 
   test("partitioned parquet write prunes partitions on read") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = TestSpark.tempDir("graft_part").toString
     sample.withColumn("part", col("id") % 2)
       .write.mode("overwrite").partitionBy("part").parquet(dir)
     val pruned = spark.read.parquet(dir).filter(col("part") === 1)

@@ -39,7 +39,7 @@ class StreamRecoverySpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
 
-    val ckpt = Files.createTempDirectory("graft_ckpt_agg").toString
+    val ckpt = TestSpark.tempDir("graft_ckpt_agg").toString
     val stream = MemoryStream[(Long, String)]
     val counts = stream.toDF().toDF("id", "event_type")
       .groupBy("event_type").agg(count(lit(1)).as("cnt"))
@@ -78,7 +78,7 @@ class StreamRecoverySpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
 
-    val ckpt = Files.createTempDirectory("graft_ckpt_sess").toString
+    val ckpt = TestSpark.tempDir("graft_ckpt_sess").toString
     val stream = MemoryStream[Ev]
     val sessions = Streams.sessionize(spark, stream.toDF(), gapMs = 30 * 60 * 1000L)
 

@@ -32,7 +32,7 @@ class StreamingStoreSpec extends AnyFunSuite {
 
     val Buckets = 4
     val tbl = "graft_stream_store"
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream_store_")
+    val dir = TestSpark.tempDir("graft_stream_store_")
     spark.sql(s"DROP TABLE IF EXISTS $tbl")
     // Day-0 store from the BATCH tier: docs d0/d1 are already canonical.
     Seq("day0 doc zero", "day0 doc one").toDF("text")

@@ -74,7 +74,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("a table rewritten at the same path is read with its new schema") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_tables_")
+    val dir = TestSpark.tempDir("graft_tables_")
     try {
       val path = s"$dir/t.parquet"
       spark.range(3).select(col("id").cast("int").as("a"))

@@ -71,7 +71,7 @@ class Tpch21Spec extends AnyFunSuite {
 
   test("min/max per-order test equals the countDistinct/collect_set form on edge cases") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_tpch21_")
+    val dir = TestSpark.tempDir("graft_tpch21_")
     try {
       orderRows.map { case (k, st) => (k, st, ts(0)) }
         .toDF("o_orderkey", "o_orderstatus", "o_orderdate")
