@@ -131,6 +131,27 @@ class CompactStoreSpec extends AnyFunSuite {
     }
   }
 
+  test("a table sorted by other than its bucket columns is refused before anything moves") {
+    val tbl = s"graft_compact_sort_${ctr.incrementAndGet()}"
+    val dir = TestSpark.tempDir("graft_compact_sort_")
+    try {
+      for (ids <- Seq((0L, 100L), (100L, 200L)))
+        spark.range(ids._1, ids._2).select(md5(col("id").cast("string")).as("fp"), col("id"))
+          .repartition(Buckets, col("fp"))
+          .write.bucketBy(Buckets, "fp").sortBy("id")
+          .option("path", s"$dir/t").mode("append").saveAsTable(tbl)
+      val loc = new java.io.File(s"$dir/t")
+      val before = layout(loc)
+      assert(before.values.exists(_.size > 1), "fixture: some bucket holds two files")
+      val e = intercept[IllegalArgumentException](ops.TextOps.compactStore(spark, tbl))
+      assert(e.getMessage.contains(tbl) && e.getMessage.contains("sorts by (id)"), e.getMessage)
+      assert(layout(loc) == before)
+    } finally {
+      spark.sql(s"DROP TABLE IF EXISTS $tbl")
+      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+    }
+  }
+
   test("rows filed under the wrong bucket refuse the compaction and move nothing") {
     withStore(Set(1)) { (tbl, loc) =>
       // Bucket 3's rows under bucket 2's suffix: rewriting bucket 2 would
