@@ -296,7 +296,7 @@ object TextOps {
       s"$tbl is not a bucketed table — store writes need its catalog bucket spec"))
 
   /** The store's one layout rule, and the only place it is spelled out:
-    * `repartition(n, cols)`, then `coalesce(min(n, defaultParallelism))`,
+    * `repartition(n, cols)`, then `coalesce(min(n, slots))`,
     * BEFORE `bucketBy(n, cols).sortBy(cols)`. The shuffle and Spark's
     * bucketed writer share `HashPartitioning.partitionIdExpression`, and
     * AQE never coalesces a repartition with an explicit count, so shuffle
@@ -312,18 +312,20 @@ object TextOps {
     * because a session-level limit would split a bucket into several
     * files and silently lose that sorted scan.
     *
-    * Why the width is `min(n, defaultParallelism)`: a write task costs a
+    * Why the width is `min(n, slots)`: a write task costs a
     * fixed closure deserialization (~24 ms each on a `local[1]` session)
     * whatever it writes, and one task per bucket ran 16 such tasks per
     * embed-store write on one slot. The session's task slots are the
     * parallelism that exists (the morsel-driven engine's rule: threads, not
     * data cuts, set it), so the write launches no more tasks than slots;
     * with `n` or more slots the coalesce is a no-op that Catalyst's
-    * `CollapseRepartition` removes. Callers add the path, mode and table
-    * name. */
+    * `CollapseRepartition` removes. `slots` is
+    * [[graft.plans.CoalesceBucketedScans.taskSlots]], the same width the
+    * store's bucketed reads coalesce to. Callers add the path, mode and
+    * table name. */
   private[graft] def bucketedWriter(df: DataFrame, n: Int, cols: String*) =
     df.repartition(n, cols.map(col): _*)
-      .coalesce(math.min(n, df.sparkSession.sparkContext.defaultParallelism))
+      .coalesce(math.min(n, graft.plans.CoalesceBucketedScans.taskSlots(df.sparkSession)))
       .write.option("maxRecordsPerFile", 0L)
       .bucketBy(n, cols.head, cols.tail: _*).sortBy(cols.head, cols.tail: _*)
 

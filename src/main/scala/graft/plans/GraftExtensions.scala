@@ -22,6 +22,12 @@ object GraftStrategy extends SparkStrategy {
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")` on any
   * session builder (Verify, Bench, tests), so a cluster deploy enables the
   * operator with one conf line and zero code changes.
+  *
+  * It also registers [[CoalesceBucketedScans]] as a query-stage prep rule:
+  * AQE runs those on the whole physical plan after `EnsureRequirements`
+  * has placed the exchanges, the only point where a rewrite of a bucketed
+  * scan's width can be checked against every operator that relies on it.
+  * Non-adaptive plans never reach it, so with AQE off plans are unchanged.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -30,5 +36,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // rule moves below the as-of node is then carried all the way into the
     // parquet scan by the built-in pushdown rules.
     ext.injectOptimizerRule(_ => PushFilterThroughAsOfJoin)
+    ext.injectQueryStagePrepRule(CoalesceBucketedScans)
   }
 }
