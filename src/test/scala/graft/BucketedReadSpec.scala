@@ -7,6 +7,7 @@ import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import TestSpark.{stageTasks, withConf, withTables}
 
 /** Bucketed reads run at most one task per task slot
   * ([[plans.CoalesceBucketedScans]]): on the 4-slot test session a scan of
@@ -16,54 +17,16 @@ import org.scalatest.funsuite.AnyFunSuite
   * left alone. */
 class BucketedReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   private lazy val spark = TestSpark.spark
-  private val ctr = new java.util.concurrent.atomic.AtomicInteger(0)
   private val Slots = 4
 
   private def fps(ids: Range) = spark.range(ids.start, ids.end, 1, 4)
     .select(md5(col("id").cast("string")).as("fp"), col("id"))
-
-  private def withTables[A](n: Int)(f: (Seq[String], java.nio.file.Path) => A): A = {
-    val tbls = (1 to n).map(_ => s"graft_bucketread_${ctr.incrementAndGet()}")
-    val dir = TestSpark.tempDir("graft_bucketread_")
-    try f(tbls, dir)
-    finally {
-      tbls.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    }
-  }
 
   /** Writes rows `ids` to `tbl` as a `buckets`-bucket store table: one
     * file per bucket, sorted by `fp`. */
   private def write(tbl: String, dir: java.nio.file.Path, buckets: Int, ids: Range): Unit =
     ops.TextOps.bucketedWriter(fps(ids), buckets, "fp")
       .option("path", s"$dir/$tbl").mode("overwrite").saveAsTable(tbl)
-
-  private def withConf[A](confs: (String, String)*)(f: => A): A = {
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  /** Task count of every stage `body` runs, by stage id. */
-  private def stageTasks(body: => Unit): Map[Int, Int] = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        seen.put(e.stageInfo.stageId, e.stageInfo.numTasks)
-    }
-    org.apache.spark.ListenerDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.ListenerDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    seen.asScala.toMap
-  }
 
   /** Collects `df`, returning its rows sorted, the task count of every
     * stage it ran, and its executed (final, when adaptive) plan. */
@@ -208,9 +171,9 @@ class BucketedReadSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     }
   }
 
-  test("the steady screen and label read of a folded 16-bucket embed store run no stage wider than the slots") {
+  test("the steady screen and label read of a folded 16-bucket embed store run no Union branch wider than the slots") {
     import spark.implicits._
-    val base = s"graft_bucketread_emb_${ctr.incrementAndGet()}"
+    val base = "graft_bucketread_emb"
     val dir = TestSpark.tempDir("graft_bucketread_emb_")
     // 40 clusters of sign patterns (band hashing needs >= 32 sign dims),
     // members differing by a small per-id tail.

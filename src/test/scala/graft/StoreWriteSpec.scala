@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import TestSpark.{stageTasks, withConf, withTables}
 
 /** The store's one bucketed write ([[ops.TextOps.bucketedWriter]]) runs at
   * most one task per task slot, and still lays every bucket out as one
@@ -10,7 +11,6 @@ import org.scalatest.funsuite.AnyFunSuite
   * under the legacy ordering conf, no Sort. */
 class StoreWriteSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val ctr = new java.util.concurrent.atomic.AtomicInteger(0)
 
   private def fps(ids: Range) = spark.range(ids.start, ids.end, 1, 4)
     .select(md5(col("id").cast("string")).as("fp"), col("id"))
@@ -21,43 +21,6 @@ class StoreWriteSpec extends AnyFunSuite {
   private def layout(dir: java.io.File): Map[Int, Seq[String]] =
     dir.listFiles().toSeq.map(_.getName).filter(_.startsWith("part-"))
       .groupBy { case bucketId(b) => b.toInt }
-
-  private def withTables[A](n: Int)(f: (Seq[String], java.nio.file.Path) => A): A = {
-    val tbls = (1 to n).map(_ => s"graft_storewrite_${ctr.incrementAndGet()}")
-    val dir = TestSpark.tempDir("graft_storewrite_")
-    try f(tbls, dir)
-    finally {
-      tbls.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
-      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
-    }
-  }
-
-  private def withConf[A](confs: (String, String)*)(f: => A): A = {
-    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
-  /** Task count of every stage `body` runs, by stage id. */
-  private def stageTasks(body: => Unit): Map[Int, Int] = {
-    val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        seen.put(e.stageInfo.stageId, e.stageInfo.numTasks)
-    }
-    org.apache.spark.ListenerDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.ListenerDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    seen.asScala.toMap
-  }
 
   test("a 16-bucket write runs one task per slot; each bucket is one file of its hash's rows") {
     val Buckets = 16

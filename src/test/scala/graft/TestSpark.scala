@@ -28,4 +28,47 @@ object TestSpark {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.warehouse.dir", tempDir("graft_warehouse").toString)
     .getOrCreate()
+
+  private val tableCtr = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** Runs `f` on `n` fresh table names and a fresh directory for their
+    * files; drops the tables and the directory after. */
+  def withTables[A](n: Int)(f: (Seq[String], java.nio.file.Path) => A): A = {
+    val tbls = (1 to n).map(_ => s"graft_tbl_${tableCtr.incrementAndGet()}")
+    val dir = tempDir("graft_tbl_")
+    try f(tbls, dir)
+    finally {
+      tbls.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+      org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
+    }
+  }
+
+  /** Runs `f` with the session confs set, restoring (or unsetting) each
+    * one after. */
+  def withConf[A](confs: (String, String)*)(f: => A): A = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Task count of every stage `body` runs, by stage id. */
+  def stageTasks(body: => Unit): Map[Int, Int] = {
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        seen.put(e.stageInfo.stageId, e.stageInfo.numTasks)
+    }
+    org.apache.spark.ListenerDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.ListenerDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toMap
+  }
 }
